@@ -38,75 +38,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # NOTE on ordering: the driver verifies the FIRST 50 entries
-    # (insertion order) of this dict each round.
-    #
-    # r14 rotation (pure registration reorder, key set identical): the
-    # four rows-only kmeans-family keys (emb_knn_ivf_kmeans,
-    # emb_semantic_dedup_kmeans, emb_knn_join, emb_knn_pq — err:
-    # "no_oracle" in CORRECTNESS_r13) moved below the cap so all 50
-    # driver-verified slots carry DuckDB oracles (r13 verdict item 7).
-    # Their slots now verify exactly the files r14 changed:
-    # * emb_knn_join_label — llm/similarity.py mapInArrow ports (the
-    #   exactly-oracled twin of the ported emb_knn_join path; the
-    #   rhlsh/emb_dup/ann keys already in-cap cover the rh_codes and
-    #   verify ports);
-    # * emb_knn_sq8 — llm/pq.py (emb_knn_pq's ADC scan ported to
-    #   mapInArrow in the same file);
-    # * jdbc_roundtrip — plans/connectors.py (drain-volume-derived
-    #   state partitions; also r13's slowest unexamined key);
-    # * docs_minhash_lsh — llm/dedup.py (cold-path plan-compile work).
-    # The kmeans family keeps its rows+schema pinning via the local
-    # mirror (integration/driver_mirror.py) and the numpy mirror tests.
-    #
-    # Round-13 (the first optimization round) cap rationale, kept for
-    # history — it covered, in priority order:
-    # * Position 1: stream_kafka_ts_offsets_roundtrip — the ONLY key
-    #   without a driver row (tail-registered r12, judge-mirrored
-    #   exact); its green row closes the last verification debt. It
-    #   also rides plans/connectors.py (r13-opt checkpoint placement).
-    # * EVERY file the r13 optimization changed maps to in-cap keys —
-    #   the optimization claims hash-exactness, so the driver verifies
-    #   exactly the keys whose internals moved:
-    #   - llm/text.py + llm/pipeline.py + llm/filters.py (NB langid
-    #     production wiring + single-pass token stats): docs_pipeline,
-    #     docs_langid_ngram, docs_langid, docs_quality, docs_tokens,
-    #     docs_fingerprint, docs_split, docs_gopher_rules,
-    #     docs_badwords;
-    #   - llm/similarity.py + operators/graph.py (Arrow verify, JVM
-    #     norms, earlier pointer-doubling, memo-persist): emb_dup_pairs,
-    #     emb_dup_pairs_rhlsh, emb_dup_clusters, stream_emb_dup_pairs,
-    #     rhlsh_bucket_stats, rhlsh_recall_stats, ann_recall_stats,
-    #     docs_dup_clusters, docs_dedup_report, plus the rows-only
-    #     kmeans family (emb_knn_ivf_kmeans, emb_semantic_dedup_kmeans,
-    #     emb_knn_join, emb_knn_pq — r11 item 5b, twice deferred; the
-    #     driver's no_oracle check pins rows+schema);
-    #   - llm/pruning.py + llm/lm.py (collect-free selector, memoized
-    #     LM): emb_outliers, docs_ccnet_buckets, docs_lm_score;
-    #   - llm/sketches.py / llm/collocations.py / llm/dsir.py
-    #     (memo-persisted shared frames): docs_heavy_hitters,
-    #     stream_heavy_hitters, docs_pmi_bigrams, docs_dsir_sample;
-    #   - streaming/pipelines.py + streaming/curation_pipeline.py
-    #     (RAM-backed ephemeral checkpoints, pinned state partitions,
-    #     RAM-staged update batches): stream_curation_to_iceberg and a
-    #     spread across every state shape — stream_agg_basic (windowless
-    #     agg), stream_agg_basic_update (update mode), stream_win_
-    #     tumbling/session/ema (windows), stream_dedup_first
-    #     (dropDuplicates state), stream_dedup_sbf_check,
-    #     stream_interval_join + stream_asof_join (stream-stream join
-    #     state), stream_filter_by_control; the sliding/append twins and
-    #     hll/topk mirrors share those exact code paths and keep their
-    #     green r11/r12 rows.
-    # * Kafka family: r13-build closed the four r12 advisor items on
-    #   sources/factory.py + sources/kafka_datasource.py + config.py —
-    #   every key on the kafka wire path re-verifies.
-    # Rotated OUT (all with green driver rows and zero changed lines in
-    # their files since): the r3 batch block (agg_*/win_*/dedup_*/
-    # pivot/rollup/cube/asof/filter/connected/topk/salted/q22 —
-    # plans/events.py and plans/analytics.py are untouched this round),
-    # q2-q5, hll_users/distinct_users, and the r12 cap's loopback
-    # connector keys (rabbitmq/cassandra/kinesis/efo/es/firehose/hive/
-    # jdbc/iceberg catalogs — files untouched).
+    # Ordering matters: the first 50 entries (insertion order) are the
+    # driver's oracle window.
     return {
         "stream_kafka_ts_offsets_roundtrip": (
             connectors.stream_kafka_ts_offsets_roundtrip
@@ -234,7 +167,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q9_profit": analytics.q9_profit,
         "q21_waiting": analytics.q21_waiting,
         "docs_dedup_exact": llm_dedup.docs_dedup_exact,
-        "jdbc_roundtrip": connectors.jdbc_roundtrip,
         "docs_stratified_sample": sampling.docs_stratified_sample,
         "docs_weighted_sample": sampling.docs_weighted_sample,
         "docs_pack_sequences": sampling.docs_pack_sequences,
@@ -242,7 +174,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "docs_mixture_weights": sampling.docs_mixture_weights,
         "docs_chunk": chunking.docs_chunk,
         "docs_chunk_dedup": chunking.docs_chunk_dedup,
-        "docs_minhash_lsh": llm_dedup.docs_minhash_lsh,
         "emb_knn": similarity.emb_knn,
         "docs_cluster_assign": similarity.docs_cluster_assign,
         "emb_knn_ivf": similarity.emb_knn_ivf,

@@ -14,14 +14,15 @@ tracks actual executed-plan cost round over round). Set
 SPARK_GRAFT_BENCH_PASSES=1 to skip the warm pass.
 
 Honest-measurement rules (r3 verdict #4):
-* ``llm.dedup.release_caches()`` runs between passes, so warm numbers for
-  the memoized dedup family measure executed plans, not cache hits;
-* it also runs before ``docs_pipeline`` within each pass, so the
-  composed pipeline pays its own signature/cluster computation instead
-  of reading the frames its alphabetical predecessors persisted. (The
-  OTHER dedup-family keys intentionally share one persisted signature
-  frame per pass — that single-scan reuse is the documented architecture,
-  and the per-key deltas measure each operator's own marginal plan.)
+* ``memo.release()`` frees every memoized ``llm.*`` frame between
+  passes, so warm numbers measure executed plans, not cache hits;
+* ``memo.release("llm.dedup")`` also runs before ``docs_pipeline``
+  within each pass, so the composed pipeline pays its own
+  signature/cluster computation instead of reading the frames its
+  alphabetical predecessors persisted. (The OTHER dedup-family keys
+  intentionally share one persisted signature frame per pass — that
+  single-scan reuse is the documented architecture, and the per-key
+  deltas measure each operator's own marginal plan.)
 
 The JSON line is also written to BENCH_LOCAL_r{N}.json in-repo (N inferred
 from existing CORRECTNESS_r*.json artifacts, override with
@@ -77,13 +78,7 @@ def main() -> None:
         shutil.rmtree(warm_dir, ignore_errors=True)
 
     queries = entrymod.queries()
-    from flinkrunner_spark.llm import collocations as llm_collocations
-    from flinkrunner_spark.llm import dedup as llm_dedup
-    from flinkrunner_spark.llm import dsir as llm_dsir
-    from flinkrunner_spark.llm import lm as llm_lm
-    from flinkrunner_spark.llm import pruning as llm_pruning
-    from flinkrunner_spark.llm import similarity as llm_similarity
-    from flinkrunner_spark.llm import sketches as llm_sketches
+    from flinkrunner_spark import memo
 
     def run_pass() -> dict[str, float]:
         timings: dict[str, float] = {}
@@ -93,7 +88,7 @@ def main() -> None:
                 # computation, not read its predecessors' persisted frames
                 # (dedup-family only: the similarity caches share nothing
                 # with the pipeline's stages and belong to other keys)
-                llm_dedup.release_caches()
+                memo.release("llm.dedup")
             t0 = time.perf_counter()
             fn(spark, sf_dir).count()
             timings[name] = round(time.perf_counter() - t0, 3)
@@ -215,13 +210,7 @@ def main() -> None:
         "host_after_cold": host_after_cold,
     }
     if os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2") != "1":
-        llm_dedup.release_caches()  # warm must re-execute, not cache-hit
-        llm_similarity.release_caches()
-        llm_pruning.release_caches()
-        llm_lm.release_caches()
-        llm_sketches.release_caches()
-        llm_collocations.release_caches()
-        llm_dsir.release_caches()
+        memo.release()  # warm must re-execute, not cache-hit
         warm = run_pass()
         out["queries_warm"] = warm
         out["value_warm"] = round(sum(warm.values()), 3)

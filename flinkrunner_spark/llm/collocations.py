@@ -28,40 +28,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import tokens_col
 
 PMI_TOP_K = 50
 PMI_MIN_COUNT = 5
 
-# memoized per-(applicationId, sf_dir) persisted (w1, w2, c12) frame
-# (r13 change 11, the llm/lm.py discipline): the lazy localCheckpoint
-# this replaces paid full physical planning inside the CONSTRUCTOR
-# (~0.5-1.5s driver latency per call). The frame is independent of the
-# k/min_count knobs, so every parameterization shares it. bench.py
-# releases between passes so warm numbers measure executed plans.
-_C12_CACHE: dict[tuple, DataFrame] = {}
-
 
 def release_caches(sf_dir: str | None = None) -> None:
-    """Unpersist + forget memoized pair-count frames (``sf_dir=None`` =
-    all)."""
-    for key in [k for k in _C12_CACHE if sf_dir is None or k[1] == sf_dir]:
-        df = _C12_CACHE.pop(key)
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # context already stopped — nothing to free
+    memo.release("llm.collocations", sf_dir)
 
 
 def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distinct (w1, w2, c12) pair-count frame, persisted once per
-    (applicationId, sf_dir) — text-free and O(distinct bigrams), the
-    same spill-clean persist trade docs_lm_score documents."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _C12_CACHE if k[0] != key[0]]:
-        del _C12_CACHE[stale]
-    if key in _C12_CACHE:
-        return _C12_CACHE[key]
+    corpus per session (``flinkrunner_spark.memo``) — text-free and
+    O(distinct bigrams), the same spill-clean persist trade
+    docs_lm_score documents. The frame is independent of the
+    k/min_count knobs, so every parameterization shares it."""
+    return memo.memo(
+        spark, "llm.collocations.pair_counts", sf_dir,
+        lambda: _build_pair_counts(spark, sf_dir),
+    )
+
+
+def _build_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base = (
         docs.select(tokens_col().alias("t"))
@@ -76,13 +66,11 @@ def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     pos = base.select(F.explode(pair).alias("p")).select("p.w1", "p.w2")
-    c12 = (
+    return (
         pos.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
         .persist()
     )
-    _C12_CACHE[key] = c12
-    return c12
 
 
 def docs_pmi_bigrams(

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import tokens_col
 
 MINHASH_K = 8  # minhash permutations
@@ -84,44 +85,8 @@ def band_hashes(k: int = MINHASH_K, bands: int = LSH_BANDS) -> Column:
     )
 
 
-# (applicationId, sf_dir) -> persisted signature+shingle frame. Memoized
-# here (rather than leaning on Spark's plan-keyed cache manager) so the
-# lifecycle is explicit: release_caches() unpersists, and entries from
-# stopped applications are evicted on the next access. A long-lived
-# service sweeping many sf_dirs should call release_caches(sf_dir=...)
-# after each corpus, or release_caches() between jobs.
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _evict_stale(spark: SparkSession) -> None:
-    """Drop cache entries whose owning application is no longer current.
-
-    Entries keyed by another applicationId belong to a stopped session in
-    this process (their RDDs died with the context); holding the frames
-    would leak driver memory across session restarts in tests/services."""
-    app = spark.sparkContext.applicationId
-    for cache in (_SIG_CACHE, _CLUSTER_CACHE):
-        for key in [k for k in cache if k[0] != app]:
-            del cache[key]
-
-
 def release_caches(sf_dir: str | None = None) -> None:
-    """Unpersist signature frames and evict memoized cluster frames.
-
-    ``sf_dir=None`` releases everything; otherwise only that corpus.
-    Cluster frames are localCheckpoint-backed — their blocks are freed
-    eagerly rather than waiting on the JVM ContextCleaner."""
-    from flinkrunner_spark.operators.graph import _free_checkpoint
-
-    for key in [k for k in _SIG_CACHE if sf_dir is None or k[1] == sf_dir]:
-        try:
-            _SIG_CACHE[key].unpersist()
-        except Exception:
-            pass  # context already stopped — nothing to free
-        del _SIG_CACHE[key]
-    for key in [k for k in _CLUSTER_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _free_checkpoint(_CLUSTER_CACHE[key])
-        del _CLUSTER_CACHE[key]
+    memo.release("llm.dedup", sf_dir)
 
 
 def _sig_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,15 +104,17 @@ def _sig_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     The frame is persisted (deserialized, spill-to-disk): it is corpus-
     sized but text-free, so docs_minhash_lsh / docs_ngram_jaccard /
     docs_dup_clusters / docs_pipeline in one session all share a single
-    materialization per sf_dir (memoized in ``_SIG_CACHE``; call
-    ``release_caches`` to unpersist when done with an sf_dir). At 100 TB
-    the same persist call spills cleanly; recompute-instead-of-cache only
-    pays if the cluster is disk-starved."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_stale(spark)
-    cached = _SIG_CACHE.get(key)
-    if cached is not None:
-        return cached
+    materialization per sf_dir (memoized in ``flinkrunner_spark.memo``;
+    call ``release_caches`` to unpersist when done with an sf_dir). At
+    100 TB the same persist call spills cleanly; recompute-instead-of-
+    cache only pays if the cluster is disk-starved."""
+    return memo.memo(
+        spark, "llm.dedup.signatures", sf_dir,
+        lambda: _build_sig_shingles(spark, sf_dir),
+    )
+
+
+def _build_sig_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode_outer, not explode: plain explode adds an implicit
     # `size(sh)>0` filter that Catalyst pushes below the exchange with the
     # whole interpreted shingle expression inlined — evaluated twice extra
@@ -168,9 +135,7 @@ def _sig_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.min(f"h{j}").alias(f"mh{j}") for j in range(MINHASH_K)],
         F.collect_set("s").alias("shd"),
     )
-    out = sig.persist()
-    _SIG_CACHE[key] = out
-    return out
+    return sig.persist()
 
 
 def _candidate_pairs(
@@ -289,15 +254,6 @@ def docs_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> materialized cluster frame. Connected
-# components is iterative (localCheckpoint per round breaks plan
-# identity), so Spark's plan-keyed cache manager can never share it
-# between queries — memoize the small (doc_id, cluster_id) result at the
-# session level instead. docs_dup_clusters and docs_pipeline both consume
-# it; one CC run per session per sf_dir.
-_CLUSTER_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def docs_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS from the jaccard-verified near-dup pairs:
     connected components with the smallest doc_id as the cluster id, so
@@ -305,22 +261,32 @@ def docs_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete — transitively linked copies (A~B, B~C, A!~C by threshold)
     must land in one cluster. Runs the distributed min-label propagation
     from operators/graph.py; every doc appears (singletons cluster to
-    themselves)."""
-    from flinkrunner_spark.operators.graph import connected_components
+    themselves).
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_stale(spark)
-    cached = _CLUSTER_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    pairs = docs_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    result = connected_components(
-        pairs, docs, src="doc_a", dst="doc_b",
-        id_col="doc_id", label_col="cluster_id",
-    )  # already eagerly checkpointed; intermediates freed inside
-    _CLUSTER_CACHE[key] = result
-    return result
+    Connected components is iterative (localCheckpoint per round breaks
+    plan identity), so Spark's plan-keyed cache manager can never share
+    the result between queries: the small (doc_id, cluster_id) frame is
+    memoized per session instead, and docs_dedup_report and
+    docs_pipeline read the same CC run. Its blocks are freed eagerly on
+    release (``_free_checkpoint``), not left to the JVM ContextCleaner."""
+    from flinkrunner_spark.operators.graph import (
+        _free_checkpoint,
+        connected_components,
+    )
+
+    def build() -> DataFrame:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+            "doc_id"
+        )
+        pairs = docs_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+        return connected_components(
+            pairs, docs, src="doc_a", dst="doc_b",
+            id_col="doc_id", label_col="cluster_id",
+        )  # already eagerly checkpointed; intermediates freed inside
+
+    return memo.memo(
+        spark, "llm.dedup.clusters", sf_dir, build, free=_free_checkpoint
+    )
 
 
 def docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import tokens_col
 
 DSIR_BUCKETS = 1024
@@ -53,25 +54,9 @@ DSIR_GUMBEL_SALT = ":dsir:g1"
 DSIR_K = 64
 DSIR_TARGET_LANG = "en"
 
-# memoized per-(applicationId, sf_dir) persisted hashed-feature frame
-# (r13 change 11, the llm/lm.py discipline): the lazy localCheckpoint
-# this replaces paid full physical planning inside the CONSTRUCTOR
-# (~0.5-1.5s driver latency per call). bench.py releases between
-# passes so warm numbers measure executed plans, not cache hits.
-_BUCKETED_CACHE: dict[tuple, DataFrame] = {}
-
 
 def release_caches(sf_dir: str | None = None) -> None:
-    """Unpersist + forget memoized feature frames (``sf_dir=None`` =
-    all)."""
-    for key in [
-        k for k in _BUCKETED_CACHE if sf_dir is None or k[1] == sf_dir
-    ]:
-        df = _BUCKETED_CACHE.pop(key)
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # context already stopped — nothing to free
+    memo.release("llm.dsir", sf_dir)
 
 
 def _hex8_long(col):
@@ -90,13 +75,16 @@ def _micro6(col):
 
 def _bucketed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hashed (doc_id, lang, bucket) feature-instance frame,
-    persisted once per (applicationId, sf_dir) — text-free, same
-    spill-clean trade as ``_sig_shingles`` at scale."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _BUCKETED_CACHE if k[0] != key[0]]:
-        del _BUCKETED_CACHE[stale]
-    if key in _BUCKETED_CACHE:
-        return _BUCKETED_CACHE[key]
+    persisted once per corpus per session (``flinkrunner_spark.memo``)
+    — text-free, same spill-clean trade as ``_sig_shingles`` at
+    scale."""
+    return memo.memo(
+        spark, "llm.dsir.bucketed", sf_dir,
+        lambda: _build_bucketed_features(spark, sf_dir),
+    )
+
+
+def _build_bucketed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base = (
         docs.select("doc_id", "lang", tokens_col().alias("t"))
@@ -130,9 +118,7 @@ def _bucketed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scoring branch joins broadcast llr before any exchange).
     # memo-persist rather than per-call localCheckpoint (r13 change 11):
     # the lazy checkpoint paid full physical planning at construction.
-    bucketed = bucketed.persist()
-    _BUCKETED_CACHE[key] = bucketed
-    return bucketed
+    return bucketed.persist()
 
 
 def docs_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

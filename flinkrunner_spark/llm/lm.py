@@ -28,27 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import tokens_col
-
-# memoized per-(applicationId, sf_dir) result frame + its persisted
-# bigram base: constructing this plan is expensive DRIVER work (the
-# tokenize expression tree + the checkpoint/persist call pays full
-# analysis; measured 3.2s steady / 12.4s cold per construction at
-# sf0.1), and three operators (the bench key, the ccnet frame, dsir's
-# scoring twin) each re-built it per call. Same memo/evict/release
-# discipline as llm/pruning._BASE_CACHE; bench.py releases between
-# passes so warm numbers measure executed plans, not cache hits.
-_LM_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 
 def release_caches(sf_dir: str | None = None) -> None:
-    """Unpersist + forget memoized LM frames (``sf_dir=None`` = all)."""
-    for key in [k for k in _LM_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _out, dpairs = _LM_CACHE.pop(key)
-        try:
-            dpairs.unpersist()
-        except Exception:
-            pass  # context already stopped — nothing to free
+    memo.release("llm.lm", sf_dir)
 
 
 def docs_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,12 +42,23 @@ def docs_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     MLE conditionals from the corpus' own counts; documents with fewer
     than 2 tokens have no bigram positions and drop out (both engines).
+
+    Memoized per corpus with its persisted bigram base: constructing
+    this plan is expensive DRIVER work (the tokenize expression tree +
+    the persist call pays full analysis; measured 3.2s steady / 12.4s
+    cold per construction at sf0.1), and three operators (the bench
+    key, the ccnet frame, dsir's scoring twin) each re-built it per
+    call.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _LM_CACHE if k[0] != key[0]]:
-        del _LM_CACHE[stale]
-    if key in _LM_CACHE:
-        return _LM_CACHE[key][0]
+    out, _dpairs = memo.memo(
+        spark, "llm.lm.scores", sf_dir, lambda: _build_lm(spark, sf_dir)
+    )
+    return out
+
+
+def _build_lm(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base = (
         docs.select("doc_id", tokens_col().alias("t"))
@@ -118,5 +114,4 @@ def docs_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    _LM_CACHE[key] = (out, dpairs)
-    return out
+    return out, dpairs

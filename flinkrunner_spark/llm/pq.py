@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from flinkrunner_spark.llm.similarity import (
     KNN_K,
     _emb,
+    arrow_matrix,
     as_double,
     dot,
 )
@@ -220,9 +221,7 @@ def emb_knn_pq(
                 name: batch.column(i)
                 for i, name in enumerate(batch.schema.names)
             }
-            E = np.asarray(
-                cols["embedding"].flatten(), dtype=np.float64
-            ).reshape(n, -1)
+            E = arrow_matrix(cols["embedding"], "embedding")
             E = E / np.linalg.norm(E, axis=1, keepdims=True)
             score = np.zeros(n)
             for j in range(m):

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from flinkrunner_spark import memo
+
 OUTLIER_PRUNE_FRAC = 0.2  # farthest-from-prototype fraction flagged
 
 # histogram resolution of the boundary search: each refinement
@@ -41,41 +43,9 @@ OUTLIER_PRUNE_FRAC = 0.2  # farthest-from-prototype fraction flagged
 # 4096 puts a 1e11-row language at ~2.4e7 rows per boundary partition)
 RANK_BINS = 4096
 
-# memoized persisted base frames: the selector makes three bounded
-# passes plus the final assignment over the SAME frame — without a
-# persist each pass re-executes the expensive upstream (the bigram LM
-# for ccnet, the centroid assignment for outliers). Same memo/evict
-# discipline as llm/similarity's frame caches.
-_BASE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _evict_stale(spark: SparkSession) -> None:
-    app = spark.sparkContext.applicationId
-    for key in [k for k in _BASE_CACHE if k[0] != app]:
-        del _BASE_CACHE[key]
-
 
 def release_caches(sf_dir: str | None = None) -> None:
-    """Unpersist memoized pruning base frames (``sf_dir=None`` = all)."""
-    for key in [k for k in _BASE_CACHE if sf_dir is None or k[1] == sf_dir]:
-        df = _BASE_CACHE.pop(key)
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # context already stopped — nothing to free
-
-
-def _memo_persist(
-    spark: SparkSession, sf_dir: str, tag: str, build
-) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    _evict_stale(spark)
-    cached = _BASE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = build().persist()
-    _BASE_CACHE[key] = out
-    return out
+    memo.release("llm.pruning", sf_dir)
 
 
 def _group_stats(df: DataFrame, key: str, val: str) -> DataFrame:
@@ -301,11 +271,14 @@ def emb_outliers(
     `emb_outliers_window` anchor replays it in Spark."""
     from flinkrunner_spark.llm.similarity import docs_cluster_assign
 
-    asg = _memo_persist(
-        spark, sf_dir, "outlier_asg",
-        lambda: docs_cluster_assign(spark, sf_dir).select(
-            "vec_id", "assigned_label", "cosine"
-        ),
+    # memo-persisted: the selector makes three bounded passes plus the
+    # final assignment over the SAME frame — without a persist each pass
+    # re-executes the centroid assignment
+    asg = memo.memo(
+        spark, "llm.pruning.outlier_asg", sf_dir,
+        lambda: docs_cluster_assign(spark, sf_dir)
+        .select("vec_id", "assigned_label", "cosine")
+        .persist(),
     )
 
     # rank floor(n * frac) per cluster, skipped when < 1 — the same
@@ -391,7 +364,9 @@ def _ccnet_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # persisted: the bigram LM (two count shuffles over every bigram)
     # would otherwise re-execute for each selector pass + the output
-    return _memo_persist(spark, sf_dir, "ccnet_lm", build)
+    return memo.memo(
+        spark, "llm.pruning.ccnet_lm", sf_dir, lambda: build().persist()
+    )
 
 
 def docs_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrunner_spark import memo
+
 COSINE_DUP_THRESHOLD = 0.35  # synthetic embeddings are near-orthogonal; max in-label cosine ~0.51
 KNN_K = 10
 
@@ -45,6 +47,29 @@ def dot(a: Column, b: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / F.sqrt(dot(a, a) * dot(b, b))
+
+
+def arrow_matrix(col, name: str):
+    """The ``(rows, dim)`` float64 matrix of an Arrow list column,
+    reshaped out of its flat values buffer with zero per-row Python —
+    the conversion every mapInArrow stage here starts from.
+
+    Raises ``ValueError`` naming the column on a null row or on rows of
+    unequal length: ``flatten()`` drops null slots and ignores row
+    boundaries, so one bad embedding would otherwise shift the vector
+    of every later row in the batch."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if col.null_count:
+        raise ValueError(f"column {name!r}: {col.null_count} null row(s)")
+    lengths = np.asarray(pc.list_value_length(col))
+    if len(lengths) and lengths.min() != lengths.max():
+        raise ValueError(
+            f"column {name!r}: ragged rows, lengths "
+            f"{lengths.min()}..{lengths.max()}"
+        )
+    return np.asarray(col.flatten(), dtype=np.float64).reshape(len(col), -1)
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -305,49 +330,8 @@ def rh_planes(
     return out
 
 
-# (applicationId, sf_dir, bands, bits) -> persisted (vec_id, band, code)
-# frame. Memoized (same lifecycle discipline as llm.dedup._SIG_CACHE) so
-# the Arrow-batched code generation — the Python-side cost of the family —
-# runs once per corpus per session: the count-first super-bucket guard,
-# the pair expansion and rhlsh_bucket_stats all read it.
-# llm.dedup.release_caches() drains this cache too, so bench warm passes
-# measure executed plans, not cache hits.
-_RH_CODES_CACHE: dict[tuple[str, str, int, int], DataFrame] = {}
-
-# (applicationId, sf_dir) -> persisted per-label centroid frame
-# (n_labels rows — tiny). docs_cluster_assign and emb_knn_join both
-# consume it; memoizing removes the repeated explode+two-level-fold
-# subtree from every plan that broadcasts the centroids.
-_CENTROID_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _caches() -> tuple[dict, ...]:
-    return (_RH_CODES_CACHE, _CENTROID_CACHE, _KMEANS_CACHE, _IVF_CACHE)
-
-
 def release_caches(sf_dir: str | None = None) -> None:
-    """Unpersist memoized similarity frames (``sf_dir=None`` = all)."""
-    for cache in _caches():
-        for key in [k for k in cache if sf_dir is None or k[1] == sf_dir]:
-            entry = cache.pop(key)
-            frames = entry if isinstance(entry, tuple) else (entry,)
-            for df in frames:
-                if not isinstance(df, DataFrame):
-                    continue  # e.g. the cached n_cells int
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # context already stopped — nothing to free
-
-
-def _evict_stale(spark: SparkSession) -> None:
-    """Drop cache entries owned by a stopped SparkSession (their RDD
-    blocks died with the context; keeping the frames leaks driver memory
-    across session restarts in tests/services)."""
-    app = spark.sparkContext.applicationId
-    for cache in _caches():
-        for key in [k for k in cache if k[0] != app]:
-            del cache[key]
+    memo.release("llm.similarity", sf_dir)
 
 
 def rh_codes_mapper(bands: int, bits: int):
@@ -386,9 +370,7 @@ def rh_codes_mapper(bands: int, bits: int):
                 name: batch.column(i)
                 for i, name in enumerate(batch.schema.names)
             }
-            E = np.asarray(
-                cols["embedding"].flatten(), dtype=np.float64
-            ).reshape(n, -1)
+            E = arrow_matrix(cols["embedding"], "embedding")
             D = np.zeros((n, W.shape[0]))
             for i in range(W.shape[1]):  # exact left fold over dims
                 D = D + E[:, i, None] * W[None, :, i]
@@ -422,32 +404,30 @@ def _rh_codes(
     The frame is (n × bands) rows of three fixed-width ints (text- and
     embedding-free), so persisting it is cheap at any scale; the guard
     pass (bucket sizes) and the pair expansion both read it, paying the
-    numpy projection once."""
-    key = (spark.sparkContext.applicationId, sf_dir, bands, bits)
-    _evict_stale(spark)
-    cached = _RH_CODES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    emb = _emb(spark, sf_dir)
-    out = (
-        emb.select("vec_id", "embedding")
+    numpy projection once.
+
+    Memoized per (sf_dir, bands, bits): the Arrow-batched code
+    generation — the Python-side cost of the family — runs once per
+    corpus per session; the count-first super-bucket guard, the pair
+    expansion and rhlsh_bucket_stats all read it."""
+    return memo.memo(
+        spark, "llm.similarity.rh_codes", sf_dir,
+        lambda: _emb(spark, sf_dir)
+        .select("vec_id", "embedding")
         .mapInArrow(rh_codes_mapper(bands, bits), schema=RH_CODES_SCHEMA)
-        .persist()
+        .persist(),
+        key=(bands, bits),
     )
-    _RH_CODES_CACHE[key] = out
-    return out
-
-
-_EMB_COUNT_CACHE: dict[str, int] = {}
 
 
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
     """Corpus row count — one metadata-only parquet count, memoized per
-    corpus so repeated calls (bits resolution, recall sampling, warm
-    bench passes) do not re-pay the count job."""
-    if sf_dir not in _EMB_COUNT_CACHE:
-        _EMB_COUNT_CACHE[sf_dir] = _emb(spark, sf_dir).count()
-    return _EMB_COUNT_CACHE[sf_dir]
+    corpus so repeated calls (bits resolution, recall sampling) do not
+    re-pay the count job."""
+    return memo.memo(
+        spark, "llm.similarity.emb_count", sf_dir,
+        lambda: _emb(spark, sf_dir).count(),
+    )
 
 
 def emb_dup_pairs_rhlsh(
@@ -612,8 +592,8 @@ def rh_pairs_from_codes(
             if not n:
                 continue
             cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-            A = np.asarray(cols["ea"].flatten(), dtype=np.float64).reshape(n, -1)
-            B = np.asarray(cols["eb"].flatten(), dtype=np.float64).reshape(n, -1)
+            A = arrow_matrix(cols["ea"], "ea")
+            B = arrow_matrix(cols["eb"], "eb")
             d = np.zeros(n)
             for i in range(A.shape[1]):  # exact left fold, as above
                 d = d + A[:, i] * B[:, i]
@@ -874,12 +854,8 @@ def rhlsh_recall_stats(
                 name: batch.column(i)
                 for i, name in enumerate(batch.schema.names)
             }
-            A = np.asarray(cols["ea"].flatten(), dtype=np.float64).reshape(
-                n, -1
-            )
-            B = np.asarray(cols["eb"].flatten(), dtype=np.float64).reshape(
-                n, -1
-            )
+            A = arrow_matrix(cols["ea"], "ea")
+            B = arrow_matrix(cols["eb"], "eb")
             d = np.zeros(n)
             for i in range(A.shape[1]):  # exact left fold (see _rh_codes)
                 d = d + A[:, i] * B[:, i]
@@ -1053,11 +1029,6 @@ def dup_pairs_blas(
     )
 
 
-# (applicationId, sf_dir, n_cells) -> (assigned frame, centroid frame).
-# Memoized so training + the assignment scan run once per corpus per
-# session; released with the other similarity caches.
-_KMEANS_CACHE: dict[tuple[str, str, int], tuple[DataFrame, DataFrame]] = {}
-
 KMEANS_SAMPLE_CAP = 65536  # training-sample bound — fixed wrt corpus size
 KMEANS_ITERS = 20
 
@@ -1075,14 +1046,22 @@ def _kmeans_assigned(
     numpy argmin against the closure-broadcast centroid matrix —
     embarrassingly parallel at any scale, vectorized across rows and
     cells. The n_cells × dim centroid table re-exposes as a
-    broadcastable frame so probe selection stays JVM-side."""
+    broadcastable frame so probe selection stays JVM-side.
+
+    Memoized per (sf_dir, n_cells), so training + the assignment scan
+    run once per corpus per session."""
+    return memo.memo(
+        spark, "llm.similarity.kmeans", sf_dir,
+        lambda: _build_kmeans_assigned(spark, sf_dir, n_cells),
+        key=(n_cells,),
+    )
+
+
+def _build_kmeans_assigned(
+    spark: SparkSession, sf_dir: str, n_cells: int
+) -> tuple[DataFrame, DataFrame]:
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells)
-    _evict_stale(spark)
-    cached = _KMEANS_CACHE.get(key)
-    if cached is not None:
-        return cached
     emb = _emb(spark, sf_dir)
     # Arrow transport (toPandas) for the sample — identical doubles,
     # ~10× less driver deserialize time than a py4j row collect at the
@@ -1132,9 +1111,7 @@ def _kmeans_assigned(
             if not n:
                 continue
             i_emb = batch.schema.names.index("embedding")
-            E = np.asarray(
-                batch.column(i_emb).flatten(), dtype=np.float64
-            ).reshape(n, -1)
+            E = arrow_matrix(batch.column(i_emb), "embedding")
             d = (C * C).sum(axis=1)[None, :] - 2.0 * (E @ C.T)
             yield pa.RecordBatch.from_arrays(
                 [*batch.columns, pa.array(d.argmin(axis=1).astype(np.int32))],
@@ -1142,7 +1119,6 @@ def _kmeans_assigned(
             )
 
     assigned = emb.mapInArrow(gen_assign, schema=out_schema).persist()
-    _KMEANS_CACHE[key] = (assigned, cents)
     return assigned, cents
 
 
@@ -1272,14 +1248,10 @@ def _centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     session instead of inside every consumer's plan (the r4 driver bench
     showed emb_knn_join re-paying the centroid subtree on the warm
     pass)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_stale(spark)
-    cached = _CENTROID_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = _label_centroids(_emb(spark, sf_dir)).persist()
-    _CENTROID_CACHE[key] = out
-    return out
+    return memo.memo(
+        spark, "llm.similarity.centroids", sf_dir,
+        lambda: _label_centroids(_emb(spark, sf_dir)).persist(),
+    )
 
 
 def docs_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1488,12 +1460,6 @@ def ivf_cells(
     return max(min_cells, min(max_cells, 1 << math.ceil(math.log2(root))))
 
 
-# (applicationId, sf_dir) -> (assigned frame with a `cell` column,
-# centroid frame, n_cells). The learned coarse quantizer for the k-NN
-# join — trained once per corpus per session on the bounded sample.
-_IVF_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, int]] = {}
-
-
 def _ivf_assigned(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, int, "object"]:
@@ -1508,16 +1474,23 @@ def _ivf_assigned(
     (``llm.pq._lloyds_blas``: argmin ‖x−c‖² = argmin(c·c − 2x·Cᵀ), one
     GEMM per sweep) so a 65536-row sample trains against thousands of
     cells in seconds. First-argmin tie behavior matches the trainer and
-    the numpy mirror in tests bit-for-bit."""
+    the numpy mirror in tests bit-for-bit.
+
+    The learned coarse quantizer is trained once per corpus per session
+    (memoized)."""
+    return memo.memo(
+        spark, "llm.similarity.ivf", sf_dir,
+        lambda: _build_ivf_assigned(spark, sf_dir),
+    )
+
+
+def _build_ivf_assigned(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, int, "object"]:
     import numpy as np
 
     from flinkrunner_spark.llm.pq import _lloyds_blas
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_stale(spark)
-    cached = _IVF_CACHE.get(key)
-    if cached is not None:
-        return cached
     emb = _emb(spark, sf_dir)
     n_cells = ivf_cells(emb.count())
     # Arrow transport for the training sample (toPandas), not the py4j
@@ -1554,9 +1527,7 @@ def _ivf_assigned(
             if not n:
                 continue
             i_emb = batch.schema.names.index("embedding")
-            E = np.asarray(
-                batch.column(i_emb).flatten(), dtype=np.float64
-            ).reshape(n, -1)
+            E = arrow_matrix(batch.column(i_emb), "embedding")
             d = cc - 2.0 * (E @ C.T)  # same BLAS form as the trainer
             yield pa.RecordBatch.from_arrays(
                 [*batch.columns, pa.array(d.argmin(axis=1).astype(np.int32))],
@@ -1564,8 +1535,7 @@ def _ivf_assigned(
             )
 
     assigned = emb.mapInArrow(gen_assign, schema=out_schema).persist()
-    _IVF_CACHE[key] = (assigned, cents, n_cells, cents_np)
-    return _IVF_CACHE[key]
+    return assigned, cents, n_cells, cents_np
 
 
 def emb_knn_join(
@@ -1638,9 +1608,7 @@ def emb_knn_join(
                 name: batch.column(i)
                 for i, name in enumerate(batch.schema.names)
             }
-            Q = np.asarray(cols["qv"].flatten(), dtype=np.float64).reshape(
-                n, -1
-            )
+            Q = arrow_matrix(cols["qv"], "qv")
             qn = np.sqrt((Q * Q).sum(axis=1))
             ccos = np.round((Q @ C.T) / (qn[:, None] * cn[None, :]), 6)
             top = np.argsort(-ccos, axis=1, kind="stable")[:, :nprobe]
@@ -1675,12 +1643,8 @@ def emb_knn_join(
                 name: batch.column(i)
                 for i, name in enumerate(batch.schema.names)
             }
-            A = np.asarray(
-                cols["embedding"].flatten(), dtype=np.float64
-            ).reshape(n, -1)
-            Qm = np.asarray(cols["qv"].flatten(), dtype=np.float64).reshape(
-                n, -1
-            )
+            A = arrow_matrix(cols["embedding"], "embedding")
+            Qm = arrow_matrix(cols["qv"], "qv")
             cos = np.round(
                 (A * Qm).sum(axis=1)
                 / np.sqrt((A * A).sum(axis=1) * (Qm * Qm).sum(axis=1)),
@@ -1786,12 +1750,8 @@ def emb_knn_join_label(
                 name: batch.column(i)
                 for i, name in enumerate(batch.schema.names)
             }
-            A = np.asarray(
-                cols["embedding"].flatten(), dtype=np.float64
-            ).reshape(n, -1)
-            B = np.asarray(cols["qv"].flatten(), dtype=np.float64).reshape(
-                n, -1
-            )
+            A = arrow_matrix(cols["embedding"], "embedding")
+            B = arrow_matrix(cols["qv"], "qv")
             d = np.zeros(n)
             na = np.zeros(n)
             nb = np.zeros(n)

@@ -39,53 +39,30 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import tokens_col
 
 CMS_DEPTH = 4  # hash rows (error probability ~ e^-D)
 CMS_WIDTH = 1024  # buckets per row (overcount ~ N·e/W)
 HH_TOP_K = 50
 
-# memoized per-(applicationId, sf_dir) persisted token stream + the
-# per-call persisted sketch frames (r13 change 11, the llm/lm.py
-# discipline): the lazy localCheckpoint this replaces paid full
-# physical planning inside the CONSTRUCTOR (~0.5-1.5s driver latency
-# per operator call), and the exact-count twin of docs_heavy_hitters
-# and the probe path of stream_heavy_hitters each re-built the same
-# exploded token stream per pass. bench.py releases between passes so
-# warm numbers measure executed plans, not cache hits.
-_TOKS_CACHE: dict[tuple, DataFrame] = {}
-_SKETCH_PINS: list[DataFrame] = []
-
 
 def release_caches(sf_dir: str | None = None) -> None:
-    """Unpersist + forget memoized token streams and the per-call
-    persisted sketch frames (``sf_dir=None`` = all)."""
-    for key in [k for k in _TOKS_CACHE if sf_dir is None or k[1] == sf_dir]:
-        df = _TOKS_CACHE.pop(key)
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # context already stopped — nothing to free
-    while _SKETCH_PINS:
-        df = _SKETCH_PINS.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    memo.release("llm.sketches", sf_dir)
 
 
 def _token_stream_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exploded single-column token stream, persisted once per
-    (applicationId, sf_dir) — text-free and spill-clean, the same
-    persist trade ``_sig_shingles`` documents at 100 TB (recomputing
-    the tokenize+explode pass twice costs more than spilling the
-    token column once)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _TOKS_CACHE if k[0] != key[0]]:
-        del _TOKS_CACHE[stale]
-    if key not in _TOKS_CACHE:
-        _TOKS_CACHE[key] = _token_stream(spark, sf_dir).persist()
-    return _TOKS_CACHE[key]
+    corpus per session (``flinkrunner_spark.memo``) — text-free and
+    spill-clean, the same persist trade ``_sig_shingles`` documents at
+    100 TB (recomputing the tokenize+explode pass twice costs more than
+    spilling the token column once). The exact-count twin of
+    docs_heavy_hitters and the probe path of stream_heavy_hitters read
+    the same frame."""
+    return memo.memo(
+        spark, "llm.sketches.tokens", sf_dir,
+        lambda: _token_stream(spark, sf_dir).persist(),
+    )
 
 
 def cms_bucket(tok: Column, row: int, width: int = CMS_WIDTH) -> Column:
@@ -187,10 +164,10 @@ def rank_heavy_hitters(
     # (it is ≤ depth×width rows by construction, so this is always
     # cheap, for the batch build and the streaming-state build alike).
     # persist over localCheckpoint (r13 change 11): the lazy checkpoint
-    # paid full physical planning at construction; the pin registry
-    # frees the ≤4096-row cache on release_caches.
-    sketch = sketch.persist()
-    _SKETCH_PINS.append(sketch)
+    # paid full physical planning at construction. Pinned, not memoized
+    # (stream_heavy_hitters passes a different sketch for the same
+    # sf_dir); release_caches frees the ≤4096-row cache.
+    sketch = memo.pin(spark, "llm.sketches.sketch", sf_dir, sketch.persist())
     est = None
     probed = exact
     for r in range(depth):

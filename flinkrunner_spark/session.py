@@ -18,7 +18,11 @@ def get_spark(
     cpus: int | str | None = None,
     shuffle_partitions: int | str | None = None,
 ) -> SparkSession:
-    cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or "32")
+    # default: every core of this host, never more (oversubscribing a
+    # small host slows every stage)
+    cpus = str(
+        cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
+    )
     shuffle = str(shuffle_partitions or cpus)
     return (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -49,14 +49,10 @@ def ephemeral_checkpoint(prefix: str = "flinkrunner-ckpt-") -> str:
 
 
 DRAIN_ROWS_PER_PARTITION = 100_000  # target keyed-state rows per store
+DRAIN_PARTITIONS_FLOOR = 4  # the local mirrors' measured optimum
 
 
-def drain_state_partitions(
-    spark: SparkSession,
-    n_rows: int | None = None,
-    floor: int = 4,
-    rows_per_partition: int = DRAIN_ROWS_PER_PARTITION,
-) -> int:
+def drain_state_partitions(spark: SparkSession, n_rows: int | None = None) -> int:
     """State/shuffle partition count for a BOUNDED drive-to-completion
     drain — replaces the literal pins the r13 verdict flagged (guide §2:
     scale-adaptive partitioning, not a constant tuned for one box).
@@ -67,28 +63,24 @@ def drain_state_partitions(
     it again, flat below 4), so a drain wants the FEWEST partitions that
     still hold state comfortably:
 
-    * ``SPARK_GRAFT_DRAIN_STATE_PARTITIONS`` (env) or
-      ``spark.flinkrunner.drainStatePartitions`` (conf) override wins —
-      the production knob;
     * with a known drain volume (``n_rows`` — e.g. the curation catch-up
-      counts its backlog), partitions = ceil(n_rows / rows_per_partition)
-      clamped to [floor, 8 × defaultParallelism]: a 100 TB backlog gets
-      thousands of stores spread over the cluster, a 5k-row local mirror
-      keeps the measured-optimal handful;
-    * otherwise ``floor`` — the local mirrors' measured optimum.
-    """
-    import os
+      counts its backlog), partitions =
+      ceil(n_rows / DRAIN_ROWS_PER_PARTITION) clamped to
+      [DRAIN_PARTITIONS_FLOOR, 8 × defaultParallelism]: a 100 TB backlog
+      gets thousands of stores spread over the cluster, a 5k-row local
+      mirror keeps the measured-optimal handful;
+    * otherwise ``DRAIN_PARTITIONS_FLOOR``.
 
-    env = os.environ.get("SPARK_GRAFT_DRAIN_STATE_PARTITIONS")
-    if env:
-        return int(env)
-    conf = spark.conf.get("spark.flinkrunner.drainStatePartitions", None)
-    if conf:
-        return int(conf)
+    Callers that need a fixed count pass ``state_partitions=`` to the
+    drain builders instead.
+    """
     if n_rows is None:
-        return floor
+        return DRAIN_PARTITIONS_FLOOR
     cap = 8 * spark.sparkContext.defaultParallelism
-    return max(floor, min(cap, -(-int(n_rows) // rows_per_partition)))
+    return max(
+        DRAIN_PARTITIONS_FLOOR,
+        min(cap, -(-int(n_rows) // DRAIN_ROWS_PER_PARTITION)),
+    )
 
 
 def stream_events(
@@ -804,10 +796,10 @@ def run_updates_final(
     ``build`` is a ``Callable[[SparkSession], DataFrame]`` that declares
     the streaming aggregate; it runs on a cloned session
     (``spark.newSession()``) whose ``spark.sql.shuffle.partitions`` is
-    pinned to ``state_partitions`` (default: ``drain_state_partitions``
-    — env/conf-overridable, scale-adaptive; no literal pin) —
-    query-scoped, so concurrent queries on the caller's session never
-    observe a mutated global conf.
+    pinned to ``state_partitions`` — query-scoped, so concurrent queries
+    on the caller's session never observe a mutated global conf. The
+    default is ``drain_state_partitions(spark)``, i.e. 4 partitions; it
+    was 8 before round 14.
 
     The sink is executor-side end to end: each micro-batch's update rows
     are stamped with the batch id and appended to ``path`` as parquet BY
@@ -888,10 +880,9 @@ def run_to_memory(
     empty watermark-flush batch — so local mirrors with small state want
     few partitions (32→8 measured 9.5s→2.1s on the interval join in r1;
     8→4 halved the 4-micro-batch interval join again in r4, flat below
-    4). The default comes from ``drain_state_partitions`` (env/conf
-    override, volume-derived when the caller knows the backlog) instead
-    of a literal; scan parallelism is unaffected either way (file
-    splits, not shuffle partitions, drive the source)."""
+    4). The default comes from ``drain_state_partitions`` instead of a
+    literal; scan parallelism is unaffected either way (file splits, not
+    shuffle partitions, drive the source)."""
     import shutil
 
     if state_partitions is None:

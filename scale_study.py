@@ -31,9 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from flinkrunner_spark import get_spark  # noqa: E402
-from flinkrunner_spark.llm import dedup as llm_dedup  # noqa: E402
-from flinkrunner_spark.llm import similarity as llm_similarity  # noqa: E402
-from flinkrunner_spark.llm import pruning as llm_pruning  # noqa: E402
+from flinkrunner_spark import memo  # noqa: E402
 
 DEFAULT_KEYS = [
     "docs_dedup_exact",
@@ -195,21 +193,15 @@ def main() -> None:
     for key in keys:
         fn = qs[key]
         fn(spark, BASE_SF).count()  # pre-compile / JVM-warm
-        llm_dedup.release_caches()
-        llm_similarity.release_caches()
-        llm_pruning.release_caches()
+        memo.release()
         t0 = time.time()
         rows1 = fn(spark, BASE_SF).count()
         t1 = time.time() - t0
-        llm_dedup.release_caches()
-        llm_similarity.release_caches()
-        llm_pruning.release_caches()
+        memo.release()
         t0 = time.time()
         rows_n = fn(spark, big).count()
         tn = time.time() - t0
-        llm_dedup.release_caches()
-        llm_similarity.release_caches()
-        llm_pruning.release_caches()
+        memo.release()
         ops[key] = {
             "t1": round(t1, 2),
             f"t{factor}": round(tn, 2),

@@ -751,3 +751,44 @@ def test_scratch_dir_resolution_order(spark, monkeypatch):
     spark.conf.set(SCRATCH_CONF_KEY, "hdfs:///scratch/")
     assert scratch_dir(spark, "x/y") == "hdfs:///scratch/x/y"
     spark.conf.unset(SCRATCH_CONF_KEY)
+
+
+def _emb_batch(rows):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(range(len(rows)), pa.int64()),
+            pa.array(rows, pa.list_(pa.float32())),
+        ],
+        ["vec_id", "embedding"],
+    )
+
+
+def test_arrow_matrix_rejects_null_and_ragged_rows():
+    """A null or short embedding raises a ValueError naming the column,
+    in the helper and through the RH-LSH code mapper — flatten() alone
+    would drop the null slot or run rows together, shifting every later
+    row's vector. (The ragged case sums to 3×64 values, so a bare
+    reshape would succeed silently.)"""
+    import pytest
+
+    from flinkrunner_spark.llm.similarity import arrow_matrix, rh_codes_mapper
+
+    good = [[1.0] * 64, [-1.0] * 64, [0.5] * 64]
+    col = _emb_batch(good).column(1)
+    m = arrow_matrix(col, "embedding")
+    assert m.shape == (3, 64) and m.dtype == np.float64
+    assert (m[1] == -1.0).all()
+    assert (arrow_matrix(col.slice(1), "embedding") == m[1:]).all()
+    codes = list(rh_codes_mapper(2, 4)(iter([_emb_batch(good)])))
+    assert sum(b.num_rows for b in codes) == 3 * 2
+    for bad in (
+        [good[0], None, good[2]],
+        [good[0], [1.0] * 63, [1.0] * 65],
+    ):
+        batch = _emb_batch(bad)
+        with pytest.raises(ValueError, match="'embedding'"):
+            arrow_matrix(batch.column(1), "embedding")
+        with pytest.raises(ValueError, match="'embedding'"):
+            list(rh_codes_mapper(2, 4)(iter([batch])))

@@ -128,16 +128,18 @@ def test_dsir_memo_persist_lifecycle(spark):
     """r13 change 11: the hashed feature frame is memo-persisted per
     (applicationId, sf_dir); release_caches() unpersists it, and
     cache-hit and recompute paths yield identical samples."""
+    from flinkrunner_spark import memo
+
     dsir.release_caches()
-    assert dsir._BUCKETED_CACHE == {}
+    assert memo.entries("llm.dsir") == {}
     out1 = dsir.docs_dsir_sample(spark, SF).collect()
-    key = (spark.sparkContext.applicationId, SF)
-    bucketed = dsir._BUCKETED_CACHE[key]
+    key = ("llm.dsir.bucketed", spark.sparkContext.applicationId, SF)
+    bucketed = memo.entries("llm.dsir")[key]
     assert bucketed.storageLevel.useMemory
     assert dsir._bucketed_features(spark, SF) is bucketed  # memo hit
     assert dsir.docs_dsir_sample(spark, SF).collect() == out1
     dsir.release_caches(SF)
-    assert dsir._BUCKETED_CACHE == {}
+    assert memo.entries("llm.dsir") == {}
     assert not bucketed.storageLevel.useMemory
     assert dsir.docs_dsir_sample(spark, SF).collect() == out1
     dsir.release_caches()

@@ -234,20 +234,22 @@ def test_sketches_memo_persist_lifecycle(spark):
     (applicationId, sf_dir) — one frame serves the batch build, the
     exact-count twin and the streaming probe — and release_caches()
     unpersists both the stream and the per-call sketch pins."""
+    from flinkrunner_spark import memo
+
     sketches.release_caches()
-    assert sketches._TOKS_CACHE == {} and sketches._SKETCH_PINS == []
+    assert memo.entries("llm.sketches") == {}
     out1 = sketches.docs_heavy_hitters(spark, SF).collect()
-    key = (spark.sparkContext.applicationId, SF)
-    toks = sketches._TOKS_CACHE[key]
+    key = ("llm.sketches.tokens", spark.sparkContext.applicationId, SF)
+    toks = memo.entries("llm.sketches.tokens")[key]
     assert toks.storageLevel.useMemory  # persisted
-    assert len(sketches._SKETCH_PINS) == 1
+    assert len(memo.entries("llm.sketches.sketch")) == 1
     # a second call reuses the SAME persisted frame (memo hit) and
     # produces identical rows
     assert sketches._token_stream_cached(spark, SF) is toks
     out2 = sketches.docs_heavy_hitters(spark, SF).collect()
     assert out2 == out1
     sketches.release_caches(SF)
-    assert sketches._TOKS_CACHE == {} and sketches._SKETCH_PINS == []
+    assert memo.entries("llm.sketches") == {}
     assert not toks.storageLevel.useMemory  # unpersisted
     # recompute-from-scratch path yields the same rows
     assert sketches.docs_heavy_hitters(spark, SF).collect() == out1
@@ -259,18 +261,21 @@ def test_collocations_memo_persist_lifecycle(spark):
     memo-persisted per (applicationId, sf_dir); every k/min_count
     parameterization shares it, release_caches() unpersists it, and
     cache-hit and recompute paths agree."""
+    from flinkrunner_spark import memo
     from flinkrunner_spark.llm import collocations
 
     collocations.release_caches()
-    assert collocations._C12_CACHE == {}
+    assert memo.entries("llm.collocations") == {}
     out1 = collocations.docs_pmi_bigrams(spark, SF).collect()
-    key = (spark.sparkContext.applicationId, SF)
-    c12 = collocations._C12_CACHE[key]
+    key = (
+        "llm.collocations.pair_counts", spark.sparkContext.applicationId, SF
+    )
+    c12 = memo.entries("llm.collocations")[key]
     assert c12.storageLevel.useMemory
     assert collocations._pair_counts(spark, SF) is c12  # memo hit
     assert collocations.docs_pmi_bigrams(spark, SF).collect() == out1
     collocations.release_caches(SF)
-    assert collocations._C12_CACHE == {}
+    assert memo.entries("llm.collocations") == {}
     assert not c12.storageLevel.useMemory
     assert collocations.docs_pmi_bigrams(spark, SF).collect() == out1
     collocations.release_caches()

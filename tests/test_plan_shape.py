@@ -128,8 +128,9 @@ def test_lsh_jaccard_consumes_shingles_from_cache(spark):
 def test_release_caches_frees_executor_storage(spark):
     """The persist/memoize lifecycle: after release_caches(sf_dir) the
     signature frame's blocks are gone from executor storage and both
-    memo dicts drop their entries — a long-lived service sweeping many
-    corpora must not accumulate pinned frames."""
+    registry entries (signatures, clusters) are dropped — a long-lived
+    service sweeping many corpora must not accumulate pinned frames."""
+    from flinkrunner_spark import memo
     from flinkrunner_spark.llm import dedup as llm_dedup
 
     def storage_ids():
@@ -140,13 +141,12 @@ def test_release_caches_frees_executor_storage(spark):
     baseline = storage_ids()
     llm_dedup.docs_ngram_jaccard(spark, SF).count()
     llm_dedup.docs_dup_clusters(spark, SF).count()
-    assert any(k[1] == SF for k in llm_dedup._SIG_CACHE)
-    assert any(k[1] == SF for k in llm_dedup._CLUSTER_CACHE)
+    assert memo.entries("llm.dedup.signatures", SF)
+    assert memo.entries("llm.dedup.clusters", SF)
     grown = storage_ids() - baseline
     assert grown  # the signature frame materialized into storage
     llm_dedup.release_caches(SF)
-    assert not any(k[1] == SF for k in llm_dedup._SIG_CACHE)
-    assert not any(k[1] == SF for k in llm_dedup._CLUSTER_CACHE)
+    assert not memo.entries("llm.dedup", SF)
     # persisted signature blocks, per-round CC checkpoints (freed when
     # superseded inside connected_components) and the cluster frame's
     # own checkpoint must ALL be gone — nothing this run pinned survives
