@@ -24,22 +24,14 @@ import shutil as _shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrunner_spark.streaming.pipelines import ephemeral_checkpoint
+
 RT_ROOT = "/tmp/flinkrunner_spark_roundtrip"
 
 
 def _loc(kind: str, sf_dir: str) -> str:
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     return os.path.join(RT_ROOT, f"{kind}-{tag}")
-
-
-def _ephemeral_ckpt() -> str:
-    """Fresh RAM-backed checkpoint dir for a bounded streaming drain —
-    see streaming/pipelines.ephemeral_checkpoint (r13: per-micro-batch
-    offset-log/commit-log fsyncs on disk-backed temp dirs dominated the
-    bounded roundtrip drains). Caller removes it after q.stop()."""
-    from flinkrunner_spark.streaming.pipelines import ephemeral_checkpoint
-
-    return ephemeral_checkpoint()
 
 
 def _lang_profile(df: DataFrame) -> DataFrame:
@@ -557,7 +549,7 @@ def stream_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
              # ≥3 catch-up micro-batches at any sf ≥ 0.001
              "max.offsets.per.trigger": max(n_docs // 3, 64)},
         ).load(spark)
-        _ck = _ephemeral_ckpt()
+        _ck = ephemeral_checkpoint()
         q = (
             sdf.writeStream.format("memory")
             .queryName("q_kafka_stream_rt")
@@ -665,7 +657,7 @@ def stream_rabbitmq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
              # ≥3 catch-up micro-batches at any sf ≥ 0.001
              "max.messages.per.read": max(n_docs // 3, 64)},
         ).load(spark)
-        _ck = _ephemeral_ckpt()
+        _ck = ephemeral_checkpoint()
         q = (
             sdf.writeStream.format("memory")
             .queryName("q_rabbitmq_stream_rt")
@@ -969,7 +961,7 @@ def stream_kinesis_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
              # ≥3 catch-up micro-batches at any sf ≥ 0.001
              "max.records.per.shard": max(n_docs // 9, 32), **creds},
         ).load(spark)
-        _ck = _ephemeral_ckpt()
+        _ck = ephemeral_checkpoint()
         q = (
             sdf.writeStream.format("memory")
             .queryName("q_kinesis_stream_rt")
@@ -1271,7 +1263,7 @@ def stream_curation_to_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ephemeral RAM-backed checkpoint for the bounded catch-up drain
     # (fresh per run, removed after stop — the restart surface keeps its
     # own durable checkpoints in tests/test_curation_pipeline.py)
-    ckpt = _ephemeral_ckpt()
+    ckpt = ephemeral_checkpoint()
     table = os.path.join(loc, "table")
     with LoopbackKafkaBroker(num_partitions=4) as broker:
         KafkaSinkConfig(
@@ -2149,7 +2141,7 @@ def stream_kafka_ts_offsets_roundtrip(
              "starting.offset": str(TS_OFF_BASE + TS_OFF_LO),
              "max.offsets.per.trigger": max(n_docs // 3, 64)},
         ).load(spark)
-        _ck = _ephemeral_ckpt()
+        _ck = ephemeral_checkpoint()
         q = (
             sdf.writeStream.format("memory")
             .queryName("q_kafka_tsst")

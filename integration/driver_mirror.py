@@ -1,55 +1,30 @@
 """Local rehearsal of the driver's correctness gate.
 
 Runs every queries() key (or the first-50 cap with --cap, or named keys)
-against its DuckDB oracle at sf0.01, comparing rows, schema column sets
-and the driver's value hash (columns sorted by name, values stringified,
-rows sorted) — the exact comparison CORRECTNESS_r{N}.json records.
+through ``flinkrunner_spark.parity.check`` against its DuckDB oracle at
+sf0.01 (``SPARK_GRAFT_SF_DIR`` overrides), printing one line per key.
+
+    python integration/driver_mirror.py [--cap] [key ...]
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def canon_hash(df) -> str:
-    df = df[sorted(df.columns)]
-    rows = sorted(
-        tuple(str(v) for v in row) for row in df.itertuples(index=False)
-    )
-    return hashlib.md5(str(rows).encode()).hexdigest()
-
 
 def main() -> int:
-    import duckdb
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as E
+    from flinkrunner_spark import get_spark, parity
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     args = [a for a in sys.argv[1:] if a != "--cap"]
     cap_only = "--cap" in sys.argv[1:]
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf}/{t}.parquet')"
-        )
+    spark = get_spark("driver-mirror")
+    con = parity.duck(sf)
     queries = E.queries()
     oracles = E.oracle_sql()
     keys = args or list(queries)
@@ -57,25 +32,21 @@ def main() -> int:
         keys = keys[:50]
     bad = []
     for i, key in enumerate(keys):
-        try:
-            sdf = queries[key](spark, sf).toPandas()
-        except Exception as e:
-            print(f"[{i+1}/{len(keys)}] {key}: SPARK ERROR {e}")
-            bad.append(key)
-            continue
-        if key not in oracles:
-            print(f"[{i+1}/{len(keys)}] {key}: rows-only ({len(sdf)} rows)")
-            continue
-        odf = con.execute(oracles[key]).fetchdf()
-        ok_rows = len(sdf) == len(odf)
-        ok_cols = sorted(sdf.columns) == sorted(odf.columns)
-        ok_hash = ok_cols and canon_hash(sdf) == canon_hash(odf)
-        status = "OK" if (ok_rows and ok_cols and ok_hash) else "FAIL"
-        print(
-            f"[{i+1}/{len(keys)}] {key}: {status} "
-            f"(rows {len(sdf)}/{len(odf)}, cols {ok_cols}, hash {ok_hash})"
-        )
-        if status == "FAIL":
+        rec = parity.check(spark, con, queries[key], oracles.get(key), sf)
+        head = f"[{i+1}/{len(keys)}] {key}:"
+        if key not in oracles and rec["spark_rows"] is not None:
+            print(f"{head} rows-only ({rec['spark_rows']} rows)")
+        elif rec["oracle_rows"] is None:
+            print(f"{head} {rec['err']}")
+        else:
+            status = "OK" if parity.passed(rec) else "FAIL"
+            print(
+                f"{head} {status} (rows {rec['spark_rows']}/{rec['oracle_rows']}, "
+                f"cols {rec['schema_match']}, hash {rec['hash_match']})"
+            )
+            if "diff" in rec:
+                print(f"    first differing rows: {rec['diff']}")
+        if not parity.passed(rec):
             bad.append(key)
     spark.stop()
     print(f"\n{len(keys) - len(bad)}/{len(keys)} green; failures: {bad}")

@@ -10,23 +10,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from flinkrunner_spark import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
-SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 # ---------------------------------------------------------------------------
 # Two-lane test suite (r14, r13 verdict item 1).
 #
-# The DEFAULT lane (`pytest tests/`) must finish inside the driver's
-# verification budget (~10 min) — the full 36-minute suite was truncated
-# by the driver in r13, shipping the round with an unverifiable test
-# status. The FULL lane (`SPARK_GRAFT_FULL_TESTS=1 pytest tests/`) runs
-# everything, exactly as before.
+# The DEFAULT lane (`pytest tests/`) must finish inside the 2670s
+# verification timeout — the full 36-minute suite was truncated in r13,
+# shipping the round with an unverifiable test status. The FULL lane
+# (`SPARK_GRAFT_FULL_TESTS=1 pytest tests/`) runs everything.
 #
 # What moves behind the gate (measured with --durations=150 on the full
 # suite, 2026-08-18, 1956s total at local[8]) — only tests that are
 # REDUNDANT-at-default or statistical, never sole coverage:
-#   * tests/test_oracle_parity.py (whole file, ~250s): byte-level mirror
-#     of the driver's own CORRECTNESS gate (integration/driver_mirror.py
-#     runs the identical queries()-vs-DuckDB comparison each round);
 #   * tests/test_streaming_properties.py (whole file, ~80s): randomized
 #     multi-batch property runs — the deterministic single-batch
 #     equivalents in test_streaming stay in the default lane;
@@ -36,15 +31,17 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 #     lane. test_recovery's file-sink exactly-once restart test stays
 #     as the default lane's one restart smoke.
 #
+# tests/test_oracle_parity.py stays in the DEFAULT lane: every queries()
+# key runs through flinkrunner_spark.parity.check at sf0.001, so each
+# round re-verifies the whole surface end to end (the lane takes ~850s at
+# local[4]); integration/driver_mirror.py runs the same check at sf0.01.
+#
 # Gated tests report as SKIPPED (visible, never silently dropped).
 # ---------------------------------------------------------------------------
 
 FULL_TESTS = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
 
-_GATED_FILES = (
-    "test_oracle_parity.py",
-    "test_streaming_properties.py",
-)
+_GATED_FILES = ("test_streaming_properties.py",)
 
 _GATED_NODES = (
     "test_aggregates.py::test_variance_matches_reference_spec",
@@ -128,7 +125,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("flinkrunner-spark-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark("flinkrunner-spark-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -235,33 +235,14 @@ def test_iceberg_hive_roundtrip_matches_duckdb_oracle(spark):
     """The r11-slated driver key, rehearsed with the driver's own
     compare (sorted columns, stringified sorted rows, md5) at
     sf0.001 — register → locked-CAS swap → catalog-resolved read."""
-    import hashlib
-
-    import duckdb
-
+    from flinkrunner_spark import parity
     from flinkrunner_spark.plans.connectors import iceberg_hive_roundtrip
     from flinkrunner_spark.plans.oracle_sql import ORACLES
 
     sf = "/root/testdata/sf0.001"
-    got = iceberg_hive_roundtrip(spark, sf).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf}/documents.parquet')"
-    )
-    want = con.execute(ORACLES["iceberg_hive_roundtrip"]).fetchdf()
-
-    def canon(df):
-        df = df[sorted(df.columns)]
-        rows = sorted(
-            tuple(str(v) for v in row)
-            for row in df.itertuples(index=False)
-        )
-        return hashlib.md5(str(rows).encode()).hexdigest()
-
-    assert len(got) == len(want) > 0
-    assert sorted(got.columns) == sorted(want.columns)
-    assert canon(got) == canon(want)
+    sql = ORACLES["iceberg_hive_roundtrip"]
+    rec = parity.check(spark, parity.duck(sf), iceberg_hive_roundtrip, sql, sf)
+    assert parity.passed(rec) and rec["spark_rows"] > 0, rec
 
 
 def test_non_exclusive_lock_refused_by_loopback():

@@ -423,30 +423,12 @@ def test_firehose_roundtrip_matches_duckdb_oracle(spark):
     """The r11-slated firehose driver key, rehearsed with the driver's
     own compare at sf0.001: PutRecordBatch → buffered NDJSON object
     delivery → spark.read.json over the landing prefix."""
-    import hashlib
-
-    import duckdb
-
+    from flinkrunner_spark import parity
     from flinkrunner_spark.plans.connectors import firehose_roundtrip
     from flinkrunner_spark.plans.oracle_sql import ORACLES
 
     sf = "/root/testdata/sf0.001"
-    got = firehose_roundtrip(spark, sf).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf}/documents.parquet')"
+    rec = parity.check(
+        spark, parity.duck(sf), firehose_roundtrip, ORACLES["firehose_roundtrip"], sf
     )
-    want = con.execute(ORACLES["firehose_roundtrip"]).fetchdf()
-
-    def canon(df):
-        df = df[sorted(df.columns)]
-        rows = sorted(
-            tuple(str(v) for v in row)
-            for row in df.itertuples(index=False)
-        )
-        return hashlib.md5(str(rows).encode()).hexdigest()
-
-    assert len(got) == len(want) > 0
-    assert sorted(got.columns) == sorted(want.columns)
-    assert canon(got) == canon(want)
+    assert parity.passed(rec) and rec["spark_rows"] > 0, rec

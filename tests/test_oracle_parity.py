@@ -1,85 +1,43 @@
-"""Local mirror of the driver's t2 gate: run every queries() entry on Spark
-and its oracle_sql() on DuckDB at the same SF, compare row count + columns +
-order-insensitive values. We engineered the plans for cross-engine
-bit-identity (see operators/aggregates.py), so comparison is exact."""
+"""The oracle-parity gate on every queries() key at sf0.001:
+``parity.check`` against the key's DuckDB oracle, or a non-empty result
+for the rows-only keys. integration/driver_mirror.py runs the same check
+at sf0.01."""
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+from conftest import SF_SMOKE as SF_DIR  # noqa: E402
+from flinkrunner_spark import parity  # noqa: E402
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
 
 
-def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con
-
-
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v)
-    return str(v)
-
-
-def _normalize(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_cell(r[i]) for i in order) for r in rows]
-    return sorted(out)
+@pytest.fixture(scope="module")
+def con():
+    c = parity.duck(SF_DIR)
+    yield c
+    c.close()
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_oracle_parity(spark, name):
+def test_oracle_parity(spark, con, name):
     assert name in QUERIES, f"oracle {name} has no queries() entry"
-    sdf = QUERIES[name](spark, SF_DIR)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    con = _duck(SF_DIR)
-    res = con.execute(ORACLES[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-
-    assert sorted(scols) == sorted(dcols), (
-        f"{name}: column mismatch spark={sorted(scols)} duck={sorted(dcols)}"
-    )
-    assert len(srows) == len(drows), (
-        f"{name}: row count spark={len(srows)} duck={len(drows)}"
-    )
-    s_norm = _normalize(srows, scols)
-    d_norm = _normalize(drows, dcols)
-    mismatches = [
-        (a, b) for a, b in zip(s_norm, d_norm) if a != b
-    ]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} mismatched rows; first 3: {mismatches[:3]}"
-    )
+    rec = parity.check(spark, con, QUERIES[name], ORACLES[name], SF_DIR)
+    assert parity.passed(rec), f"{name}: {rec}"
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only(spark, name):
-    df = QUERIES[name](spark, SF_DIR)
-    assert df.count() >= 0
+def test_rows_only(spark, con, name):
+    rec = parity.check(spark, con, QUERIES[name], None, SF_DIR)
+    assert parity.passed(rec), f"{name}: {rec}"
 
 
 def test_entry_smoke(spark):
