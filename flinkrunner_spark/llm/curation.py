@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flinkrunner_spark.llm.text import tokens_col
+from flinkrunner_spark.llm.text import hex8_long, tokens_col
 
 # ---------------------------------------------------------------------------
 # eval-set decontamination
@@ -42,15 +42,7 @@ def eval_bucket_col(doc_id: str = "doc_id") -> Column:
     ``docs_split`` — stable across runs, engines and cluster sizes, and
     exactly reproducible in DuckDB."""
     return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col(doc_id).cast("string"), F.lit(":eval:v1"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hex8_long(F.concat(F.col(doc_id).cast("string"), F.lit(":eval:v1")))
         % EVAL_BUCKETS
     )
 

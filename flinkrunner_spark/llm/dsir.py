@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark import memo
-from flinkrunner_spark.llm.text import tokens_col
+from flinkrunner_spark.llm.text import hex8_long, tokens_col
 
 DSIR_BUCKETS = 1024
 DSIR_SALT = ":dsir:v1"
@@ -57,12 +57,6 @@ DSIR_TARGET_LANG = "en"
 
 def release_caches(sf_dir: str | None = None) -> None:
     memo.release("llm.dsir", sf_dir)
-
-
-def _hex8_long(col):
-    """First 8 hex chars of an md5 → non-negative BIGINT (the repo-wide
-    hashing idiom — llm/sampling.py uses the same conv route)."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 def _micro6(col):
@@ -109,7 +103,7 @@ def _build_bucketed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = feats.select(
         "doc_id",
         "lang",
-        (_hex8_long(F.concat(F.col("feat"), F.lit(DSIR_SALT)))
+        (hex8_long(F.concat(F.col("feat"), F.lit(DSIR_SALT)))
          % DSIR_BUCKETS).alias("bucket"),
     )
     # Materialize the hashed feature instances ONCE (r13, guide §2.4):
@@ -164,7 +158,7 @@ def docs_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("llr_micro").alias("logw_micro"))
     )
     u = (
-        _hex8_long(
+        hex8_long(
             F.concat(F.col("doc_id").cast("string"), F.lit(DSIR_GUMBEL_SALT))
         )
         + F.lit(0.5)

@@ -92,15 +92,7 @@ def docs_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     different salt yields an independent re-split. 90/5/5 train/val/test."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split:v1"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        T.hex8_long(F.concat(F.col("doc_id").cast("string"), F.lit(":split:v1")))
         % 100
     )
     return docs.select(

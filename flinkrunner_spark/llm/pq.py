@@ -12,8 +12,10 @@ Two quantizers:
   ORACLED quantized index.
 * ``emb_knn_pq`` — product quantization (PQ, Jégou et al. 2011): the
   vector splits into M=8 subspaces, each with its own K=256-centroid
-  codebook trained by the IVF quantizer's deterministic sampled-Lloyd's
-  recipe in BLAS form (``_lloyds_blas`` — one GEMM per sweep); a vector
+  codebook trained by the coarse quantizer's recipe from
+  ``llm.similarity`` (the bounded ``_train_sample``, the deterministic
+  BLAS Lloyd's ``_lloyds_blas``, and ``nearest`` — the one
+  nearest-centroid rule, which also encodes the sub-codes); a vector
   stores as M code bytes (8 bytes vs 256 float bytes — 32×), a query
   scores candidates via ADC table lookups, and the ADC shortlist
   re-ranks by exact cosine (faiss IndexRefineFlat).
@@ -42,9 +44,12 @@ from pyspark.sql import functions as F
 from flinkrunner_spark.llm.similarity import (
     KNN_K,
     _emb,
+    _lloyds_blas,
+    _train_sample,
     arrow_matrix,
     as_double,
     dot,
+    nearest,
 )
 
 EMB_DIM = 64
@@ -52,39 +57,6 @@ SQ_LEVELS = 255  # 8-bit levels
 PQ_M = 8  # subspaces
 PQ_K = 256  # centroids per subspace (8-bit codes; 64-bit total — the standard PQ8x8)
 PQ_TRAIN_CAP = 16384  # bounded training sample (faiss's train-on-sample recipe)
-
-
-def _lloyds_blas(sample, k: int, iters: int = 12):
-    """Deterministic Lloyd's over an in-memory sample — the IVF
-    quantizer's recipe (strided hash-order init, first-argmin ties,
-    emptied cells keep their centroid) with the distance computed in
-    BLAS form: argmin ||x-c||² = argmin(c·c − 2 x·C^T), one GEMM per
-    sweep instead of an (n, k, dim) broadcast tensor — the difference
-    between ~16 s and <1 s at the training cap. Distances here exist
-    only to pick argmins; the numpy mirror in tests re-derives
-    codebooks through this same expression, so assignment is
-    reproducible bit-for-bit."""
-    import numpy as np
-
-    n = len(sample)
-    cents = sample[[(i * n) // k for i in range(k)]].copy()
-    for _ in range(iters):
-        d = (cents * cents).sum(axis=1)[None, :] - 2.0 * (sample @ cents.T)
-        lab = d.argmin(axis=1)  # first (lowest) cell on ties
-        # vectorized recenter (per-dim weighted bincount): the per-cell
-        # boolean-mask loop is O(k·n) per sweep — at k=256 it, not the
-        # GEMM, dominated training. Emptied cells keep their centroid.
-        counts = np.bincount(lab, minlength=k).astype(np.float64)
-        sums = np.stack(
-            [
-                np.bincount(lab, weights=sample[:, t], minlength=k)
-                for t in range(sample.shape[1])
-            ],
-            axis=1,
-        )
-        nz = counts > 0
-        cents[nz] = sums[nz] / counts[nz, None]
-    return cents
 
 
 def emb_knn_sq8(
@@ -145,15 +117,7 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str, m: int = PQ_M, kc: int = PQ_
     a numpy array of shape (m, kc, dim/m)."""
     import numpy as np
 
-    emb = _emb(spark, sf_dir)
-    pdf = (
-        emb.select("vec_id", as_double("embedding").alias("e"))
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(PQ_TRAIN_CAP)
-        .toPandas()  # Arrow transfer — row-object collect() was ~3s of
-        # the training constant at the cap
-    )
-    S = np.array([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
+    S = _train_sample(spark, sf_dir, PQ_TRAIN_CAP)
     S = S / np.linalg.norm(S, axis=1, keepdims=True)
     sub = S.shape[1] // m
     return np.stack(
@@ -177,8 +141,8 @@ def emb_knn_pq(
     shortlist: int = PQ_SHORTLIST,
 ) -> DataFrame:
     """PQ/ADC top-k with exact re-rank: encode every (normalized) vector
-    as M sub-codes by nearest sub-centroid (squared euclidean,
-    first-on-ties — ``_lloyds_blas`` parity); score candidates as the sum of the
+    as M sub-codes by ``nearest`` sub-centroid (squared euclidean,
+    first-on-ties — the trainer's own rule); score candidates as the sum of the
     query's per-subspace inner products with the candidate's
     reconstruction (ADC table lookups); keep the top ``shortlist`` by
     ADC and re-rank THOSE by exact cosine — the standard
@@ -225,10 +189,7 @@ def emb_knn_pq(
             E = E / np.linalg.norm(E, axis=1, keepdims=True)
             score = np.zeros(n)
             for j in range(m):
-                Ej = E[:, j * sub : (j + 1) * sub]
-                d = (C[j] * C[j]).sum(axis=1)[None, :] - 2.0 * (Ej @ C[j].T)
-                codes = d.argmin(axis=1)  # first (lowest code) on ties
-                score += adc[j, codes]
+                score += adc[j, nearest(E[:, j * sub : (j + 1) * sub], C[j])]
             yield pa.RecordBatch.from_arrays(
                 [
                     cols["vec_id"],

@@ -35,17 +35,7 @@ def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the train/val/test assignment."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.col("doc_id").cast("string"), F.lit(":strata:v1"))
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        T.hex8_long(F.concat(F.col("doc_id").cast("string"), F.lit(":strata:v1")))
         % 10000
     )
     rate = F.lit(STRATA_DEFAULT)
@@ -85,13 +75,11 @@ def docs_pack_sequences(
     from pyspark.sql import Window
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":pack:v1")))
+    key = F.concat(F.col("doc_id").cast("string"), F.lit(":pack:v1"))
     base = docs.select(
         "doc_id",
-        h.alias("h"),
-        (
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % shards
-        ).alias("shard"),
+        F.md5(key).alias("h"),
+        (T.hex8_long(key) % shards).alias("shard"),
         T.bpe_tokens_col().alias("n_tokens"),
     )
     w = Window.partitionBy("shard").orderBy("h", "doc_id")
@@ -123,13 +111,11 @@ def docs_shuffle_shards(
     from pyspark.sql import Window
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":shuffle:v1")))
+    key = F.concat(F.col("doc_id").cast("string"), F.lit(":shuffle:v1"))
     base = docs.select(
         "doc_id",
-        h.alias("h"),
-        (
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % shards
-        ).alias("shard"),
+        F.md5(key).alias("h"),
+        (T.hex8_long(key) % shards).alias("shard"),
     )
     w = Window.partitionBy("shard").orderBy("h", "doc_id")
     return base.select(
@@ -217,17 +203,9 @@ def docs_weighted_sample(
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
         F.col("n_chars") > 0
     )
-    m = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.col("doc_id").cast("string"), F.lit(":wsample:v1"))
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    m = T.hex8_long(
+        F.concat(F.col("doc_id").cast("string"), F.lit(":wsample:v1"))
+    )
     u = (m + F.lit(1)).cast("double") / F.lit(4294967296.0)  # (0, 1]
     key = F.log(u) / F.col("n_chars")
     top = (

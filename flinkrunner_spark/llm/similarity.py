@@ -17,6 +17,10 @@ embedding: array<float>, label).
   elementwise means), probe the nearest cell, exact search inside it.
   At scale the probed cell is a partition-pruned read of a
   centroid-bucketed table.
+* ``emb_knn_ivf_kmeans``, ``emb_semantic_dedup_kmeans``, ``emb_knn_join``
+  — the same search over cells of ONE learned quantizer (``_cells``:
+  Lloyd's on a bounded md5-ordered sample, corpus assigned by
+  ``nearest``); ``llm.pq`` trains its PQ codebooks with the same parts.
 
 Dot products are JVM-side ``zip_with``/``aggregate`` folds over doubles —
 the same left-fold the DuckDB oracle's ``list_reduce`` performs, so
@@ -29,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark import memo
+from flinkrunner_spark.llm.text import hex8_long
 
 COSINE_DUP_THRESHOLD = 0.35  # synthetic embeddings are near-orthogonal; max in-label cosine ~0.51
 KNN_K = 10
@@ -552,6 +557,17 @@ def rh_pairs_from_codes(
                 F.slice(F.col("ids"), F.col("i") + 2, F.size("ids"))
             ).alias("vec_b"),
         ).distinct()
+    return _verify_pairs(pairs, emb, threshold)
+
+
+def _verify_pairs(
+    pairs: DataFrame, emb: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact cosine of every (vec_a, vec_b) in ``pairs`` over ``emb``'s
+    (vec_id, embedding) rows, kept at rounded cosine ≥ ``threshold`` —
+    the one verify kernel the RH-LSH pairs plan and its recall baseline
+    (:func:`rhlsh_recall_stats`) share, so a pair's membership at the
+    threshold is decided identically on both sides."""
     # Per-vector squared norms fold ONCE on the JVM (r13, guide §4.1/§2.3):
     # the aggregate/zip_with left fold is bit-identical to the numpy
     # per-pair fold it replaces (same IEEE adds in the same index order —
@@ -595,7 +611,7 @@ def rh_pairs_from_codes(
             A = arrow_matrix(cols["ea"], "ea")
             B = arrow_matrix(cols["eb"], "eb")
             d = np.zeros(n)
-            for i in range(A.shape[1]):  # exact left fold, as above
+            for i in range(A.shape[1]):  # exact left fold (see rh_codes_mapper)
                 d = d + A[:, i] * B[:, i]
             na = np.asarray(cols["na"], dtype=np.float64)
             nb = np.asarray(cols["nb"], dtype=np.float64)
@@ -789,10 +805,11 @@ def rhlsh_recall_stats(
       1, so the row IS true corpus recall; at any larger corpus it is a
       fixed-cost unbiased estimate (≤ sample_cap rows → ≤ sample_cap²/2
       exact pairs, constant as n grows);
-    * baseline cosines use the same Arrow-batched LEFT-FOLD as the LSH
-      verify stage (bit-identical to the SQL ``list_reduce``), rounded on
-      the JVM — so pair membership at the threshold matches the oracle
-      exactly (no BLAS summation-order ulps);
+    * baseline cosines go through the LSH verify stage itself
+      (``_verify_pairs``: Arrow-batched LEFT-FOLD, bit-identical to the
+      SQL ``list_reduce``, rounded on the JVM) — so pair membership at
+      the threshold matches the oracle exactly (no BLAS summation-order
+      ulps);
     * the LSH side is the REAL default plan (:func:`emb_dup_pairs_rhlsh`
       with auto bits/probes), not a reimplementation.
 
@@ -807,77 +824,18 @@ def rhlsh_recall_stats(
     mod = max(1, -(-n // max(1, sample_cap)))
     emb = _emb(spark, sf_dir)
     h = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("vec_id").cast("string"),
-                        F.lit(":rhrecall:v1"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hex8_long(
+            F.concat(F.col("vec_id").cast("string"), F.lit(":rhrecall:v1"))
+        )
         % mod
     )
-    d2 = as_double("embedding")
-    sample = emb.filter(h == 0).select(
-        "vec_id", "embedding", dot(d2, d2).alias("_n2")
+    sample = emb.filter(h == 0).select("vec_id", "embedding")
+    ids = sample.select("vec_id")
+    cand = ids.select(F.col("vec_id").alias("vec_a")).join(
+        F.broadcast(ids.select(F.col("vec_id").alias("vec_b"))),
+        F.col("vec_a") < F.col("vec_b"),
     )
-    a = sample.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.col("_n2").alias("na"),
-    )
-    b = sample.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.col("_n2").alias("nb"),
-    )
-    cand = a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b"))
-
-    def gen_cosine(it):
-        # mapInArrow + JVM-precomputed norms — same rewrite as the LSH
-        # verify stage (rh_pairs_from_codes): flat-buffer reshape, exact
-        # left-fold dot, bit-identical values (see that function's note)
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in it:
-            n = batch.num_rows
-            if not n:
-                continue
-            cols = {
-                name: batch.column(i)
-                for i, name in enumerate(batch.schema.names)
-            }
-            A = arrow_matrix(cols["ea"], "ea")
-            B = arrow_matrix(cols["eb"], "eb")
-            d = np.zeros(n)
-            for i in range(A.shape[1]):  # exact left fold (see _rh_codes)
-                d = d + A[:, i] * B[:, i]
-            na = np.asarray(cols["na"], dtype=np.float64)
-            nb = np.asarray(cols["nb"], dtype=np.float64)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    cols["vec_a"],
-                    cols["vec_b"],
-                    pa.array(d / np.sqrt(na * nb), type=pa.float64()),
-                ],
-                ["vec_a", "vec_b", "cosine_raw"],
-            )
-
-    true_pairs = (
-        cand.select("vec_a", "vec_b", "ea", "eb", "na", "nb").mapInArrow(
-            gen_cosine, schema="vec_a long, vec_b long, cosine_raw double"
-        )
-        .select("vec_a", "vec_b", F.round("cosine_raw", 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-        .select("vec_a", "vec_b")
-    )
+    true_pairs = _verify_pairs(cand, sample, threshold).select("vec_a", "vec_b")
     lsh = emb_dup_pairs_rhlsh(
         spark, sf_dir, threshold, bands, nbits, probes=probes
     ).select("vec_a", "vec_b", F.lit(1).alias("hit"))
@@ -1033,93 +991,121 @@ KMEANS_SAMPLE_CAP = 65536  # training-sample bound — fixed wrt corpus size
 KMEANS_ITERS = 20
 
 
-def _kmeans_assigned(
-    spark: SparkSession, sf_dir: str, n_cells: int
-) -> tuple[DataFrame, DataFrame]:
-    """Learned-quantizer internals: (corpus with a ``prediction`` cell
-    column — persisted, and the (cell, centroid) table as a DATAFRAME).
-
-    100 TB shape: the quantizer trains driver-side on a DETERMINISTIC
-    BOUNDED SAMPLE (top-``KMEANS_SAMPLE_CAP`` rows by md5(vec_id) —
-    a TakeOrdered, one pass, no full sort; cap fixed as the corpus
-    grows), and full-corpus assignment is a ZERO-SHUFFLE Arrow-batched
-    numpy argmin against the closure-broadcast centroid matrix —
-    embarrassingly parallel at any scale, vectorized across rows and
-    cells. The n_cells × dim centroid table re-exposes as a
-    broadcastable frame so probe selection stays JVM-side.
-
-    Memoized per (sf_dir, n_cells), so training + the assignment scan
-    run once per corpus per session."""
-    return memo.memo(
-        spark, "llm.similarity.kmeans", sf_dir,
-        lambda: _build_kmeans_assigned(spark, sf_dir, n_cells),
-        key=(n_cells,),
-    )
+def nearest(E, C):
+    """Index of each row's nearest centroid: argmin ‖x−c‖² =
+    argmin(c·c − 2x·Cᵀ), one GEMM, the FIRST (lowest) index on exact
+    ties. The one distance rule the Lloyd's trainer, the corpus
+    assignment map and PQ's sub-code encoder (``llm.pq``) share, so
+    training, assignment and the numpy mirrors in tests agree
+    bit-for-bit."""
+    return ((C * C).sum(axis=1)[None, :] - 2.0 * (E @ C.T)).argmin(axis=1)
 
 
-def _build_kmeans_assigned(
-    spark: SparkSession, sf_dir: str, n_cells: int
-) -> tuple[DataFrame, DataFrame]:
+def _lloyds_blas(sample, k: int, iters: int = 12):
+    """Deterministic Lloyd's over an in-memory sample (strided
+    hash-order init, first-argmin ties, emptied cells keep their
+    centroid) with the distance in BLAS form (``nearest``): one GEMM per
+    sweep instead of an (n, k, dim) broadcast tensor — the difference
+    between ~16 s and <1 s at the training cap, and ~1 GB less temp per
+    sweep as k grows with √corpus."""
     import numpy as np
 
-    emb = _emb(spark, sf_dir)
-    # Arrow transport (toPandas) for the sample — identical doubles,
-    # ~10× less driver deserialize time than a py4j row collect at the
-    # 64k cap (same switch as _ivf_assigned)
-    sample_pdf = (
-        emb.select("vec_id", as_double("embedding").alias("e"))
+    n = len(sample)
+    cents = sample[[(i * n) // k for i in range(k)]].copy()
+    for _ in range(iters):
+        lab = nearest(sample, cents)
+        # vectorized recenter (per-dim weighted bincount): the per-cell
+        # boolean-mask loop is O(k·n) per sweep — at k=256 it, not the
+        # GEMM, dominated training. Emptied cells keep their centroid.
+        counts = np.bincount(lab, minlength=k).astype(np.float64)
+        sums = np.stack(
+            [
+                np.bincount(lab, weights=sample[:, t], minlength=k)
+                for t in range(sample.shape[1])
+            ],
+            axis=1,
+        )
+        nz = counts > 0
+        cents[nz] = sums[nz] / counts[nz, None]
+    return cents
+
+
+def _train_sample(spark: SparkSession, sf_dir: str, cap: int):
+    """The quantizer training sample as an (n, dim) float64 matrix: the
+    first ``cap`` corpus rows by md5(vec_id) — a TakeOrdered (one pass,
+    no full sort) whose size stays fixed as the corpus grows (faiss's
+    train-on-sample recipe). Arrow transport (toPandas), not a py4j row
+    collect: identical doubles, ~10× less driver deserialize time at the
+    64k cap."""
+    import numpy as np
+
+    pdf = (
+        _emb(spark, sf_dir)
+        .select("vec_id", as_double("embedding").alias("e"))
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(KMEANS_SAMPLE_CAP)
+        .limit(cap)
         .toPandas()
     )
-    sample = np.array(
-        [np.asarray(v, dtype=np.float64) for v in sample_pdf["e"]]
+    return np.array([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
+
+
+def _cells(
+    spark: SparkSession, sf_dir: str, n_cells: int, iters: int
+) -> tuple[DataFrame, DataFrame, "object"]:
+    """The learned coarse quantizer: (corpus with a ``cell`` column —
+    persisted, the (cell, centroid) table as a DataFrame, the centroid
+    matrix C).
+
+    100 TB shape: ``_lloyds_blas`` trains driver-side on the bounded
+    ``_train_sample`` (``KMEANS_SAMPLE_CAP`` rows, fixed as the corpus
+    grows), and full-corpus assignment is a ZERO-SHUFFLE Arrow-batched
+    ``nearest`` against the closure-broadcast C — embarrassingly
+    parallel, vectorized across rows and cells (the JVM higher-order-fold
+    equivalent runs interpreted per element; same trade as
+    ``_rh_codes``), with the trainer's distance arithmetic. The
+    n_cells × dim centroid table re-exposes as a broadcastable frame so
+    probe selection can stay JVM-side.
+
+    Memoized per (sf_dir, n_cells, iters): training and the assignment
+    scan run once per corpus per session."""
+
+    def build():
+        C = _lloyds_blas(
+            _train_sample(spark, sf_dir, KMEANS_SAMPLE_CAP), n_cells, iters
+        )
+        cents = spark.createDataFrame(
+            [(i, [float(x) for x in c]) for i, c in enumerate(C)],
+            "cell int, centroid array<double>",
+        )
+        emb = _emb(spark, sf_dir)
+        out_schema = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in emb.schema.fields
+        ) + ", cell int"
+
+        def gen_assign(it):
+            # mapInArrow (guide §4.2, r14): the embedding matrix reshapes
+            # out of the list column's flat values buffer and every
+            # pass-through column is the untouched Arrow array — no pandas
+            # materialization of the corpus on either side of the boundary
+            import numpy as np
+            import pyarrow as pa
+
+            for batch in it:
+                if not batch.num_rows:
+                    continue
+                i_emb = batch.schema.names.index("embedding")
+                E = arrow_matrix(batch.column(i_emb), "embedding")
+                yield pa.RecordBatch.from_arrays(
+                    [*batch.columns, pa.array(nearest(E, C).astype(np.int32))],
+                    list(batch.schema.names) + ["cell"],
+                )
+
+        assigned = emb.mapInArrow(gen_assign, schema=out_schema).persist()
+        return assigned, cents, C
+
+    return memo.memo(
+        spark, "llm.similarity.cells", sf_dir, build, key=(n_cells, iters)
     )
-    # BLAS distance form (r11 — the 8× study caught the old
-    # (n, k, dim) broadcast tensor paying ~1 GB of temp per sweep as
-    # k grows with √corpus): argmin ‖x−c‖² = argmin(c·c − 2x·Cᵀ), one
-    # GEMM per sweep + bincount recenter, the same recipe the IVF and
-    # PQ trainers already use (`llm.pq._lloyds_blas`)
-    from flinkrunner_spark.llm.pq import _lloyds_blas
-
-    cents_np = _lloyds_blas(sample, n_cells, iters=KMEANS_ITERS)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents_np)],
-        "cell int, centroid array<double>",
-    )
-    # full-corpus assignment: Arrow-native numpy argmin against the
-    # broadcast centroid matrix — a zero-shuffle map, vectorized across
-    # rows AND cells (the JVM higher-order-fold equivalent runs
-    # interpreted per element; same trade as _rh_codes). numpy argmin
-    # keeps the FIRST (lowest) cell on exact ties, and the GEMM form
-    # matches the trainer's distance arithmetic term-for-term.
-    # mapInArrow (guide §4.2, r14): the embedding matrix reshapes out of
-    # the list column's flat values buffer and every pass-through column
-    # is the untouched Arrow array — no pandas materialization of the
-    # full corpus frame on either side of the boundary.
-    C = cents_np.copy()
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in emb.schema.fields
-    ) + ", prediction int"
-
-    def gen_assign(it):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in it:
-            n = batch.num_rows
-            if not n:
-                continue
-            i_emb = batch.schema.names.index("embedding")
-            E = arrow_matrix(batch.column(i_emb), "embedding")
-            d = (C * C).sum(axis=1)[None, :] - 2.0 * (E @ C.T)
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, pa.array(d.argmin(axis=1).astype(np.int32))],
-                list(batch.schema.names) + ["prediction"],
-            )
-
-    assigned = emb.mapInArrow(gen_assign, schema=out_schema).persist()
-    return assigned, cents
 
 
 def emb_knn_ivf_kmeans(
@@ -1147,7 +1133,7 @@ def emb_knn_ivf_kmeans(
     top-k restricted to the probed cells, and the probe genuinely prunes
     the scan — is verified against an independent numpy computation in
     tests/test_algorithms.py."""
-    assigned, cents = _kmeans_assigned(spark, sf_dir, n_cells)
+    assigned, cents, _ = _cells(spark, sf_dir, n_cells, KMEANS_ITERS)
     q = (
         _emb(spark, sf_dir)
         .filter(F.col("vec_id") == query_id)
@@ -1163,11 +1149,11 @@ def emb_knn_ivf_kmeans(
         )
         .orderBy(F.col("ccos").desc(), F.col("cell"))
         .limit(nprobe)
-        .select(F.col("cell").alias("prediction"))
+        .select("cell")
     )
     cos = cosine(as_double("embedding"), as_double("qv"))
     return (
-        assigned.join(F.broadcast(probe), "prediction")
+        assigned.join(F.broadcast(probe), "cell")
         .crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != query_id)
         .select("vec_id", F.round(cos, 6).alias("cosine"))
@@ -1338,20 +1324,29 @@ def emb_semantic_dedup(
     assigned = docs_cluster_assign(spark, sf_dir).select(
         "vec_id", "assigned_label"
     )
-    emb = _emb(spark, sf_dir)
-    normed = (
-        emb.select("vec_id", as_double("embedding").alias("e"))
-        .join(assigned, "vec_id")
-        .withColumn("nrm", dot(F.col("e"), F.col("e")))
+    cells = _emb(spark, sf_dir).select("vec_id", "embedding").join(
+        assigned, "vec_id"
     )
+    return _keep_lowest(cells, "assigned_label", threshold)
+
+
+def _keep_lowest(cells: DataFrame, cell: str, threshold: float) -> DataFrame:
+    """SemDeDup's within-cell step over (vec_id, ``cell``, embedding):
+    self-join on the cell key with norms precomputed per row (the
+    ``emb_dup_pairs_blocked`` shape; cost Σ cell²), and drop every
+    vector with a LOWER-id vector of rounded cosine ≥ ``threshold`` in
+    its cell. Returns (vec_id, ``cell``, keep)."""
+    normed = cells.select(
+        "vec_id", F.col(cell).alias("c"), as_double("embedding").alias("e")
+    ).withColumn("nrm", dot(F.col("e"), F.col("e")))
     a = normed.select(
-        F.col("assigned_label").alias("c"),
+        "c",
         F.col("vec_id").alias("vec_a"),
         F.col("e").alias("ea"),
         F.col("nrm").alias("na"),
     )
     b = normed.select(
-        F.col("assigned_label").alias("c"),
+        "c",
         F.col("vec_id").alias("vec_b"),
         F.col("e").alias("eb"),
         F.col("nrm").alias("nb"),
@@ -1365,10 +1360,11 @@ def emb_semantic_dedup(
         .distinct()
     )
     return (
-        assigned.join(dropped.withColumn("is_dropped", F.lit(True)), "vec_id", "left")
+        cells.select("vec_id", cell)
+        .join(dropped.withColumn("is_dropped", F.lit(True)), "vec_id", "left")
         .select(
             "vec_id",
-            "assigned_label",
+            cell,
             F.coalesce(~F.col("is_dropped"), F.lit(True)).alias("keep"),
         )
     )
@@ -1393,41 +1389,8 @@ def emb_semantic_dedup_kmeans(
     Lloyd's run, kept set pairwise dup-free per cell, every drop
     justified by a lower-id near-dup — is verified in
     tests/test_llm_round5.py."""
-    assigned, _ = _kmeans_assigned(spark, sf_dir, n_cells)
-    normed = assigned.select(
-        "vec_id",
-        F.col("prediction").alias("cell"),
-        as_double("embedding").alias("e"),
-    ).withColumn("nrm", dot(F.col("e"), F.col("e")))
-    a = normed.select(
-        F.col("cell"),
-        F.col("vec_id").alias("vec_a"),
-        F.col("e").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = normed.select(
-        F.col("cell"),
-        F.col("vec_id").alias("vec_b"),
-        F.col("e").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
-    dropped = (
-        a.join(b, ["cell"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(F.round(cos, 6) >= threshold)
-        .select(F.col("vec_b").alias("vec_id"))
-        .distinct()
-    )
-    return (
-        normed.select("vec_id", "cell")
-        .join(dropped.withColumn("is_dropped", F.lit(True)), "vec_id", "left")
-        .select(
-            "vec_id",
-            "cell",
-            F.coalesce(~F.col("is_dropped"), F.lit(True)).alias("keep"),
-        )
-    )
+    assigned, _, _ = _cells(spark, sf_dir, n_cells, KMEANS_ITERS)
+    return _keep_lowest(assigned, "cell", threshold)
 
 
 KNN_JOIN_K = 5
@@ -1460,84 +1423,6 @@ def ivf_cells(
     return max(min_cells, min(max_cells, 1 << math.ceil(math.log2(root))))
 
 
-def _ivf_assigned(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, int, "object"]:
-    """Corpus-scaled IVF internals: (corpus with a ``cell`` column —
-    persisted, the (cell, centroid) table, n_cells, centroid np matrix).
-
-    Same 100 TB shape as ``_kmeans_assigned`` — deterministic bounded
-    training sample (top-``KMEANS_SAMPLE_CAP`` by md5(vec_id)), Lloyd's
-    on the driver, zero-shuffle Arrow-batched full-corpus assignment —
-    but the cell count derives from the corpus size (``ivf_cells``:
-    ≈√n) and training/assignment use the BLAS distance form
-    (``llm.pq._lloyds_blas``: argmin ‖x−c‖² = argmin(c·c − 2x·Cᵀ), one
-    GEMM per sweep) so a 65536-row sample trains against thousands of
-    cells in seconds. First-argmin tie behavior matches the trainer and
-    the numpy mirror in tests bit-for-bit.
-
-    The learned coarse quantizer is trained once per corpus per session
-    (memoized)."""
-    return memo.memo(
-        spark, "llm.similarity.ivf", sf_dir,
-        lambda: _build_ivf_assigned(spark, sf_dir),
-    )
-
-
-def _build_ivf_assigned(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, int, "object"]:
-    import numpy as np
-
-    from flinkrunner_spark.llm.pq import _lloyds_blas
-
-    emb = _emb(spark, sf_dir)
-    n_cells = ivf_cells(emb.count())
-    # Arrow transport for the training sample (toPandas), not the py4j
-    # row collect — same doubles, ~10× less driver deserialize time on
-    # a 64k×64 sample
-    sample_pdf = (
-        emb.select("vec_id", as_double("embedding").alias("e"))
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(KMEANS_SAMPLE_CAP)
-        .toPandas()
-    )
-    sample = np.array(
-        [np.asarray(v, dtype=np.float64) for v in sample_pdf["e"]]
-    )
-    cents_np = _lloyds_blas(sample, n_cells)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents_np)],
-        "cell int, centroid array<double>",
-    )
-    C = cents_np.copy()
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in emb.schema.fields
-    ) + ", cell int"
-
-    def gen_assign(it):
-        # mapInArrow (guide §4.2, r14): same zero-pandas pass-through
-        # rewrite as _kmeans_assigned's assignment stage
-        import numpy as np
-        import pyarrow as pa
-
-        cc = (C * C).sum(axis=1)[None, :]
-        for batch in it:
-            n = batch.num_rows
-            if not n:
-                continue
-            i_emb = batch.schema.names.index("embedding")
-            E = arrow_matrix(batch.column(i_emb), "embedding")
-            d = cc - 2.0 * (E @ C.T)  # same BLAS form as the trainer
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, pa.array(d.argmin(axis=1).astype(np.int32))],
-                list(batch.schema.names) + ["cell"],
-            )
-
-    assigned = emb.mapInArrow(gen_assign, schema=out_schema).persist()
-    return assigned, cents, n_cells, cents_np
-
-
 def emb_knn_join(
     spark: SparkSession,
     sf_dir: str,
@@ -1555,9 +1440,10 @@ def emb_knn_join(
     sub-linear. Plan shape at 100 TB (r7 verdict item 1b — replaces the
     label-cell plan whose fixed cell count made candidate work quadratic
     and whose forced probe broadcast grew linearly):
-    * cells come from ``_ivf_assigned``: K = ``ivf_cells(n)`` ≈ √n
-      (FAISS guideline), so cell size ~√n and per-query candidate work
-      is nprobe·√n, not nprobe·n/constant;
+    * cells come from the learned quantizer (``_cells``, 12 Lloyd's
+      sweeps) with K = ``ivf_cells(n)`` ≈ √n (FAISS guideline), so cell
+      size ~√n and per-query candidate work is nprobe·√n, not
+      nprobe·n/constant;
     * probe selection scans the BROADCAST centroid table (≤ 33 MB by
       the IVF_MAX_CELLS clamp) per query — no shuffle;
     * candidate generation joins probes to the assigned corpus ON THE
@@ -1584,7 +1470,8 @@ def emb_knn_join(
     in the numpy mirror test (tests/test_algorithms.py). The
     exactly-oracled companion is :func:`emb_knn_join_label` (constant
     query block over deterministic label cells)."""
-    assigned, _cents, n_cells, C = _ivf_assigned(spark, sf_dir)
+    n_cells = ivf_cells(_emb_count(spark, sf_dir))
+    assigned, _, C = _cells(spark, sf_dir, n_cells, 12)
     queries = _emb(spark, sf_dir).filter(
         F.col("vec_id") % stride == 0
     ).select(F.col("vec_id").alias("q_vec_id"), F.col("embedding").alias("qv"))
@@ -1883,17 +1770,7 @@ def emb_decontaminate(
     -id)) so the answer is deterministic cross-engine."""
     emb = _emb(spark, sf_dir)
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.col("vec_id").cast("string"), F.lit(":eval:v1"))
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hex8_long(F.concat(F.col("vec_id").cast("string"), F.lit(":eval:v1")))
         % EVAL_VEC_BUCKETS
     )
     h = F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(":eval:v1")))

@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark import memo
-from flinkrunner_spark.llm.text import tokens_col
+from flinkrunner_spark.llm.text import hex8_long, tokens_col
 
 CMS_DEPTH = 4  # hash rows (error probability ~ e^-D)
 CMS_WIDTH = 1024  # buckets per row (overcount ~ N·e/W)
@@ -69,10 +69,7 @@ def cms_bucket(tok: Column, row: int, width: int = CMS_WIDTH) -> Column:
     """Deterministic bucket of ``tok`` in hash row ``row``: the first 8
     md5 hex digits of ``token:cms:<row>`` mod width — the md5-derived
     hash discipline every cross-engine-exact op here uses."""
-    h = F.md5(F.concat(tok, F.lit(f":cms:{row}")))
-    return (
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % width
-    ).cast("int")
+    return (hex8_long(F.concat(tok, F.lit(f":cms:{row}"))) % width).cast("int")
 
 
 def _token_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,6 +33,14 @@ LANG_STOPWORDS = {
 ALL_STOPWORDS = sorted({w for ws in LANG_STOPWORDS.values() for w in ws})
 
 
+def hex8_long(col: Column) -> Column:
+    """The first 8 hex digits of md5(``col``) as a non-negative BIGINT —
+    the md5 bucket every deterministic split, sample, shard and sketch
+    in ``llm/`` draws from (the DuckDB oracle's ``_hex8_to_long`` is its
+    independent reference)."""
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+
+
 def tokens_col(text: str = "text") -> Column:
     toks = F.split(F.lower(F.col(text)), TOKEN_SPLIT)
     return F.filter(toks, lambda x: x != "")

@@ -4,8 +4,9 @@ The comparison is the correctness gate's, written once: ``toPandas()``
 the Spark result, sort the columns by name, ``str()`` every value, sort
 the rows, md5. ``check`` returns the per-key record that
 ``CORRECTNESS_r{N}.json`` stores. A key with no oracle SQL is rows-only:
-its record carries ``err="no_oracle"``, and it passes only when the
-result is non-empty.
+its record carries ``err="no_oracle"`` and ``spark_hash`` (the
+``canon_hash`` of the result, so a sweep log can be diffed against
+another commit's), and it passes only when the result is non-empty.
 
 ``integration/driver_mirror.py`` (the sf0.01 sweep) and
 ``tests/test_oracle_parity.py`` (every key at sf0.001) both run through
@@ -70,6 +71,7 @@ def check(
         return rec
     rec["spark_rows"] = len(sdf)
     if sql is None:
+        rec["spark_hash"] = canon_hash(sdf)
         rec["err"] = NO_ORACLE if len(sdf) else "rows-only key returned no rows"
         return rec
     try:

@@ -70,9 +70,6 @@ def drain_state_partitions(spark: SparkSession, n_rows: int | None = None) -> in
       gets thousands of stores spread over the cluster, a 5k-row local
       mirror keeps the measured-optimal handful;
     * otherwise ``DRAIN_PARTITIONS_FLOOR``.
-
-    Callers that need a fixed count pass ``state_partitions=`` to the
-    drain builders instead.
     """
     if n_rows is None:
         return DRAIN_PARTITIONS_FLOOR
@@ -779,8 +776,6 @@ def run_updates_final(
     spark: SparkSession,
     build,
     keys: list[str],
-    state_partitions: int | None = None,
-    path: str | None = None,
 ) -> DataFrame:
     """Drive a (bounded) streaming aggregation in UPDATE output mode and
     return the FINAL emission per key — the upsert-sink configuration.
@@ -796,16 +791,15 @@ def run_updates_final(
     ``build`` is a ``Callable[[SparkSession], DataFrame]`` that declares
     the streaming aggregate; it runs on a cloned session
     (``spark.newSession()``) whose ``spark.sql.shuffle.partitions`` is
-    pinned to ``state_partitions`` — query-scoped, so concurrent queries
-    on the caller's session never observe a mutated global conf. The
-    default is ``drain_state_partitions(spark)``, i.e. 4 partitions; it
-    was 8 before round 14.
+    pinned to ``drain_state_partitions(spark)``, i.e. 4 partitions —
+    query-scoped, so concurrent queries on the caller's session never
+    observe a mutated global conf.
 
     The sink is executor-side end to end: each micro-batch's update rows
-    are stamped with the batch id and appended to ``path`` as parquet BY
-    THE EXECUTORS (the driver never sees a row — the exact shape a JDBC
-    MERGE / key-value upsert takes at scale, with parquet standing in for
-    the store). The final emission per key is then selected read-side
+    are stamped with the batch id and appended to a staging directory as
+    parquet BY THE EXECUTORS (the driver never sees a row — the exact
+    shape a JDBC MERGE / key-value upsert takes at scale, with parquet
+    standing in for the store). The final emission per key is then selected read-side
     (max batch id wins); because streaming aggregate state is cumulative,
     that row IS the full-input aggregate, so for order-independent
     aggregates the result is bit-identical to the batch oracle. The
@@ -817,13 +811,12 @@ def run_updates_final(
     # same RAM-backed ephemeral base as the checkpoints: the staging
     # dir is written and deleted within this call (the result is
     # localCheckpoint-materialized before the rmtree below), so its
-    # durability is a non-goal; callers passing an explicit ``path``
-    # (the production upsert-sink stand-in) keep full control
-    staged = path or ephemeral_checkpoint(prefix="flinkrunner_updates_")
-    if state_partitions is None:
-        state_partitions = drain_state_partitions(spark)
+    # durability is a non-goal
+    staged = ephemeral_checkpoint(prefix="flinkrunner_updates_")
     s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    s2.conf.set(
+        "spark.sql.shuffle.partitions", str(drain_state_partitions(spark))
+    )
     df = build(s2)
 
     def sink(bdf: DataFrame, bid: int) -> None:
@@ -867,28 +860,27 @@ def run_to_memory(
     df: DataFrame,
     name: str,
     mode: str = "append",
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Drive a (bounded) stream to completion into a memory sink; return
     the sink contents as a batch DataFrame. Use mode="complete" for
     watermarked aggregations so the trailing windows (still within
     lateness when input ends) are included.
 
-    ``state_partitions`` pins shuffle/state-store partitioning for the
-    stream (restored afterwards): every stateful-op partition pays a
+    Shuffle/state-store partitioning is pinned to
+    ``drain_state_partitions(spark)`` for the stream (restored
+    afterwards): every stateful-op partition pays a
     fixed state-store maintenance cost PER MICRO-BATCH — including the
     empty watermark-flush batch — so local mirrors with small state want
     few partitions (32→8 measured 9.5s→2.1s on the interval join in r1;
     8→4 halved the 4-micro-batch interval join again in r4, flat below
-    4). The default comes from ``drain_state_partitions`` instead of a
-    literal; scan parallelism is unaffected either way (file splits, not
-    shuffle partitions, drive the source)."""
+    4). Scan parallelism is unaffected (file splits, not shuffle
+    partitions, drive the source)."""
     import shutil
 
-    if state_partitions is None:
-        state_partitions = drain_state_partitions(spark)
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(drain_state_partitions(spark))
+    )
     ckpt = ephemeral_checkpoint()
     try:
         q = (

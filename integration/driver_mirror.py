@@ -35,7 +35,10 @@ def main() -> int:
         rec = parity.check(spark, con, queries[key], oracles.get(key), sf)
         head = f"[{i+1}/{len(keys)}] {key}:"
         if key not in oracles and rec["spark_rows"] is not None:
-            print(f"{head} rows-only ({rec['spark_rows']} rows)")
+            print(
+                f"{head} rows-only ({rec['spark_rows']} rows, "
+                f"spark_hash {rec['spark_hash']})"
+            )
         elif rec["oracle_rows"] is None:
             print(f"{head} {rec['err']}")
         else:

@@ -50,7 +50,7 @@ _GATED_NODES = (
     "test_algorithms.py::test_emb_dup_pairs_blas_matches_fold",
     "test_algorithms.py::test_emb_dup_pairs_default_is_rhlsh_and_blocked_guard",
     "test_algorithms.py::test_emb_dup_pairs_rhlsh_recall_and_precision",
-    "test_algorithms.py::test_emb_knn_ivf_kmeans_exact_within_probed_cells",
+    "test_algorithms.py::test_emb_knn_ivf_kmeans_exact_within_probed_cells[sf0.01]",
     "test_algorithms.py::test_emb_knn_join_label_query_cap_binds",
     "test_algorithms.py::test_label_centroids_two_level_fold_bounded_and_exact",
     "test_algorithms.py::test_lsh_real_corpus_under_cap",

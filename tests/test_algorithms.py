@@ -4,6 +4,7 @@ HLL relative-error contract)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from flinkrunner_spark.algorithms.hll import estimate, update_registers
 from flinkrunner_spark.algorithms.sbf import StableBloomFilter
@@ -113,16 +114,29 @@ def test_emb_dup_pairs_default_is_rhlsh_and_blocked_guard(spark):
     similarity.release_caches(sf)
 
 
-def test_emb_knn_ivf_kmeans_exact_within_probed_cells(spark):
+# recall@10 of emb_knn_ivf_kmeans against the exact emb_knn scan, pinned
+# at the values the learned quantizer reaches on the test corpora
+KMEANS_RECALL_FLOOR = {"sf0.001": 0.8, "sf0.01": 0.4}
+
+
+@pytest.mark.parametrize("sf_name", ["sf0.001", "sf0.01"])
+def test_emb_knn_ivf_kmeans_exact_within_probed_cells(spark, sf_name):
     """The learned-quantizer IVF must return EXACTLY the cosine top-k of
-    the probed cells (computed independently in numpy), and the probe
-    must genuinely prune the scan."""
+    the probed cells (computed independently in numpy), the probe must
+    genuinely prune the scan, and recall@10 against the exact scan must
+    not drop below its pinned floor."""
     import numpy as np
 
-    from flinkrunner_spark.llm.similarity import _kmeans_assigned, emb_knn_ivf_kmeans
+    from flinkrunner_spark.llm.similarity import (
+        KMEANS_ITERS,
+        KNN_K,
+        _cells,
+        emb_knn,
+        emb_knn_ivf_kmeans,
+    )
 
-    sf = "/root/testdata/sf0.01"
-    assigned, cents_df = _kmeans_assigned(spark, sf, n_cells=16)
+    sf = f"/root/testdata/{sf_name}"
+    assigned, cents_df, _ = _cells(spark, sf, 16, KMEANS_ITERS)
     qv = (
         spark.read.parquet(f"{sf}/embeddings.parquet")
         .filter("vec_id = 0")
@@ -135,7 +149,7 @@ def test_emb_knn_ivf_kmeans_exact_within_probed_cells(spark):
     C = np.array([r["centroid"] for r in crows], dtype=np.float64)
     ccos = (C @ qn) / (np.sqrt((C * C).sum(axis=1)) * np.sqrt(qn @ qn))
     cells = [int(c) for c in np.lexsort((np.arange(len(C)), -ccos))[:4]]
-    cand = assigned.filter(assigned["prediction"].isin(cells)).filter(
+    cand = assigned.filter(assigned["cell"].isin(cells)).filter(
         assigned["vec_id"] != 0
     )
     rows = cand.select("vec_id", "embedding").collect()
@@ -157,6 +171,54 @@ def test_emb_knn_ivf_kmeans_exact_within_probed_cells(spark):
     ]
     assert [g[0] for g in got] == [e[0] for e in expected]
     assert all(abs(g[1] - e[1]) < 1e-9 for g, e in zip(got, expected))
+
+    exact = {r["vec_id"] for r in emb_knn(spark, sf).collect()}
+    recall = len(exact & {g[0] for g in got}) / KNN_K
+    assert recall >= KMEANS_RECALL_FLOOR[sf_name]
+
+
+@pytest.mark.parametrize("shape", ["kmeans", "ivf"])
+def test_cells_assign_each_row_to_its_nearest_centroid(spark, shape):
+    """Both quantizer shapes the callers build — (16, KMEANS_ITERS) and
+    (ivf_cells(n), 12) — assign every row to the argmin over the
+    returned centroid table (recomputed here as explicit squared
+    differences), and the per-cell counts sum to n."""
+    from flinkrunner_spark.llm import similarity
+
+    sf = "/root/testdata/sf0.001"
+    n = spark.read.parquet(f"{sf}/embeddings.parquet").count()
+    n_cells, iters = (
+        (16, similarity.KMEANS_ITERS)
+        if shape == "kmeans"
+        else (similarity.ivf_cells(n), 12)
+    )
+    assigned, cents_df, C = similarity._cells(spark, sf, n_cells, iters)
+    crows = sorted(cents_df.collect(), key=lambda r: r["cell"])
+    assert [r["cell"] for r in crows] == list(range(n_cells))
+    table = np.array([r["centroid"] for r in crows], dtype=np.float64)
+    assert np.array_equal(table, C)
+
+    rows = assigned.select("vec_id", "embedding", "cell").collect()
+    E = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    cell = np.array([r["cell"] for r in rows])
+    d = ((E[:, None, :] - table[None, :, :]) ** 2).sum(axis=2)
+    best = d.min(axis=1)
+    # the assigned cell is a minimum up to the BLAS form's rounding
+    assert np.all(d[np.arange(len(E)), cell] <= best + 1e-9 * (1 + best))
+    counts = assigned.groupBy("cell").count().collect()
+    assert all(0 <= r["cell"] < n_cells for r in counts)
+    assert sum(r["count"] for r in counts) == n == len(rows)
+
+
+def test_nearest_takes_lowest_index_on_exact_tie():
+    from flinkrunner_spark.llm.similarity import nearest
+
+    # the origin is at distance 1 from all three centroids
+    C = np.array([[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0]])
+    assert nearest(np.zeros((1, 2)), C).tolist() == [0]
+    # (0, -1) ties between cells 1 and 2; cell 0 is farther
+    C = np.array([[3.0, 3.0], [1.0, -1.0], [-1.0, -1.0]])
+    assert nearest(np.array([[0.0, -1.0], [3.0, 2.0]]), C).tolist() == [1, 0]
 
 
 def test_dup_pairs_blas_tiled_on_skewed_label(spark):

@@ -73,3 +73,9 @@ def test_rows_only_fails_on_empty_result(spark, con):
 
     rec = parity.check(spark, con, empty, None, "")
     assert not parity.passed(rec) and rec["spark_rows"] == 0
+
+
+def test_rows_only_records_the_result_hash(spark, con):
+    rec = parity.check(spark, con, _frame, None, "")
+    expected = parity.canon_hash(pd.DataFrame(ROWS, columns=["id", "s", "x"]))
+    assert rec["spark_hash"] == expected

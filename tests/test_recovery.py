@@ -28,7 +28,10 @@ def test_file_sink_exactly_once_across_restart(spark, tmp_path):
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
+            # a 2 s interval leaves the kill below room to land between
+            # batch 2 and batch 3; back-to-back batches could finish all
+            # four before it
+            .trigger(processingTime="2 seconds")
             .start()
         )
 
