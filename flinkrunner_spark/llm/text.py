@@ -375,8 +375,10 @@ LANGID_PROFILE, LANGID_MISS = _langid_train()
 
 
 def langid_ngram_cols(text: str = "text") -> dict[str, Column]:
-    """Per-language integer NB scores + argmax prediction as JVM-only
-    Column expressions (shared by docs_langid_ngram; reusable in fused
+    """Naive Bayes language-ID as JVM-only Column expressions: the raw
+    8-score vector ``nb_scores_all`` (docs_langid_ngram extracts the
+    per-language columns from it with langid_cols_from_scores), the
+    argmax ``lang_pred`` and the cheap ``lang_scorable`` screen (fused
     pipelines).
 
     Built as SQL strings through ONE F.expr call per column: the
@@ -463,14 +465,6 @@ def langid_ngram_cols(text: str = "text") -> dict[str, Column]:
         f"aggregate({slots}, CAST(array({zeros8}) AS array<bigint>), "
         f"(acc, s) -> zip_with(acc, {w2d_sql}[s], (a, b) -> a + b))"
     )
-    # API-compat per-language columns: each evaluates ONE full pass
-    # (regexp + trigrams + slots + vector fold) and indexes out its
-    # language — single-select consumers stay linear; the two-phase
-    # docs_langid_ngram shares one pass across all nine outputs via
-    # nb_scores_all + langid_cols_from_scores below.
-    scores: dict[str, str] = {
-        lang: f"{all_scores}[{ix}]" for ix, lang in enumerate(LANGID_LANGS)
-    }
     # every weight is a strictly negative integer (round(ln(p)*1e6),
     # p < 1), so score[0] = 0 IFF the slot array is empty IFF the
     # normalized text has no trigram — the same 'und' condition as
@@ -479,10 +473,7 @@ def langid_ngram_cols(text: str = "text") -> dict[str, Column]:
         f"transform(array({all_scores}), sc -> "
         f"{_langid_pred_sql('sc')})[0]"
     )
-    out = {
-        f"nb_score_{lang}": F.expr(scores[lang]) for lang in LANGID_LANGS
-    }
-    out["lang_pred"] = F.expr(pred)
+    out = {"lang_pred": F.expr(pred)}
     # the raw 8-score vector: consumers that need several langid
     # outputs materialize THIS in one projection and extract with
     # langid_cols_from_scores in a second (array indexing is cheap, so
@@ -646,29 +637,16 @@ def _quality_score_from_stats_sql(st: str) -> str:
     )
 
 
-def quality_score_col(toks: Column | None = None) -> Column:
+def quality_score_col() -> Column:
     """Composite quality score expression (rational arithmetic only —
-    engine-exact). Shared by docs_quality and the fused docs_pipeline
-    projection. With no ``toks`` this is ONE tokenize pass (stats
-    struct let-bound, see _quality_stats_sql); passing an explicit
-    token column keeps the legacy per-signal form for callers that
-    already materialized tokens."""
-    if toks is None:
-        st = _quality_stats_sql()
-        return F.expr(
-            f"transform(array({st}), q -> "
-            f"{_quality_score_from_stats_sql('q')})[0]"
-        )
-    n_tok = F.size(toks)
-    tok_chars = F.aggregate(
-        F.transform(toks, F.length), F.lit(0), lambda acc, x: acc + x
-    )
-    punct = F.length(F.regexp_replace(F.lower(F.col("text")), "[a-z0-9\\s]", ""))
-    stop_hits = F.size(F.filter(toks, lambda x: x.isin(*ALL_STOPWORDS)))
-    return (
-        (stop_hits / n_tok) * F.lit(2.0)
-        + F.lit(1.0) / (F.lit(1.0) + (punct / F.length("text")) * F.lit(5.0))
-        + (tok_chars / n_tok) / F.lit(10.0)
+    engine-exact) over ``text``, in ONE tokenize pass (stats struct
+    let-bound, see _quality_stats_sql). Used by the fused docs_pipeline
+    projection; docs_quality derives the same score from its own
+    materialized stats struct."""
+    st = _quality_stats_sql()
+    return F.expr(
+        f"transform(array({st}), q -> "
+        f"{_quality_score_from_stats_sql('q')})[0]"
     )
 
 

@@ -26,15 +26,77 @@ from __future__ import annotations
 import json
 import os
 import re
+import socketserver
 import struct
 import threading
 import time
 import uuid
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from flinkrunner_spark.util import amqp as A
 
 
-class LoopbackAmqpBroker:
+class LoopbackServer:
+    """Lifecycle the socketserver-based harnesses share: ``_listen*``
+    binds an ephemeral localhost port, ``__enter__`` starts the daemon
+    ``serve_forever`` thread, ``__exit__`` shuts down and closes."""
+
+    def _listen(self, server) -> None:
+        self.server = server
+        self.port = server.server_address[1]
+        self.thread = threading.Thread(
+            target=server.serve_forever, daemon=True
+        )
+
+    def _listen_tcp(self, serve) -> None:
+        """Thread-per-connection TCP; ``serve(sock)`` owns a connection."""
+
+        class _Handler(socketserver.BaseRequestHandler):
+            def handle(self):
+                serve(self.request)
+
+        self._listen(_TcpServer(("localhost", 0), _Handler))
+
+    def _listen_http(self, handler) -> None:
+        self._listen(ThreadingHTTPServer(("localhost", 0), handler))
+
+    def __enter__(self):
+        self.thread.start()
+        return self
+
+    def __exit__(self, *exc):
+        self.server.shutdown()
+        self.server.server_close()
+
+
+class _TcpServer(socketserver.ThreadingTCPServer):
+    allow_reuse_address = True
+    daemon_threads = True
+
+
+class LoopbackHttpHandler(BaseHTTPRequestHandler):
+    """Request-handler base for the HTTP harnesses: no access log, JSON
+    replies typed ``content_type``, and the ``Content-Length`` body."""
+
+    content_type = "application/json"
+
+    def log_message(self, *a):
+        pass
+
+    def _json(self, code, obj):
+        body = json.dumps(obj).encode()
+        self.send_response(code)
+        self.send_header("Content-Type", self.content_type)
+        self.send_header("Content-Length", str(len(body)))
+        self.end_headers()
+        self.wfile.write(body)
+
+    def _body(self) -> bytes:
+        n = int(self.headers.get("Content-Length", 0))
+        return self.rfile.read(n) if n else b""
+
+
+class LoopbackAmqpBroker(LoopbackServer):
     """AMQP 0-9-1 broker core: PLAIN handshake, queue.declare,
     basic.publish (messages stored per queue), basic.get (FIFO serve),
     basic.qos / basic.consume / basic.cancel (push deliveries bounded
@@ -43,37 +105,13 @@ class LoopbackAmqpBroker:
     one lock."""
 
     def __init__(self):
-        import socketserver
-
         self.queues: dict[str, list] = {}
         # publisher-confirm fail injection: NACK (and drop) this many
         # publishes on confirm-mode channels — the broker-side loss a
         # fire-and-forget publisher can never observe
         self.nack_publishes = 0
         self.lock = threading.Lock()
-        broker = self
-
-        class _Handler(socketserver.BaseRequestHandler):
-            def handle(self):
-                broker._serve(self.request)
-
-        class _Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-
-        self.server = _Server(("localhost", 0), _Handler)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
-
-    def __enter__(self) -> "LoopbackAmqpBroker":
-        self.thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
+        self._listen_tcp(self._serve)
 
     @property
     def uri(self) -> str:
@@ -434,7 +472,7 @@ def _unquote_ident(s: str) -> str:
     return s
 
 
-class LoopbackCqlServer:
+class LoopbackCqlServer(LoopbackServer):
     """CQL v4 server core that EXECUTES the statement subset the
     Cassandra sink generates — CREATE KEYSPACE/TABLE, single and
     UNLOGGED-BATCH INSERTs (literals parsed with the ''-escape
@@ -444,33 +482,9 @@ class LoopbackCqlServer:
     decoding are inverse operations over real data."""
 
     def __init__(self):
-        import socketserver
-
         self.tables: dict = {}  # (ks, t) -> {"cols": [(name, tid)], "rows": []}
         self.lock = threading.Lock()
-        srv = self
-
-        class _Handler(socketserver.BaseRequestHandler):
-            def handle(self):
-                srv._serve(self.request)
-
-        class _Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-
-        self.server = _Server(("localhost", 0), _Handler)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
-
-    def __enter__(self) -> "LoopbackCqlServer":
-        self.thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
+        self._listen_tcp(self._serve)
 
     # -- statement execution ------------------------------------------------
 
@@ -633,7 +647,7 @@ class LoopbackCqlServer:
                     respond(C.OP_RESULT, rows_body, stream)
 
 
-class LoopbackRestCatalog:
+class LoopbackRestCatalog(LoopbackServer):
     """Iceberg REST catalog core: namespaces + table pointers in memory,
     table metadata served from the registered metadata-location on disk
     (what a real filesystem-warehouse catalog does), commits recorded.
@@ -645,8 +659,6 @@ class LoopbackRestCatalog:
     warehouse credentials."""
 
     def __init__(self, token: str | None = None, s3_client=None):
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
         self.namespaces: set = set()
         self.tables: dict = {}  # (ns, name) -> metadata-location
         self.commits: list = []
@@ -655,18 +667,7 @@ class LoopbackRestCatalog:
         self.s3_client = s3_client
         cat = self
 
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def _json(self, code, obj):
-                raw = json.dumps(obj).encode()
-                self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(raw)))
-                self.end_headers()
-                self.wfile.write(raw)
-
+        class Handler(LoopbackHttpHandler):
             def _authed(self):
                 if cat.required_token is None:
                     return True
@@ -703,8 +704,7 @@ class LoopbackRestCatalog:
                 return self._json(404, {"error": self.path})
 
             def do_POST(self):
-                n = int(self.headers.get("Content-Length", 0))
-                raw = self.rfile.read(n) if n else b""
+                raw = self._body()
                 if self.path == "/v1/oauth2/tokens":
                     if b"grant_type=client_credentials" not in raw:
                         return self._json(400, {"error": "bad grant"})
@@ -745,26 +745,14 @@ class LoopbackRestCatalog:
                     )
                 return self._json(404, {"error": self.path})
 
-        self.server = ThreadingHTTPServer(("localhost", 0), Handler)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
+        self._listen_http(Handler)
 
     @property
     def uri(self) -> str:
         return f"http://localhost:{self.port}"
 
-    def __enter__(self) -> "LoopbackRestCatalog":
-        self.thread.start()
-        return self
 
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
-
-
-class LoopbackKafkaBroker:
+class LoopbackKafkaBroker(LoopbackServer):
     """Kafka broker core speaking the legacy (non-flexible) wire
     versions the jar-free client uses — ApiVersions v0, Metadata v1,
     Produce v3, ListOffsets v1, Fetch v4 — over real size-framed TCP.
@@ -781,8 +769,6 @@ class LoopbackKafkaBroker:
         sasl_plain: tuple[str, str] | None = None, tls: bool = False,
         lso_lag: int = 0, oauth_token: str | None = None,
     ):
-        import socketserver
-
         from flinkrunner_spark.util import kafka as K
 
         self.K = K
@@ -843,29 +829,15 @@ class LoopbackKafkaBroker:
         # and an idempotent producer deduplicate
         self.fail_produce_after_append = 0
         self.lock = threading.Lock()
-        srv = self
+        self._listen_tcp(self._accept)
 
-        class _Handler(socketserver.BaseRequestHandler):
-            def handle(self):
-                sock = self.request
-                if srv._ssl_ctx is not None:
-                    try:
-                        sock = srv._ssl_ctx.wrap_socket(
-                            sock, server_side=True
-                        )
-                    except Exception:
-                        return  # handshake failure: connection dies
-                srv._serve(sock)
-
-        class _Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-
-        self.server = _Server(("localhost", 0), _Handler)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
+    def _accept(self, sock):
+        if self._ssl_ctx is not None:
+            try:
+                sock = self._ssl_ctx.wrap_socket(sock, server_side=True)
+            except Exception:
+                return  # handshake failure: connection dies
+        self._serve(sock)
 
     def _make_tls_context(self):
         """Self-signed localhost certificate via the openssl CLI (the
@@ -892,13 +864,6 @@ class LoopbackKafkaBroker:
         self.cafile = crt
         return ctx
 
-    def __enter__(self) -> "LoopbackKafkaBroker":
-        self.thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
 
     # -- log state ----------------------------------------------------------
 
@@ -1672,7 +1637,7 @@ class LoopbackKafkaBroker:
         return out
 
 
-class LoopbackSchemaRegistry:
+class LoopbackSchemaRegistry(LoopbackServer):
     """Confluent Schema Registry core over real HTTP: POST
     /subjects/{s}/versions (canonical-schema dedup — identical schemas
     get one global id, like the real registry), GET /schemas/ids/{id},
@@ -1682,8 +1647,6 @@ class LoopbackSchemaRegistry:
     dedups/parses with the SAME codec the client encodes against."""
 
     def __init__(self, auth: str | None = None):
-        from http.server import BaseHTTPRequestHandler
-
         # raw Avro JSON by id (the wire serves real schemas); ids dedup
         # on the CANONICAL PARSED form, computed with the same tested
         # codec (`avro_codec.parse_schema`) the clients encode against
@@ -1694,19 +1657,8 @@ class LoopbackSchemaRegistry:
         self.auth = auth
         srv = self
 
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def _json(self, code, obj):
-                body = json.dumps(obj).encode()
-                self.send_response(code)
-                self.send_header(
-                    "Content-Type", "application/vnd.schemaregistry.v1+json"
-                )
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+        class Handler(LoopbackHttpHandler):
+            content_type = "application/vnd.schemaregistry.v1+json"
 
             def _authed(self):
                 if srv.auth is None:
@@ -1775,8 +1727,7 @@ class LoopbackSchemaRegistry:
                         parse_schema,
                     )
 
-                    n = int(self.headers.get("Content-Length", 0))
-                    body = json.loads(self.rfile.read(n).decode())
+                    body = json.loads(self._body().decode())
                     try:
                         schema = json.loads(body["schema"])
                         canon = json.dumps(
@@ -1799,29 +1750,15 @@ class LoopbackSchemaRegistry:
                     return self._json(200, {"id": sid})
                 return self._json(404, {"error": self.path})
 
-        from http.server import ThreadingHTTPServer as _T
-
         self.lock = threading.Lock()
-        self.server = _T(("localhost", 0), Handler)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
+        self._listen_http(Handler)
 
     @property
     def uri(self) -> str:
         return f"http://localhost:{self.port}"
 
-    def __enter__(self) -> "LoopbackSchemaRegistry":
-        self.thread.start()
-        return self
 
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
-
-
-class LoopbackGlueCatalog:
+class LoopbackGlueCatalog(LoopbackServer):
     """AWS Glue Data Catalog core over real HTTP: the x-amz-json-1.1
     POST dispatch (`X-Amz-Target: AWSGlue.<Op>`) for GetDatabase /
     CreateDatabase / GetTable / CreateTable / UpdateTable with Glue's
@@ -1833,25 +1770,14 @@ class LoopbackGlueCatalog:
     committed pointer."""
 
     def __init__(self):
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
         self.databases: dict[str, dict[str, dict]] = {}  # db -> name -> TableInput
         # (registry, name) -> {"versions": {uuid: def}, "order": [uuid],
         #  "latest": uuid} — schema registry store
         self.schemas: dict = {}
         srv = self
 
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def _json(self, code, obj):
-                body = json.dumps(obj).encode()
-                self.send_response(code)
-                self.send_header("Content-Type", "application/x-amz-json-1.1")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+        class Handler(LoopbackHttpHandler):
+            content_type = "application/x-amz-json-1.1"
 
             def do_POST(self):
                 auth = self.headers.get("Authorization", "")
@@ -1862,8 +1788,7 @@ class LoopbackGlueCatalog:
                          "Message": "missing or non-glue SigV4 signature"},
                     )
                 target = self.headers.get("X-Amz-Target", "")
-                n = int(self.headers.get("Content-Length", 0))
-                body = json.loads(self.rfile.read(n).decode() or "{}")
+                body = json.loads(self._body().decode() or "{}")
                 op = target.split(".", 1)[-1]
                 with srv.lock:
                     handler = getattr(srv, f"_op_{op}", None)
@@ -1876,14 +1801,8 @@ class LoopbackGlueCatalog:
                     code, obj = handler(body)
                 return self._json(code, obj)
 
-        from http.server import ThreadingHTTPServer as _T
-
         self.lock = threading.Lock()
-        self.server = _T(("localhost", 0), Handler)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
+        self._listen_http(Handler)
 
     # -- operations (called under the lock) ---------------------------------
 
@@ -2020,16 +1939,8 @@ class LoopbackGlueCatalog:
     def endpoint(self) -> str:
         return f"http://localhost:{self.port}/"
 
-    def __enter__(self) -> "LoopbackGlueCatalog":
-        self.thread.start()
-        return self
 
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
-
-
-class LoopbackKinesis:
+class LoopbackKinesis(LoopbackServer):
     """Kinesis Data Streams core over real HTTP: the x-amz-json-1.1
     dispatch for ListShards / GetShardIterator (TRIM_HORIZON / LATEST /
     AT_TIMESTAMP) / GetRecords / PutRecords, with SigV4 Authorization
@@ -2041,25 +1952,14 @@ class LoopbackKinesis:
     way it does against AWS."""
 
     def __init__(self, num_shards: int = 2):
-        from http.server import BaseHTTPRequestHandler
-
         self.num_shards = int(num_shards)
         # stream -> shard_id -> list[(seq, partition_key, data_b64, ts)]
         self.streams: dict[str, dict[str, list]] = {}
         self._seq = 0
         srv = self
 
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def _json(self, code, obj):
-                body = json.dumps(obj).encode()
-                self.send_response(code)
-                self.send_header("Content-Type", "application/x-amz-json-1.1")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+        class Handler(LoopbackHttpHandler):
+            content_type = "application/x-amz-json-1.1"
 
             def do_POST(self):
                 auth = self.headers.get("Authorization", "")
@@ -2072,8 +1972,7 @@ class LoopbackKinesis:
                          "Message": "missing or non-kinesis SigV4 signature"},
                     )
                 target = self.headers.get("X-Amz-Target", "")
-                n = int(self.headers.get("Content-Length", 0))
-                body = json.loads(self.rfile.read(n).decode() or "{}")
+                body = json.loads(self._body().decode() or "{}")
                 op = target.split(".", 1)[-1]
                 with srv.lock:
                     handler = getattr(srv, f"_op_{op}", None)
@@ -2086,14 +1985,8 @@ class LoopbackKinesis:
                     code, obj = handler(body)
                 return self._json(code, obj)
 
-        from http.server import ThreadingHTTPServer as _T
-
         self.lock = threading.Lock()
-        self.server = _T(("localhost", 0), Handler)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
+        self._listen_http(Handler)
 
     # -- state helpers (under the lock) -------------------------------------
 
@@ -2281,14 +2174,6 @@ class LoopbackKinesis:
     @property
     def endpoint(self) -> str:
         return f"http://localhost:{self.port}/"
-
-    def __enter__(self) -> "LoopbackKinesis":
-        self.thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
 
 
 class LoopbackKinesisEfo:
@@ -2498,7 +2383,7 @@ class LoopbackKinesisEfo:
             pass
 
 
-class LoopbackElasticsearch:
+class LoopbackElasticsearch(LoopbackServer):
     """Elasticsearch core over real HTTP: POST /_bulk (NDJSON
     action/doc pairs, per-item statuses, upsert-by-_id semantics) and
     GET /{index}/_search (match_all with size) — enough to prove the
@@ -2506,31 +2391,17 @@ class LoopbackElasticsearch:
     accounting against a server that actually indexes."""
 
     def __init__(self):
-        from http.server import BaseHTTPRequestHandler
-
         self.indexes: dict[str, dict[str, dict]] = {}  # index -> _id -> doc
         self._auto = 0
         srv = self
 
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def _json(self, code, obj):
-                body = json.dumps(obj).encode()
-                self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
+        class Handler(LoopbackHttpHandler):
             def do_POST(self):
                 if not self.path.rstrip("/").endswith("_bulk"):
                     return self._json(404, {"error": self.path})
-                n = int(self.headers.get("Content-Length", 0))
                 lines = [
                     ln
-                    for ln in self.rfile.read(n).decode().splitlines()
+                    for ln in self._body().decode().splitlines()
                     if ln.strip()
                 ]
                 items = []
@@ -2581,29 +2452,15 @@ class LoopbackElasticsearch:
                     )
                 return self._json(404, {"error": self.path})
 
-        from http.server import ThreadingHTTPServer as _T
-
         self.lock = threading.Lock()
-        self.server = _T(("localhost", 0), Handler)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
+        self._listen_http(Handler)
 
     @property
     def transport(self) -> str:
         return f"http://localhost:{self.port}"
 
-    def __enter__(self) -> "LoopbackElasticsearch":
-        self.thread.start()
-        return self
 
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
-
-
-class LoopbackS3:
+class LoopbackS3(LoopbackServer):
     """Minimal S3 REST endpoint over real HTTP: path-style GetObject /
     PutObject / DeleteObject / ListObjectsV2 (prefix + continuation
     paging, 1000-key pages like the service) against an in-memory
@@ -2619,8 +2476,6 @@ class LoopbackS3:
     PAGE = 1000
 
     def __init__(self, access_key: str = "k", secret_key: str = "s"):
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
         self.objects: dict[tuple[str, str], bytes] = {}
         self.lock = threading.Lock()
         self.access_key = access_key
@@ -2633,10 +2488,7 @@ class LoopbackS3:
                 .replace(">", "&gt;")
             )
 
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
+        class Handler(LoopbackHttpHandler):
             def _check_auth(self, body: bytes = b"") -> bool:
                 import hashlib
                 import hmac as hmac_mod
@@ -2720,8 +2572,7 @@ class LoopbackS3:
                 return bucket, key, parts.query
 
             def do_PUT(self):
-                n = int(self.headers.get("Content-Length", 0))
-                data = self.rfile.read(n)
+                data = self._body()
                 if not self._check_auth(data):
                     return
                 bucket, key, _ = self._bucket_key()
@@ -2785,26 +2636,14 @@ class LoopbackS3:
                 ).encode()
                 self._send(200, body)
 
-        self.server = ThreadingHTTPServer(("localhost", 0), Handler)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
+        self._listen_http(Handler)
 
     @property
     def endpoint(self) -> str:
         return f"http://localhost:{self.port}"
 
-    def __enter__(self) -> "LoopbackS3":
-        self.thread.start()
-        return self
 
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
-
-
-class LoopbackNessie:
+class LoopbackNessie(LoopbackServer):
     """Nessie REST API v2 core over real HTTP: branch-head resolution
     (``GET /trees/{ref}``), content reads
     (``GET /trees/{ref}/contents/{key}``) and CAS commits
@@ -2818,7 +2657,6 @@ class LoopbackNessie:
 
     def __init__(self, token: str | None = None, branch: str = "main"):
         import hashlib
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
         self.branch = branch
         self.token = token
@@ -2832,18 +2670,7 @@ class LoopbackNessie:
 
         self._head_hash = head_hash
 
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def _json(self, code, obj):
-                body = json.dumps(obj).encode()
-                self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
+        class Handler(LoopbackHttpHandler):
             def _auth_ok(self) -> bool:
                 if srv.token is None:
                     return True
@@ -2892,8 +2719,7 @@ class LoopbackNessie:
                 from urllib.parse import unquote
 
                 path = self.path.split("?", 1)[0]
-                n = int(self.headers.get("Content-Length", 0))
-                body = json.loads(self.rfile.read(n).decode() or "{}")
+                body = json.loads(self._body().decode() or "{}")
                 m = re.fullmatch(
                     r"/api/v2/trees/([^/@]+)@([0-9a-f]+)/history/commit",
                     path,
@@ -2938,26 +2764,14 @@ class LoopbackNessie:
                         "name": srv.branch, "type": "BRANCH",
                         "hash": srv._head_hash(srv.commits)}})
 
-        self.server = ThreadingHTTPServer(("localhost", 0), Handler)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
+        self._listen_http(Handler)
 
     @property
     def endpoint(self) -> str:
         return f"http://localhost:{self.port}/api/v2"
 
-    def __enter__(self) -> "LoopbackNessie":
-        self.thread.start()
-        return self
 
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
-
-
-class LoopbackHiveMetastore:
+class LoopbackHiveMetastore(LoopbackServer):
     """Hive Metastore core speaking the Thrift BINARY protocol over
     real unframed TCP — the subset an Iceberg catalog drives
     (get_table / create_table / alter_table / lock / check_lock /
@@ -2979,8 +2793,6 @@ class LoopbackHiveMetastore:
     bytes, so framing or field-id drift fails the exchange."""
 
     def __init__(self):
-        import socketserver
-
         from flinkrunner_spark import hive_metastore as HM
 
         self.HM = HM
@@ -2997,33 +2809,12 @@ class LoopbackHiveMetastore:
         self.queues: dict[tuple[str, str], list[int]] = {}  # FIFO waiters
         self._next_lock = 100
         self.lock = threading.Lock()
-        srv = self
-
-        class _Handler(socketserver.BaseRequestHandler):
-            def handle(self):
-                srv._serve(self.request)
-
-        class _Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-
-        self.server = _Server(("localhost", 0), _Handler)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
+        self._listen_tcp(self._serve)
 
     @property
     def uri(self) -> str:
         return f"thrift://localhost:{self.port}"
 
-    def __enter__(self) -> "LoopbackHiveMetastore":
-        self.thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
 
     # -- wire loop ----------------------------------------------------------
 

@@ -11,117 +11,6 @@ from flinkrunner_spark import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-# ---------------------------------------------------------------------------
-# Two-lane test suite (r14, r13 verdict item 1).
-#
-# The DEFAULT lane (`pytest tests/`) must finish inside the 2670s
-# verification timeout — the full 36-minute suite was truncated in r13,
-# shipping the round with an unverifiable test status. The FULL lane
-# (`SPARK_GRAFT_FULL_TESTS=1 pytest tests/`) runs everything.
-#
-# What moves behind the gate (measured with --durations=150 on the full
-# suite, 2026-08-18, 1956s total at local[8]) — only tests that are
-# REDUNDANT-at-default or statistical, never sole coverage:
-#   * tests/test_streaming_properties.py (whole file, ~80s): randomized
-#     multi-batch property runs — the deterministic single-batch
-#     equivalents in test_streaming stay in the default lane;
-#   * individually-slow (≥~4.3s) model-based / statistical / restart /
-#     multi-batch tests listed below (~950s): each has a fast
-#     deterministic sibling or an oracle-mirror twin in the default
-#     lane. test_recovery's file-sink exactly-once restart test stays
-#     as the default lane's one restart smoke.
-#
-# tests/test_oracle_parity.py stays in the DEFAULT lane: every queries()
-# key runs through flinkrunner_spark.parity.check at sf0.001, so each
-# round re-verifies the whole surface end to end (the lane takes ~850s at
-# local[4]); integration/driver_mirror.py runs the same check at sf0.01.
-#
-# Gated tests report as SKIPPED (visible, never silently dropped).
-# ---------------------------------------------------------------------------
-
-FULL_TESTS = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
-
-_GATED_FILES = ("test_streaming_properties.py",)
-
-_GATED_NODES = (
-    "test_aggregates.py::test_variance_matches_reference_spec",
-    "test_algorithms.py::test_dup_pairs_blas_tiled_on_skewed_label",
-    "test_algorithms.py::test_emb_dup_clusters_matches_union_find",
-    "test_algorithms.py::test_emb_dup_pairs_blas_matches_fold",
-    "test_algorithms.py::test_emb_dup_pairs_default_is_rhlsh_and_blocked_guard",
-    "test_algorithms.py::test_emb_dup_pairs_rhlsh_recall_and_precision",
-    "test_algorithms.py::test_emb_knn_ivf_kmeans_exact_within_probed_cells[sf0.01]",
-    "test_algorithms.py::test_emb_knn_join_label_query_cap_binds",
-    "test_algorithms.py::test_label_centroids_two_level_fold_bounded_and_exact",
-    "test_algorithms.py::test_lsh_real_corpus_under_cap",
-    "test_algorithms.py::test_rhlsh_recall_stats_is_true_recall_at_small_n",
-    "test_algorithms.py::test_rhlsh_super_bucket_cap_and_stats",
-    "test_amqp.py::test_rabbitmq_streaming_source",
-    "test_avro.py::test_container_file_roundtrip_and_jvm_interop",
-    "test_avro.py::test_split_reader_matches_whole_file_reader",
-    "test_avro.py::test_streaming_avro_source_multiblock",
-    "test_aws_signer.py::test_kinesis_batching_and_request_shape",
-    "test_curation.py::test_pii_redact_property",
-    "test_curation_pipeline.py::test_bounded_state_dedup_matches_exact_within_horizon",
-    "test_curation_pipeline.py::test_kill_and_resume_mid_stream",
-    "test_graph.py::test_rounds_reported_and_chain_worst_case",
-    "test_graph.py::test_ten_thousand_chain_converges_logarithmically",
-    "test_iceberg.py::test_delete_files_live_outside_streamed_dir_and_orphan_gc",
-    "test_iceberg.py::test_delete_then_append_keeps_old_positions_dead",
-    "test_iceberg.py::test_delete_where_column_condition_and_time_travel",
-    "test_iceberg.py::test_delete_where_composes_with_upserts",
-    "test_iceberg.py::test_delete_where_partitioned_table",
-    "test_iceberg.py::test_rewrite_position_delete_files_consolidates_and_prunes",
-    "test_iceberg.py::test_rewrite_position_delete_files_keeps_equality_deletes",
-    "test_iceberg.py::test_rewrite_small_files_across_spec_evolution",
-    "test_iceberg.py::test_rewrite_small_files_under_equality_deletes_carries",
-    "test_iceberg.py::test_rewrite_small_files_under_position_deletes",
-    "test_iceberg.py::test_streaming_upsert_sink_commits_per_microbatch",
-    "test_iceberg.py::test_upsert_model_based_random_sequences",
-    "test_iceberg_evolution.py::test_changelog_model_based_random_sequences",
-    "test_iceberg_evolution.py::test_changelog_net_changes_collapses_intermediates",
-    "test_iceberg_evolution.py::test_changelog_net_matches_replayed_full_changelog",
-    "test_iceberg_evolution.py::test_changelog_replays_to_final_state",
-    "test_iceberg_meta.py::test_snapshot_summary_statistics",
-    "test_iceberg_transforms.py::test_delete_where_is_partition_scoped",
-    "test_iceberg_transforms.py::test_transform_partition_pruning",
-    "test_iceberg_transforms.py::test_transform_partitioned_roundtrip",
-    "test_kafka.py::test_kafka_dsv2_writer_batch",
-    "test_kafka.py::test_kafka_native_stream_checkpoint_restart",
-    "test_kafka.py::test_kafka_native_stream_restart_with_trigger_cap",
-    "test_kafka.py::test_kafka_source_native_streaming_micro_batches",
-    "test_kafka_config_parity.py::test_prepared_record_shape_feeds_both_transports",
-    "test_kafka_transactions.py::test_stream_reader_mirrors_offsets_to_group",
-    "test_llm_pruning.py::test_rank_boundary_bounds_matches_tuple_twin",
-    "test_llm_pruning.py::test_rank_boundary_tuples_exact_with_ties",
-    "test_llm_sketches.py::test_docs_heavy_hitters_overcounts_under_collisions",
-    "test_llm_sketches.py::test_stream_emb_dup_pairs_matches_batch",
-    "test_llm_sketches.py::test_stream_heavy_hitters_matches_batch_and_state_is_bounded",
-    "test_loopback_aws.py::test_kinesis_streaming_checkpoint_restart",
-    "test_loopback_aws.py::test_kinesis_streaming_micro_batches",
-    "test_properties.py::test_connected_components_matches_union_find",
-    "test_runner.py::test_avro_stream_job_writes_avro",
-    "test_streaming.py::test_state_blob_growth_bounded_by_keys_not_batches",
-    "test_streaming.py::test_streaming_asof_state_across_batches",
-    "test_streaming.py::test_streaming_control_gate_state_across_batches",
-    "test_streaming.py::test_streaming_dedup_ttl_evicts_and_reemits",
-    "test_streaming.py::test_streaming_hll_merges_state_across_batches",
-    "test_streaming.py::test_watermark_drops_late_rows",
-)
-
-
-def pytest_collection_modifyitems(config, items):
-    if FULL_TESTS:
-        return
-    skip = pytest.mark.skip(
-        reason="full-surface lane: set SPARK_GRAFT_FULL_TESTS=1"
-    )
-    for item in items:
-        name = os.path.basename(item.fspath.strpath)
-        rel = f"{name}::{item.name}"
-        if name in _GATED_FILES or rel.startswith(_GATED_NODES):
-            item.add_marker(skip)
-
 
 @pytest.fixture(scope="session")
 def spark():

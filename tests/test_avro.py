@@ -897,7 +897,7 @@ def test_avro_fallback_honors_configured_schema_and_glob(spark, tmp_path):
         stream.writeStream.format("memory").queryName("avro_conf")
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = sorted(map(tuple, spark.table("avro_conf").collect()))
     assert got == [("a", 1), ("b", 2)]
 

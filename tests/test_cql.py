@@ -15,6 +15,7 @@ import threading
 import pytest
 from pyspark.sql import types as T
 
+from flinkrunner_spark.testing import LoopbackServer
 from flinkrunner_spark.util import cql as C
 
 
@@ -143,40 +144,16 @@ def test_parse_error_body():
 # -- scripted in-process server ---------------------------------------------
 
 
-class FakeCqlServer:
+class FakeCqlServer(LoopbackServer):
     """Speaks the server side of v4: STARTUP→READY (or AUTHENTICATE
     when creds configured), QUERY→Void (statement recorded) or a canned
     Rows result for SELECTs."""
 
     def __init__(self, require_auth: bool = False):
-        import socketserver
-
         self.statements: list[str] = []
         self.lock = threading.Lock()
         self.require_auth = require_auth
-        srv_self = self
-
-        class Handler(socketserver.BaseRequestHandler):
-            def handle(self):
-                srv_self._serve(self.request)
-
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-
-        self.server = Server(("localhost", 0), Handler)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
-
-    def __enter__(self):
-        self.thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
+        self._listen_tcp(self._serve)
 
     def _serve(self, sock):
         def recv_exact(n):

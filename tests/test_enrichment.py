@@ -7,10 +7,8 @@ exercised against a real loopback HTTP endpoint with a hit counter."""
 
 from __future__ import annotations
 
-import json
 import threading
 import time
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
@@ -19,19 +17,17 @@ from flinkrunner_spark.operators.enrichment import (
     enrich_with_http,
     enrich_with_lookup,
 )
+from flinkrunner_spark.testing import LoopbackHttpHandler, LoopbackServer
 
 
-class _JsonEndpoint:
+class _JsonEndpoint(LoopbackServer):
     """GET /user/<id> -> {"tier": ..., "region": ...}; counts hits per
     path; /boom answers 500 (the failure path)."""
 
     def __init__(self):
         srv = self
 
-        class H(BaseHTTPRequestHandler):
-            def log_message(self, *a):  # quiet
-                pass
-
+        class H(LoopbackHttpHandler):
             def do_GET(self):
                 with srv.lock:
                     srv.hits[self.path] = srv.hits.get(self.path, 0) + 1
@@ -40,30 +36,13 @@ class _JsonEndpoint:
                     self.end_headers()
                     return
                 uid = self.path.rsplit("/", 1)[-1]
-                body = json.dumps(
-                    {"tier": f"t{int(uid) % 3}", "region": f"r{uid}"}
-                ).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                self._json(
+                    200, {"tier": f"t{int(uid) % 3}", "region": f"r{uid}"}
+                )
 
         self.hits: dict = {}
         self.lock = threading.Lock()
-        self.server = ThreadingHTTPServer(("localhost", 0), H)
-        self.port = self.server.server_address[1]
-        self.thread = threading.Thread(
-            target=self.server.serve_forever, daemon=True
-        )
-
-    def __enter__(self):
-        self.thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self.server.shutdown()
-        self.server.server_close()
+        self._listen_http(H)
 
 
 def _users(spark, n=12, parts=1):

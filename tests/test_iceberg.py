@@ -574,7 +574,7 @@ def test_streaming_source_picks_up_appended_snapshots(spark, tmp_path):
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True).start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         return sorted(r["id"] for r in spark.read.parquet(out).collect())
 
     assert drain() == [1, 2]
@@ -647,7 +647,10 @@ def test_streaming_upsert_sink_commits_per_microbatch(spark, tmp_path):
          "checkpoint": str(tmp_path / "ck")},
     )
     q = sink.write_stream(stream)
-    q.awaitTermination(120)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     t = I.IcebergFsTable(loc)
     assert sorted(tuple(r) for r in t.read(spark).collect()) == [
         (1, "A", 100), (2, "b", 20), (3, "c", 30)

@@ -357,7 +357,7 @@ def test_read_stream_allows_transform_partitions(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    out.awaitTermination(120)
+    assert out.awaitTermination(120)
     got = spark.sql("SELECT count(*) c FROM ice_transform_stream").first()["c"]
     assert got == 50
     # identity partitions still refuse (constants can't be reattached)

@@ -199,7 +199,7 @@ def test_native_stream_read_committed_bounds_batches(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         assert spark.table("q_sec_committed").count() == 6
 
 
