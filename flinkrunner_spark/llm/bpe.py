@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm.text import tokens_col
+from flinkrunner_spark.tables import load_table
 
 BPE_MERGES = 300  # merge operations to learn
 BPE_WORD_CAP = 65_536  # driver-side word-count rows (count desc, word)
@@ -39,7 +40,7 @@ EOW = "</w>"  # end-of-word marker (standard BPE)
 def word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The training sufficient statistic: (word, n) — one partial-agg
     shuffle of O(distinct words)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(tokens_col()).alias("word"))
         .groupBy("word")
@@ -173,7 +174,7 @@ def docs_bpe_encode(
         [(w, p, len(p)) for w, p in mapping],
         "word string, pieces array<string>, n_p int",
     )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id", F.posexplode(tokens_col()).alias("pos", "word")
     )

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm.text import tokens_col
+from flinkrunner_spark.tables import load_table
 
 CHUNK_SIZE = 64
 CHUNK_STRIDE = 48
@@ -41,7 +42,7 @@ def docs_chunk(
     ``chunk_hash`` is md5 of the space-joined chunk tokens — the join key
     for chunk-level dedup and for locating a chunk's text without storing
     it twice."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     toks = tokens_col()
     base = (
         docs.select("doc_id", toks.alias("t"))

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import tokens_col
+from flinkrunner_spark.tables import load_table
 
 PMI_TOP_K = 50
 PMI_MIN_COUNT = 5
@@ -52,7 +53,7 @@ def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     base = (
         docs.select(tokens_col().alias("t"))
         .withColumn("n", F.size("t"))

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm.text import hex8_long, tokens_col
+from flinkrunner_spark.tables import load_table
 
 # ---------------------------------------------------------------------------
 # eval-set decontamination
@@ -172,7 +173,7 @@ def docs_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts per pattern and md5 of the redacted text (the hash pins the
     full redacted string cross-engine without shipping text through the
     comparator)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", _pii_fixture_text().alias("text")
     )
     return pii_redact(docs).select(
@@ -202,7 +203,7 @@ def docs_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Plan: two explode → map-side-combined aggregations keyed by
     doc_id (token level, 2-gram level) joined on doc_id; the exchanges
     carry (doc_id, gram, count) — never the text."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens_col().alias("toks"))
 
     tok_counts = (

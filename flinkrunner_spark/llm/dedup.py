@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import tokens_col
+from flinkrunner_spark.tables import load_table
 
 MINHASH_K = 8  # minhash permutations
 LSH_BANDS = 4  # bands of 2 rows each
@@ -59,7 +60,7 @@ def _docs_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Tokenize into a materialized column FIRST: higher-order-function
     # lambdas are interpreted, and a non-column child expression would be
     # re-evaluated on every element access (O(tokens × shingles) per doc).
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
+    docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
     toks = docs.select("doc_id", tokens_col().alias("toks"))
@@ -189,7 +190,7 @@ def _candidate_pairs(
 
 def docs_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: group by md5(text), keep the smallest doc_id."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(F.md5("text").alias("content_hash"), "doc_id")
         .groupBy("content_hash")
@@ -275,9 +276,7 @@ def docs_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build() -> DataFrame:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id"
-        )
+        docs = load_table(spark, sf_dir, "documents").select("doc_id")
         pairs = docs_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
         return connected_components(
             pairs, docs, src="doc_a", dst="doc_b",
@@ -302,7 +301,7 @@ def docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bytes but loses whole-stage codegen (2.5× slower warm) — keep the
     explode form.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
+    docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
     # explode_outer avoids the pushed-down size() filter (see _signatures);
@@ -347,9 +346,7 @@ def docs_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the report is ONE map-side-combined aggregate over
     (lang, 2 ints) — no text ever moves. EXACTLY oracled (the recursive
     cluster closure replayed in SQL + the same conditional sums)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "n_chars"
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     cl = docs_dup_clusters(spark, sf_dir)
     keep = (F.col("cluster_id") == F.col("doc_id")).cast("int")
     return (

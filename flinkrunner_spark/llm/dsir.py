@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import hex8_long, tokens_col
+from flinkrunner_spark.tables import load_table
 
 DSIR_BUCKETS = 1024
 DSIR_SALT = ":dsir:v1"
@@ -79,7 +80,7 @@ def _bucketed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_bucketed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     base = (
         docs.select("doc_id", "lang", tokens_col().alias("t"))
         .withColumn("n", F.size("t"))
@@ -118,7 +119,7 @@ def _build_bucketed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def docs_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gumbel-top-64 DSIR sample of `documents` toward the lang='en'
     target: (doc_id, lang, source, logw_nats, key_nats)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     bucketed = _bucketed_features(spark, sf_dir)
     # Both models from one bucket-keyed pass: raw = COUNT(*),
     # target = count of instances from target-language documents.

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm.text import LANG_STOPWORDS, TOKEN_SPLIT, tokens_col
+from flinkrunner_spark.tables import load_table
 
 GOPHER_MIN_WORDS = 20
 GOPHER_MAX_WORDS = 100_000
@@ -81,7 +82,7 @@ def docs_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two-phase projection (r13): the inner select materializes the
     stats struct once per row (see _gopher_stats_sql); the outer
     derives every flag from O(1) struct accesses."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     inner = docs.select("doc_id", F.expr(_gopher_stats_sql()).alias("_gs"))
     n_words = F.expr("_gs.n")
     mean_wl = F.expr("_gs.c") / F.expr("_gs.n")
@@ -109,7 +110,7 @@ def docs_badwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocklist screen: per-document blocked-term occurrence count
     (with multiplicity — auditors want magnitude, not membership) and
     the C4 keep decision (any hit drops the document)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     bad = F.array(*[F.lit(b) for b in BADWORDS])
     n_bad = F.size(
         F.filter(tokens_col(), lambda x: F.array_contains(bad, x))

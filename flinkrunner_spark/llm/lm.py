@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import tokens_col
+from flinkrunner_spark.tables import load_table
 
 
 def release_caches(sf_dir: str | None = None) -> None:
@@ -59,7 +60,7 @@ def docs_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _build_lm(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     base = (
         docs.select("doc_id", tokens_col().alias("t"))
         .withColumn("n", F.size("t"))

@@ -19,6 +19,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 
 from flinkrunner_spark.llm.multimodal import _fake_decode, attach_payload
+from flinkrunner_spark.tables import load_table
 
 MM_FEATURE_DIM = 16
 MM_RESIZE_TARGET = 224  # fit-within-224 (the torchvision default-ish)
@@ -45,9 +46,7 @@ def mm_features(
     100 TB shape: one Arrow-batched map over the payload partition —
     zero shuffle (the explode happens inside the batch), features leave
     the executor as scalars, the blob never does."""
-    with_payload = attach_payload(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    )
+    with_payload = attach_payload(load_table(spark, sf_dir, "documents"))
 
     def run(iterator):
         import pandas as pd
@@ -75,9 +74,7 @@ def mm_resize(
     determinism hook a real resizer would provide via pixel hashes).
     Zero-dimension payloads pass through unresized (flagged), matching
     what a production pipeline does with undecodable media."""
-    with_payload = attach_payload(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    )
+    with_payload = attach_payload(load_table(spark, sf_dir, "documents"))
 
     def run(iterator):
         import pandas as pd

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrunner_spark.tables import load_table
+
 MM_SCHEMA = "doc_id long, n_bytes int, mime string, width int, height int"
 
 
@@ -55,7 +57,7 @@ def extract_metadata(with_payload: DataFrame) -> DataFrame:
 
 
 def mm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return extract_metadata(attach_payload(docs))
 
 
@@ -106,5 +108,5 @@ def sample_frames(with_payload: DataFrame) -> DataFrame:
 
 
 def mm_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return sample_frames(attach_payload(docs))

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm import dedup as D
 from flinkrunner_spark.llm import text as T
+from flinkrunner_spark.tables import load_table
 
 QUALITY_THRESHOLD = 1.58
 
@@ -64,9 +65,7 @@ def docs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The screens themselves reference raw-text expressions, so
     # Catalyst still pushes them to the scan as before; nothing above
     # pulls the final projection back down through the joins.
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    base = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     kept = (
         base.join(exact_keepers, "doc_id", "left_semi")
         .join(cluster_keepers, "doc_id", "left_semi")
@@ -90,7 +89,7 @@ def docs_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, cluster sizes and data order (no RNG, no shuffle — a pure
     projection that scales embarrassingly at 100 TB), and salted so a
     different salt yields an independent re-split. 90/5/5 train/val/test."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     bucket = (
         T.hex8_long(F.concat(F.col("doc_id").cast("string"), F.lit(":split:v1")))
         % 100

@@ -35,6 +35,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from flinkrunner_spark import memo
+from flinkrunner_spark.tables import load_table
 
 OUTLIER_PRUNE_FRAC = 0.2  # farthest-from-prototype fraction flagged
 
@@ -357,9 +358,7 @@ def _ccnet_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         from flinkrunner_spark.llm.lm import docs_lm_score
 
         lm = docs_lm_score(spark, sf_dir).select("doc_id", "xent_nats")
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "lang"
-        )
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
         return lm.join(docs, "doc_id")
 
     # persisted: the bigram LM (two count shuffles over every bigram)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm import text as T
+from flinkrunner_spark.tables import load_table
 
 
 # Per-language sampling rates for the training mix (out of 10000);
@@ -33,7 +34,7 @@ def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and, unlike ``df.sample``, reproducible row-exactly for audit).
     The salt differs from ``docs_split``'s so the sample is independent
     of the train/val/test assignment."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     bucket = (
         T.hex8_long(F.concat(F.col("doc_id").cast("string"), F.lit(":strata:v1")))
         % 10000
@@ -74,7 +75,7 @@ def docs_pack_sequences(
     shard (= worker) boundaries."""
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     key = F.concat(F.col("doc_id").cast("string"), F.lit(":pack:v1"))
     base = docs.select(
         "doc_id",
@@ -110,7 +111,7 @@ def docs_shuffle_shards(
     cluster; no global sort anywhere."""
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     key = F.concat(F.col("doc_id").cast("string"), F.lit(":shuffle:v1"))
     base = docs.select(
         "doc_id",
@@ -144,7 +145,7 @@ def docs_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrives as a broadcast one-row aggregate — no driver round-trip,
     no second shuffle. epochs is a quotient of exact ints, bit-stable
     cross-engine."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     target = F.lit(0)
     for lang, pct in sorted(MIXTURE_TARGETS.items()):
         target = F.when(F.col("lang") == lang, F.lit(pct)).otherwise(target)
@@ -200,9 +201,7 @@ def docs_weighted_sample(
     w > 0 domain."""
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
-        F.col("n_chars") > 0
-    )
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     m = T.hex8_long(
         F.concat(F.col("doc_id").cast("string"), F.lit(":wsample:v1"))
     )

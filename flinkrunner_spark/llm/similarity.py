@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import hex8_long
+from flinkrunner_spark.tables import load_table
 
 COSINE_DUP_THRESHOLD = 0.35  # synthetic embeddings are near-orthogonal; max in-label cosine ~0.51
 KNN_K = 10
@@ -78,7 +79,7 @@ def arrow_matrix(col, name: str):
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return load_table(spark, sf_dir, "embeddings")
 
 
 def emb_knn(spark: SparkSession, sf_dir: str, query_id: int = 0, k: int = KNN_K) -> DataFrame:

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import hex8_long, tokens_col
+from flinkrunner_spark.tables import load_table
 
 CMS_DEPTH = 4  # hash rows (error probability ~ e^-D)
 CMS_WIDTH = 1024  # buckets per row (overcount ~ N·e/W)
@@ -73,7 +74,7 @@ def cms_bucket(tok: Column, row: int, width: int = CMS_WIDTH) -> Column:
 
 
 def _token_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(F.explode(tokens_col()).alias("tok"))
 
 

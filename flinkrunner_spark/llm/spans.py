@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrunner_spark.tables import load_table
+
 
 DUP_SPAN_TOKENS = 20  # span window length (tokens)
 DUP_SPAN_STRIDE = 10  # window stride — 50% overlap catches shifted copies
@@ -63,7 +65,7 @@ def docs_dup_spans(
     OOM. EXACTLY oracled (md5 span hashes reproduce in SQL)."""
     from flinkrunner_spark.llm.text import tokens_col
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select("doc_id", tokens_col().alias("toks"))
     s = _span_windows(t, span, stride).drop("i")
     return (
@@ -109,7 +111,7 @@ def docs_remove_dup_spans(
     EXACTLY oracled (same md5 windows + positional filter in SQL)."""
     from flinkrunner_spark.llm.text import tokens_col
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select("doc_id", tokens_col().alias("toks"))
     w = _span_windows(t, span, stride)
     dup = (

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrunner_spark.tables import load_table
+
 # Canonical tokenization: lowercase, split on non-alphanumeric runs.
 TOKEN_SPLIT = "[^a-z0-9]+"
 # BPE-ish pretokenizer: alphanumeric runs or single non-space symbols.
@@ -54,7 +56,7 @@ def bpe_tokens_col(text: str = "text") -> Column:
 
 def docs_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + BPE-ish pretokens + chars."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     ws = F.filter(F.split(F.col("text"), "\\s+"), lambda x: x != "")
     return docs.select(
         "doc_id",
@@ -112,7 +114,7 @@ def docs_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass ONCE per row into a vote struct; the outer select extracts
     the per-language counts and the same chained-when argmax over them
     (all O(1) struct accesses on identical ints)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     inner = docs.select(
         "doc_id",
         F.col("lang").alias("lang_declared"),
@@ -525,7 +527,7 @@ def docs_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two-phase projection: the inner select runs the expensive scoring
     pass ONCE per row into an 8-score array; the outer select extracts
     the per-language columns and the argmax by O(1) array indexing."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     cols = langid_ngram_cols()
     ext = langid_cols_from_scores("_nb")
     return docs.select(
@@ -658,7 +660,7 @@ def docs_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass ONCE per row into a stats struct; the outer select derives
     all five outputs from the struct's ints (CollapseProject never
     inlines a non-cheap producer referenced 5×)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     inner = docs.select(
         "doc_id", F.expr(_quality_stats_sql()).alias("_qs")
     )
@@ -675,7 +677,7 @@ def docs_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def docs_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint: md5 over the normalized token stream (the
     batch analog of a rolling-hash signature)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.md5(F.array_join(tokens_col(), " ")).alias("fingerprint"),

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm.text import tokens_col
+from flinkrunner_spark.tables import load_table
 
 VOCAB_TOP_K = 100
 
@@ -43,7 +44,7 @@ def docs_topk_ngrams(
     which Spark executes as TakeOrdered (per-partition heaps + a k-row
     driver merge — no global sort, no second shuffle). Ties are broken
     (n, ngram) so the cut is deterministic cross-engine."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     t = docs.select(tokens_col().alias("toks"))
     uni = t.select(F.explode("toks").alias("ngram"), F.lit(1).alias("n"))
     bi = t.select(
@@ -81,7 +82,7 @@ def docs_tfidf(spark: SparkSession, sf_dir: str, top: int = TFIDF_TOP) -> DataFr
     so the cut is deterministic at ulp level."""
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     terms = docs.select(
         "doc_id", F.explode(tokens_col()).alias("term")
     )

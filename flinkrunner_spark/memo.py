@@ -1,11 +1,19 @@
-"""One registry for the corpus-level frames the ``llm.*`` operators share.
+"""One registry for the values a session builds once and reuses.
 
-MinHash signatures, token streams, centroids, IVF assignments and the
-other shared frames are built once per corpus per session and reused by
-every query that reads them. Spark's plan-keyed cache manager cannot do
-this: most of these frames are consumed through differently-projected
-plans, or are iterative (localCheckpoint breaks plan identity). So each
-frame is memoized here, keyed by ``(name, applicationId, sf_dir, *key)``.
+Two families live here:
+
+* ``llm.*`` — the corpus-level frames the LLM operators share: MinHash
+  signatures, token streams, centroids, IVF assignments and the other
+  shared frames are built once per corpus per session and reused by
+  every query that reads them. Spark's plan-keyed cache manager cannot
+  do this: most of these frames are consumed through differently-
+  projected plans, or are iterative (localCheckpoint breaks plan
+  identity).
+* ``tables.schema`` — each input table's inferred Parquet schema
+  (``tables.load_table``), a plain value with nothing to free, so a
+  repeat read of the table starts no schema-inference job.
+
+Each value is keyed by ``(name, applicationId, sf_dir, *key)``.
 
 Lifecycle:
 
@@ -19,11 +27,15 @@ Lifecycle:
 * ``release(prefix, sf_dir)`` frees every DataFrame in the matching
   entries and forgets them. A long-lived service sweeping many corpora
   calls ``release(sf_dir=...)`` after each one; the bench calls
-  ``release()`` between passes so warm numbers measure executed plans,
-  not cache hits.
+  ``release("llm")`` between passes so warm numbers measure executed
+  plans, not cache hits, while the table schemas stay memoized as they
+  do in a long-lived session.
 
-Names are dotted, ``llm.<module>.<frame>``, so ``release("llm.dedup")``
-frees one module's entries and leaves the others alone.
+Names are dotted (``llm.<module>.<frame>``, ``tables.schema``), so
+``release("llm.dedup")`` frees one module's entries and leaves the
+others alone, and
+``release("tables", sf_dir)`` makes the next read of each of that
+directory's tables infer its schema again.
 """
 
 from __future__ import annotations
@@ -35,7 +47,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 # (name, applicationId, sf_dir, *key) -> (value, how to free its frames)
-_ENTRIES: dict[tuple, tuple[Any, Callable[[DataFrame], Any]]] = {}
+_ENTRIES: dict[tuple, tuple[Any, Callable[[DataFrame], Any] | None]] = {}
 _PIN_IDS = itertools.count()
 
 
@@ -54,13 +66,14 @@ def memo(
     sf_dir: str,
     build: Callable[[], Any],
     key: tuple[Hashable, ...] = (),
-    free: Callable[[DataFrame], Any] = DataFrame.unpersist,
+    free: Callable[[DataFrame], Any] | None = DataFrame.unpersist,
 ) -> Any:
     """The memoized ``build()`` result for ``(name, sf_dir, *key)`` in
     this session. The value may be a DataFrame, a tuple holding some, or
     a plain value. ``free`` releases each of its DataFrames (default:
     ``unpersist``; localCheckpoint-backed frames pass
-    ``operators.graph._free_checkpoint``)."""
+    ``operators.graph._free_checkpoint``; a value holding no DataFrame
+    passes ``None``)."""
     k = (name, _current_app(spark), sf_dir, *key)
     if k not in _ENTRIES:
         _ENTRIES[k] = (build(), free)

@@ -15,13 +15,13 @@ from pyspark.sql import functions as F
 
 from flinkrunner_spark.operators.aggregates import DEC, dmean, dsum
 from flinkrunner_spark.operators.joins import topk_per_group
-from flinkrunner_spark.tables import load_tables
+from flinkrunner_spark.tables import load_table, load_tables
 
 
 def q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 pricing summary (flagship). Scan → filter (pushed to
     parquet) → single hash aggregation with partial (map-side) combine."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     price = F.col("l_extendedprice").cast(DEC)
     disc = F.lit(1).cast("decimal(8,6)") - F.col("l_discount").cast("decimal(8,6)")
     tax = F.lit(1).cast("decimal(8,6)") + F.col("l_tax").cast("decimal(8,6)")
@@ -103,7 +103,7 @@ def q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q6-style forecast revenue change: pure filter + scalar aggregate —
     every predicate pushes to the parquet scan (zero joins, zero wide
     shuffles; the canonical predicate-pushdown probe)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     price = F.col("l_extendedprice").cast(DEC)
     disc = F.col("l_discount").cast("decimal(8,6)")
     return (
@@ -688,7 +688,7 @@ def q20_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders by total price per order priority (window top-k)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return topk_per_group(
         orders.select("o_orderpriority", "o_orderkey", "o_totalprice"),
         ["o_orderpriority"],
@@ -699,7 +699,7 @@ def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-count matrix per user (pivot on event type)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     types = ["click", "error", "purchase", "signup", "view"]
     return (
         ev.groupBy("user_id")
@@ -711,7 +711,7 @@ def pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def rollup_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rollup over (returnflag, linestatus) — Table-API GROUP BY ROLLUP."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_rows"), dsum("l_quantity", "sum_qty")
     )
@@ -719,7 +719,7 @@ def rollup_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cube_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cube over (returnflag, linestatus) — all grouping-set combinations."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_rows"), dsum("l_quantity", "sum_qty")
     )

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.streaming.pipelines import ephemeral_checkpoint
+from flinkrunner_spark.tables import load_table
 
 RT_ROOT = "/tmp/flinkrunner_spark_roundtrip"
 
@@ -65,7 +66,7 @@ def iceberg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sinks.factory import IcebergSinkConfig
     from flinkrunner_spark.sources.factory import IcebergSourceConfig
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-docs", sf_dir)
     IcebergSinkConfig(
         "rt",
@@ -100,7 +101,7 @@ def iceberg_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     files only."""
     from flinkrunner_spark.iceberg import IcebergFsTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-docs-pruned", sf_dir)
     t = IcebergFsTable(loc)
     t.overwrite(docs.repartitionByRange(4, "n_chars"))
@@ -164,9 +165,7 @@ def jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     db = _loc(f"derby-{app_tag}", sf_dir)
     url = f"jdbc:derby:{db};create=true"
     table = f"docs_rt_{_uuid.uuid4().hex[:10]}"
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "n_chars"
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     sink_from_config(
         "rt",
         {
@@ -201,7 +200,7 @@ def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerics byte-faithfully."""
     from flinkrunner_spark import serde
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     loc = _loc("avro-docs", sf_dir)
     serde.write_avro_files(docs, loc, codec="deflate", mode="overwrite")
     back = serde.read_avro_files_split(spark, loc).select(
@@ -223,7 +222,7 @@ def rabbitmq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import RabbitMQSourceConfig
     from flinkrunner_spark.testing import LoopbackAmqpBroker
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     with LoopbackAmqpBroker() as broker:
@@ -260,7 +259,7 @@ def cassandra_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.testing import LoopbackCqlServer
     from flinkrunner_spark.util.cql import CqlClient
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     with LoopbackCqlServer() as srv:
@@ -298,7 +297,7 @@ def iceberg_catalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import IcebergSourceConfig
     from flinkrunner_spark.testing import LoopbackRestCatalog
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-catalog", sf_dir)
     shutil.rmtree(loc, ignore_errors=True)
     with LoopbackRestCatalog(token="rt-token") as cat:
@@ -347,7 +346,7 @@ def iceberg_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.iceberg import IcebergFsTable
     from flinkrunner_spark.sinks.factory import IcebergSinkConfig
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
     loc = _loc("iceberg-upsert", sf_dir)
@@ -387,7 +386,7 @@ def iceberg_incremental_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     from flinkrunner_spark.iceberg import IcebergFsTable
     import shutil
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
     loc = _loc("iceberg-incr", sf_dir)
@@ -412,7 +411,7 @@ def iceberg_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.iceberg import IcebergFsTable
     from flinkrunner_spark.sources.factory import IcebergSourceConfig
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-stream", sf_dir)
     shutil.rmtree(loc, ignore_errors=True)
     t = IcebergFsTable(loc)
@@ -449,7 +448,7 @@ def kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import KafkaSourceConfig
     from flinkrunner_spark.testing import LoopbackKafkaBroker
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     with LoopbackKafkaBroker(num_partitions=4) as broker:
@@ -506,7 +505,7 @@ def iceberg_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from flinkrunner_spark.iceberg import IcebergFsTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-posdel", sf_dir)
     shutil.rmtree(loc, ignore_errors=True)
     t = IcebergFsTable(loc)
@@ -530,7 +529,7 @@ def stream_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import KafkaSourceConfig
     from flinkrunner_spark.testing import LoopbackKafkaBroker
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     n_docs = docs.count()
@@ -595,7 +594,7 @@ def kafka_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         LoopbackSchemaRegistry,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     with LoopbackSchemaRegistry(auth="rt:secret") as reg:
@@ -637,7 +636,7 @@ def stream_rabbitmq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import RabbitMQSourceConfig
     from flinkrunner_spark.testing import LoopbackAmqpBroker
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     n_docs = docs.count()
@@ -697,7 +696,7 @@ def iceberg_glue_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import IcebergSourceConfig
     from flinkrunner_spark.testing import LoopbackGlueCatalog
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-glue", sf_dir)
     shutil.rmtree(loc, ignore_errors=True)
     with LoopbackGlueCatalog() as glue:
@@ -745,7 +744,7 @@ def iceberg_nessie_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import IcebergSourceConfig
     from flinkrunner_spark.testing import LoopbackNessie
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-nessie", sf_dir)
     shutil.rmtree(loc, ignore_errors=True)
     with LoopbackNessie(token="rt-token") as srv:
@@ -790,7 +789,7 @@ def kinesis_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import KinesisSourceConfig
     from flinkrunner_spark.testing import LoopbackKinesis
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     with LoopbackKinesis(num_shards=3) as ks:
@@ -841,7 +840,7 @@ def kinesis_efo_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import KinesisSourceConfig
     from flinkrunner_spark.testing import LoopbackKinesis, LoopbackKinesisEfo
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     with LoopbackKinesis(num_shards=3) as ks, LoopbackKinesisEfo(ks) as efo:
@@ -892,7 +891,7 @@ def elasticsearch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sinks.factory import ElasticsearchSinkConfig
     from flinkrunner_spark.testing import LoopbackElasticsearch
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     with LoopbackElasticsearch() as es:
@@ -938,7 +937,7 @@ def stream_kinesis_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import KinesisSourceConfig
     from flinkrunner_spark.testing import LoopbackKinesis
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     n_docs = docs.count()
@@ -1008,7 +1007,7 @@ def kafka_glue_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         LoopbackKafkaBroker,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     with LoopbackGlueCatalog() as glue:
@@ -1093,7 +1092,6 @@ def iceberg_transform_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     original parquet: proves transform-partitioned layout loses nothing
     and the ordinals match DuckDB's epoch arithmetic exactly."""
     from flinkrunner_spark.iceberg import IcebergFsTable
-    from flinkrunner_spark.tables import load_table
 
     events = load_table(spark, sf_dir, "events")
     loc = _loc("iceberg-events-transform", sf_dir)
@@ -1121,7 +1119,7 @@ def iceberg_s3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.testing import LoopbackS3
     from flinkrunner_spark.util.s3 import S3Client
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-docs-s3src", sf_dir)
     if os.path.exists(loc):
         import shutil
@@ -1167,7 +1165,6 @@ def iceberg_spec_evolution_roundtrip(
     single global layout. The doc_id split is deterministic (parity),
     so the oracle is simply the full-corpus profile."""
     from flinkrunner_spark.iceberg import IcebergFsTable
-    from flinkrunner_spark.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-docs-specevo", sf_dir)
@@ -1207,7 +1204,6 @@ def iceberg_transform_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     files, decided from manifest metadata alone."""
     from flinkrunner_spark import iceberg_transforms as T
     from flinkrunner_spark.iceberg import IcebergFsTable
-    from flinkrunner_spark.tables import load_table
 
     events = load_table(spark, sf_dir, "events")
     loc = _loc("iceberg-events-transform", sf_dir)
@@ -1254,7 +1250,7 @@ def stream_curation_to_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flinkrunner_spark.testing import LoopbackKafkaBroker
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
     n_docs = docs.count()
@@ -1337,7 +1333,7 @@ def kafka_sasl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "kafka.sasl.jaas.config": jaas,
         "kafka.isolation.level": "read_committed",
     }
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     with LoopbackKafkaBroker(
@@ -1391,7 +1387,7 @@ def iceberg_hive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import IcebergSourceConfig
     from flinkrunner_spark.testing import LoopbackHiveMetastore
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-hive", sf_dir)
     shutil.rmtree(loc, ignore_errors=True)
     with LoopbackHiveMetastore() as srv:
@@ -1433,7 +1429,7 @@ def firehose_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sinks.factory import FirehoseSinkConfig
     from flinkrunner_spark.testing import LoopbackKinesis
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     deliver = tempfile.mkdtemp(prefix="flinkrunner_firehose_")
@@ -1511,7 +1507,7 @@ def iceberg_changelog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from flinkrunner_spark.iceberg import IcebergFsTable
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
     loc = _loc("iceberg-changelog", sf_dir)
@@ -1562,7 +1558,7 @@ def iceberg_column_evolution_roundtrip(
 
     from flinkrunner_spark.iceberg import IcebergFsTable
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal"
     )
     loc = _loc("iceberg-colevo", sf_dir)
@@ -1607,7 +1603,7 @@ def iceberg_wap_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from flinkrunner_spark.iceberg import IcebergFsTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-wap", sf_dir)
     shutil.rmtree(loc, ignore_errors=True)
     t = IcebergFsTable(loc)
@@ -1643,7 +1639,7 @@ def iceberg_add_files_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from flinkrunner_spark.iceberg import IcebergFsTable
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-addfiles", sf_dir)
     ext = _loc("iceberg-addfiles-ext", sf_dir)
     shutil.rmtree(loc, ignore_errors=True)
@@ -1672,7 +1668,7 @@ def kafka_idempotent_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import KafkaSourceConfig
     from flinkrunner_spark.testing import LoopbackKafkaBroker
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     with LoopbackKafkaBroker(num_partitions=4) as broker:
@@ -1731,7 +1727,7 @@ def kafka_txn_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         produce_records,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     prefix, topic = "curation.docs.tx.id", "docs_txn"
@@ -1817,7 +1813,7 @@ def kafka_rpw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         produce_records,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     group, txn_id = "rpw-group", "curation.rpw.tx.id-0"
@@ -1955,7 +1951,7 @@ def kafka_ts_offsets_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.sources.factory import KafkaSourceConfig
     from flinkrunner_spark.testing import LoopbackKafkaBroker
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     ordered = (
@@ -2040,7 +2036,7 @@ def hive_stats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.hive_metastore import HiveMetastoreClient
     from flinkrunner_spark.testing import LoopbackHiveMetastore
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     row = docs.agg(
         F.min("doc_id").alias("id_lo"),
         F.max("doc_id").alias("id_hi"),
@@ -2115,7 +2111,7 @@ def stream_kafka_ts_offsets_roundtrip(
     from flinkrunner_spark.sources.factory import KafkaSourceConfig
     from flinkrunner_spark.testing import LoopbackKafkaBroker
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
     n_docs = docs.count()

@@ -25,35 +25,45 @@ from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm.text import tokens_col
 from flinkrunner_spark.llm.vocab import VOCAB_TOP_K, bigrams_col
+from flinkrunner_spark.tables import load_table
 
 
-def stream_documents(
-    spark: SparkSession, sf_dir: str, splits: int = 4
+def _file_stream(
+    spark: SparkSession, sf_dir: str, table: str, key: str, root: str,
+    splits: int,
 ) -> DataFrame:
-    """File-backed documents stream: a /tmp copy range-partitioned on
-    doc_id into ``splits`` files with strictly increasing mtimes, read
+    """A stream over a /tmp copy of ``table`` range-partitioned on
+    ``key`` into ``splits`` files with strictly increasing mtimes, read
     with ``maxFilesPerTrigger=1`` — under availableNow that is one
     micro-batch per file, oldest first (the same real-multi-batch
-    harness as ``streaming/pipelines.stream_events``)."""
-    path = (
-        "/tmp/flinkrunner_docstream_src/"
-        + hashlib.md5(f"{sf_dir}:{splits}".encode()).hexdigest()[:16]
-    )
+    harness as ``streaming/pipelines.stream_events``). The copy keeps the
+    table's schema, so the stream takes it from ``load_table`` instead of
+    inferring it from the copy."""
+    path = root + hashlib.md5(f"{sf_dir}:{splits}".encode()).hexdigest()[:16]
+    src = load_table(spark, sf_dir, table)
     if not os.path.exists(path + "/_SUCCESS"):
-        df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        if splits > 1:
-            df = df.repartitionByRange(splits, "doc_id")
+        df = src.repartitionByRange(splits, key) if splits > 1 else src
         df.write.mode("overwrite").parquet(path)
         if splits > 1:
             parts = sorted(glob.glob(path + "/part-*"))
             t0 = time.time() - len(parts) - 1
             for i, p in enumerate(parts):
                 os.utime(p, (t0 + i, t0 + i))
-    schema = spark.read.parquet(path).schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(src.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
+    )
+
+
+def stream_documents(
+    spark: SparkSession, sf_dir: str, splits: int = 4
+) -> DataFrame:
+    """File-backed documents stream, one micro-batch per file
+    (``_file_stream``), range-partitioned on doc_id."""
+    return _file_stream(
+        spark, sf_dir, "documents", "doc_id",
+        "/tmp/flinkrunner_docstream_src/", splits,
     )
 
 
@@ -130,25 +140,9 @@ def stream_embeddings(
 ) -> DataFrame:
     """File-backed embeddings stream — same one-micro-batch-per-file
     harness as ``stream_documents``, range-partitioned on vec_id."""
-    path = (
-        "/tmp/flinkrunner_embstream_src/"
-        + hashlib.md5(f"{sf_dir}:{splits}".encode()).hexdigest()[:16]
-    )
-    if not os.path.exists(path + "/_SUCCESS"):
-        df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        if splits > 1:
-            df = df.repartitionByRange(splits, "vec_id")
-        df.write.mode("overwrite").parquet(path)
-        if splits > 1:
-            parts = sorted(glob.glob(path + "/part-*"))
-            t0 = time.time() - len(parts) - 1
-            for i, p in enumerate(parts):
-                os.utime(p, (t0 + i, t0 + i))
-    schema = spark.read.parquet(path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+    return _file_stream(
+        spark, sf_dir, "embeddings", "vec_id",
+        "/tmp/flinkrunner_embstream_src/", splits,
     )
 
 
@@ -218,7 +212,7 @@ def stream_emb_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band", "code", F.explode("ids").alias("vec_id")
     ).write.mode("overwrite").parquet(snap)
     frozen_codes = spark.read.parquet(snap)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     return rh_pairs_from_codes(
         emb, frozen_codes, nbits, probes,
         threshold=COSINE_DUP_THRESHOLD,

@@ -17,8 +17,6 @@ from flinkrunner_spark.operators.control import filter_by_control
 from flinkrunner_spark.operators.dedup import dedup_first, dedup_sbf
 from flinkrunner_spark.operators.enrichment import enrich_broadcast
 from flinkrunner_spark.operators.joins import asof_join_merge
-
-
 from flinkrunner_spark.tables import load_table
 
 
@@ -331,7 +329,7 @@ def enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast enrichment of events with customer attributes (the Spark
     form of EnrichmentAsyncFunction's cached lookup)."""
     ev = _events(spark, sf_dir)
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = load_table(spark, sf_dir, "customer")
     return enrich_broadcast(
         ev,
         cust,
@@ -500,7 +498,7 @@ def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flinkrunner_spark.streaming import pipelines as P
 
     ev = P.stream_events(spark, sf_dir, splits=4)
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = load_table(spark, sf_dir, "customer")
     return P.run_to_memory(
         spark, P.streaming_enrich(ev, cust), "q_stream_enrich"
     )
