@@ -19,12 +19,15 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil as _shutil
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flinkrunner_spark.streaming.pipelines import ephemeral_checkpoint
+from flinkrunner_spark.streaming.pipelines import (
+    drain_partitions,
+    ephemeral_checkpoint,
+)
 from flinkrunner_spark.tables import load_table
 
 RT_ROOT = "/tmp/flinkrunner_spark_roundtrip"
@@ -33,6 +36,27 @@ RT_ROOT = "/tmp/flinkrunner_spark_roundtrip"
 def _loc(kind: str, sf_dir: str) -> str:
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     return os.path.join(RT_ROOT, f"{kind}-{tag}")
+
+
+def _drain_to_memory(sdf: DataFrame, name: str) -> DataFrame:
+    """Run a connector stream into the memory table ``name`` until its
+    source has nothing left, then stop it; return the table. The default
+    trigger stays (not availableNow): the Python stream sources split the
+    catch-up into several micro-batches through their ``max.*.per.trigger``
+    caps, and those batch seams are what the stream mirrors test."""
+    ckpt = ephemeral_checkpoint()
+    q = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return sdf.sparkSession.sql(f"SELECT * FROM {name}")
 
 
 def _lang_profile(df: DataFrame) -> DataFrame:
@@ -145,7 +169,6 @@ def jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dirs would otherwise accumulate in RT_ROOT — GC stale ones (other
     # sessions, mtime > 1h: old enough that their JVMs are gone, so no
     # live lock is broken; a CONCURRENT session's fresh dir survives).
-    import shutil as _shutil
     import time as _time
 
     app_tag = hashlib.md5(
@@ -159,7 +182,7 @@ def jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             full = os.path.join(RT_ROOT, d)
             try:
                 if os.path.getmtime(full) < cutoff:
-                    _shutil.rmtree(full, ignore_errors=True)
+                    shutil.rmtree(full, ignore_errors=True)
             except OSError:
                 pass
     db = _loc(f"derby-{app_tag}", sf_dir)
@@ -291,8 +314,6 @@ def iceberg_catalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the in-process loopback catalog (`flinkrunner_spark.testing`) over
     real HTTP with bearer auth via the oauth2 client-credentials
     exchange."""
-    import shutil
-
     from flinkrunner_spark.sinks.factory import IcebergSinkConfig
     from flinkrunner_spark.sources.factory import IcebergSourceConfig
     from flinkrunner_spark.testing import LoopbackRestCatalog
@@ -350,8 +371,6 @@ def iceberg_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
     loc = _loc("iceberg-upsert", sf_dir)
-    import shutil
-
     shutil.rmtree(loc, ignore_errors=True)  # upserts chain; start clean
     sink = IcebergSinkConfig(
         "rt",
@@ -384,7 +403,6 @@ def iceberg_incremental_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     original parquet, so a green row proves snapshot-range file
     selection returns exactly the appended delta, no more, no less."""
     from flinkrunner_spark.iceberg import IcebergFsTable
-    import shutil
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
@@ -406,8 +424,6 @@ def iceberg_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     must profile identically to the original parquet — proving the
     file-stream-over-immutable-commits design loses nothing and
     duplicates nothing across snapshot boundaries."""
-    import shutil
-
     from flinkrunner_spark.iceberg import IcebergFsTable
     from flinkrunner_spark.sources.factory import IcebergSourceConfig
 
@@ -501,8 +517,6 @@ def iceberg_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor to be counted once and every victim zero times. The 100 TB
     case for position deletes: a 0.1% delete costs one filtered scan +
     tiny tombstone files, not a table rewrite."""
-    import shutil
-
     from flinkrunner_spark.iceberg import IcebergFsTable
 
     docs = load_table(spark, sf_dir, "documents")
@@ -548,20 +562,7 @@ def stream_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
              # ≥3 catch-up micro-batches at any sf ≥ 0.001
              "max.offsets.per.trigger": max(n_docs // 3, 64)},
         ).load(spark)
-        _ck = ephemeral_checkpoint()
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("q_kafka_stream_rt")
-            .option("checkpointLocation", _ck)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            _shutil.rmtree(_ck, ignore_errors=True)
-        back = spark.sql("SELECT value FROM q_kafka_stream_rt")
-        parsed = back.select(
+        parsed = _drain_to_memory(sdf, "q_kafka_stream_rt").select(
             F.from_json(
                 F.col("value").cast("string"),
                 ("doc_id long, text string, lang string, "
@@ -656,21 +657,8 @@ def stream_rabbitmq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
              # ≥3 catch-up micro-batches at any sf ≥ 0.001
              "max.messages.per.read": max(n_docs // 3, 64)},
         ).load(spark)
-        _ck = ephemeral_checkpoint()
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("q_rabbitmq_stream_rt")
-            .option("checkpointLocation", _ck)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            _shutil.rmtree(_ck, ignore_errors=True)
-        back = spark.sql(
-            "SELECT doc_id, text, lang, source, n_chars "
-            "FROM q_rabbitmq_stream_rt"
+        back = _drain_to_memory(sdf, "q_rabbitmq_stream_rt").select(
+            "doc_id", "text", "lang", "source", "n_chars"
         )
         profile = _lang_profile(back)
         rows = profile.collect()
@@ -690,8 +678,6 @@ def iceberg_glue_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the glue wiring changes discovery, not data — the reference's
     catalog.type=glue path (IcebergCommonConfig.scala:14-78) without
     the iceberg-aws jar."""
-    import shutil
-
     from flinkrunner_spark.sinks.factory import IcebergSinkConfig
     from flinkrunner_spark.sources.factory import IcebergSourceConfig
     from flinkrunner_spark.testing import LoopbackGlueCatalog
@@ -738,8 +724,6 @@ def iceberg_nessie_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     auth. Exactly oracled: proves the nessie wiring changes discovery,
     not data — the reference's catalog.type=nessie path
     (IcebergCommonConfig.scala:56-71) without the iceberg-nessie jar."""
-    import shutil
-
     from flinkrunner_spark.sinks.factory import IcebergSinkConfig
     from flinkrunner_spark.sources.factory import IcebergSourceConfig
     from flinkrunner_spark.testing import LoopbackNessie
@@ -960,19 +944,7 @@ def stream_kinesis_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
              # ≥3 catch-up micro-batches at any sf ≥ 0.001
              "max.records.per.shard": max(n_docs // 9, 32), **creds},
         ).load(spark)
-        _ck = ephemeral_checkpoint()
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("q_kinesis_stream_rt")
-            .option("checkpointLocation", _ck)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            _shutil.rmtree(_ck, ignore_errors=True)
-        parsed = spark.sql("SELECT value FROM q_kinesis_stream_rt").select(
+        parsed = _drain_to_memory(sdf, "q_kinesis_stream_rt").select(
             F.from_json(
                 F.col("value"),
                 ("doc_id long, text string, lang string, "
@@ -1096,8 +1068,6 @@ def iceberg_transform_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     loc = _loc("iceberg-events-transform", sf_dir)
     if os.path.exists(loc):
-        import shutil
-
         shutil.rmtree(loc)
     t = IcebergFsTable(loc)
     t.append(events, partition_by=["day(ts)", "bucket[8](user_id)"])
@@ -1122,16 +1092,12 @@ def iceberg_s3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-docs-s3src", sf_dir)
     if os.path.exists(loc):
-        import shutil
-
         shutil.rmtree(loc)
     t = IcebergFsTable(loc)
     t.append(docs)
     t.delete_where(spark, "doc_id % 5 = 0")
     cache = _loc("iceberg-docs-s3cache", sf_dir)
     if os.path.exists(cache):
-        import shutil
-
         shutil.rmtree(cache)
     with LoopbackS3() as s3:
         client = S3Client(s3.endpoint, access_key="k", secret_key="s")
@@ -1169,8 +1135,6 @@ def iceberg_spec_evolution_roundtrip(
     docs = load_table(spark, sf_dir, "documents")
     loc = _loc("iceberg-docs-specevo", sf_dir)
     if os.path.exists(loc):
-        import shutil
-
         shutil.rmtree(loc)
     t = IcebergFsTable(loc)
     t.append(docs.filter(F.col("doc_id") % 2 == 0), partition_by=["lang"])
@@ -1240,8 +1204,6 @@ def stream_curation_to_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the profile to match; kill-and-resume (checkpoint restart
     mid-stream plus a replayed-batch no-op) is pinned by
     tests/test_curation_pipeline.py."""
-    import shutil
-
     from flinkrunner_spark.iceberg import IcebergFsTable
     from flinkrunner_spark.sinks.factory import KafkaSinkConfig
     from flinkrunner_spark.sources.factory import KafkaSourceConfig
@@ -1278,26 +1240,15 @@ def stream_curation_to_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).load(spark)
         # size state/shuffle partitions TO THE DRAIN — the backlog is
         # already counted (n_docs), so the partition count derives from
-        # drain volume via drain_state_partitions (r14: replaces the
-        # literal "8" the r13 verdict flagged — at a 100 TB backlog the
-        # same rule yields thousands of stores spread over the cluster);
-        # restored after the query
-        from flinkrunner_spark.streaming.pipelines import (
-            drain_state_partitions,
-        )
-
-        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(drain_state_partitions(spark, n_rows=n_docs)),
-        )
-        q = start_curation_to_iceberg(stream, table, ckpt)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-            _shutil.rmtree(ckpt, ignore_errors=True)
+        # drain volume (at a 100 TB backlog the same rule yields
+        # thousands of stores spread over the cluster)
+        with drain_partitions(spark, n_rows=n_docs):
+            q = start_curation_to_iceberg(stream, table, ckpt)
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+                shutil.rmtree(ckpt, ignore_errors=True)
     back = IcebergFsTable(table).read(spark)
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1381,8 +1332,6 @@ def iceberg_hive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (IcebergCommonConfig.scala:56-71) without the HiveCatalog jar.
     Registered in queries() from the r11 cap rotation (the r10 cap was
     exactly full with changed-file keys)."""
-    import shutil
-
     from flinkrunner_spark.sinks.factory import IcebergSinkConfig
     from flinkrunner_spark.sources.factory import IcebergSourceConfig
     from flinkrunner_spark.testing import LoopbackHiveMetastore
@@ -1423,7 +1372,6 @@ def firehose_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base64 record framing, batch flush boundaries and the NDJSON
     delivery layout must all be lossless. Registered in queries() from
     the r11 cap rotation."""
-    import shutil
     import tempfile
 
     from flinkrunner_spark.sinks.factory import FirehoseSinkConfig
@@ -1503,8 +1451,6 @@ def iceberg_changelog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the append scans only its files, the upsert pays one key semi-join
     against the parent state, the delete reads only tombstoned target
     files; no commit re-diffs the table."""
-    import shutil
-
     from flinkrunner_spark.iceberg import IcebergFsTable
 
     cust = load_table(spark, sf_dir, "customer").select(
@@ -1554,8 +1500,6 @@ def iceberg_column_evolution_roundtrip(
     selects the same projection straight from the original parquet — a
     green row proves rename resolution, type widening and null-filling
     each produce exact values, not just compatible schemas."""
-    import shutil
-
     from flinkrunner_spark.iceberg import IcebergFsTable
 
     cust = load_table(spark, sf_dir, "customer").select(
@@ -1599,8 +1543,6 @@ def iceberg_wap_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: staging costs exactly the data writes (same files,
     different ref); audit reads run against the branch ref; publication
     is metadata-only — no data or manifest IO at publish time."""
-    import shutil
-
     from flinkrunner_spark.iceberg import IcebergFsTable
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1635,7 +1577,6 @@ def iceberg_add_files_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths and sequence numbers integrate with written files in one
     scan."""
     import glob
-    import shutil
 
     from flinkrunner_spark.iceberg import IcebergFsTable
 
@@ -2137,19 +2078,7 @@ def stream_kafka_ts_offsets_roundtrip(
              "starting.offset": str(TS_OFF_BASE + TS_OFF_LO),
              "max.offsets.per.trigger": max(n_docs // 3, 64)},
         ).load(spark)
-        _ck = ephemeral_checkpoint()
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("q_kafka_tsst")
-            .option("checkpointLocation", _ck)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            _shutil.rmtree(_ck, ignore_errors=True)
-        parsed = spark.sql("SELECT value FROM q_kafka_tsst").select(
+        parsed = _drain_to_memory(sdf, "q_kafka_tsst").select(
             F.from_json(
                 F.col("value").cast("string"),
                 ("doc_id long, text string, lang string, "

@@ -15,56 +15,23 @@ O(corpus)), and the top-k cut applied on the final table.
 
 from __future__ import annotations
 
-import glob
 import hashlib
-import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm.text import tokens_col
 from flinkrunner_spark.llm.vocab import VOCAB_TOP_K, bigrams_col
+from flinkrunner_spark.streaming import pipelines as P
 from flinkrunner_spark.tables import load_table
-
-
-def _file_stream(
-    spark: SparkSession, sf_dir: str, table: str, key: str, root: str,
-    splits: int,
-) -> DataFrame:
-    """A stream over a /tmp copy of ``table`` range-partitioned on
-    ``key`` into ``splits`` files with strictly increasing mtimes, read
-    with ``maxFilesPerTrigger=1`` — under availableNow that is one
-    micro-batch per file, oldest first (the same real-multi-batch
-    harness as ``streaming/pipelines.stream_events``). The copy keeps the
-    table's schema, so the stream takes it from ``load_table`` instead of
-    inferring it from the copy."""
-    path = root + hashlib.md5(f"{sf_dir}:{splits}".encode()).hexdigest()[:16]
-    src = load_table(spark, sf_dir, table)
-    if not os.path.exists(path + "/_SUCCESS"):
-        df = src.repartitionByRange(splits, key) if splits > 1 else src
-        df.write.mode("overwrite").parquet(path)
-        if splits > 1:
-            parts = sorted(glob.glob(path + "/part-*"))
-            t0 = time.time() - len(parts) - 1
-            for i, p in enumerate(parts):
-                os.utime(p, (t0 + i, t0 + i))
-    return (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
 
 
 def stream_documents(
     spark: SparkSession, sf_dir: str, splits: int = 4
 ) -> DataFrame:
-    """File-backed documents stream, one micro-batch per file
-    (``_file_stream``), range-partitioned on doc_id."""
-    return _file_stream(
-        spark, sf_dir, "documents", "doc_id",
-        "/tmp/flinkrunner_docstream_src/", splits,
-    )
+    """File-backed documents stream, one micro-batch per range split of
+    doc_id (``streaming.pipelines.file_stream``)."""
+    return P.table_stream(spark, sf_dir, "documents", "doc_id", splits)
 
 
 def stream_topk_ngrams(
@@ -74,8 +41,6 @@ def stream_topk_ngrams(
     docstring). The stream runs FOUR real micro-batches; the memory
     sink's complete-mode table holds the cumulative counts and the
     deterministic (cnt desc, n, ngram) cut picks the final top-k."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     docs = stream_documents(spark, sf_dir, splits=4)
     t = docs.select(tokens_col().alias("toks"))
     uni = t.select(F.explode("toks").alias("ngram"), F.lit(1).alias("n"))
@@ -111,8 +76,6 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms_bucket,
         rank_heavy_hitters,
     )
-    from flinkrunner_spark.streaming import pipelines as P
-
     docs = stream_documents(spark, sf_dir, splits=4)
     toks = docs.select(F.explode(tokens_col()).alias("tok"))
     cells = F.array(
@@ -138,12 +101,9 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_embeddings(
     spark: SparkSession, sf_dir: str, splits: int = 4
 ) -> DataFrame:
-    """File-backed embeddings stream — same one-micro-batch-per-file
-    harness as ``stream_documents``, range-partitioned on vec_id."""
-    return _file_stream(
-        spark, sf_dir, "embeddings", "vec_id",
-        "/tmp/flinkrunner_embstream_src/", splits,
-    )
+    """File-backed embeddings stream — the same harness as
+    ``stream_documents``, range-partitioned on vec_id."""
+    return P.table_stream(spark, sf_dir, "embeddings", "vec_id", splits)
 
 
 def stream_emb_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,8 +133,6 @@ def stream_emb_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         rh_codes_mapper,
         rh_pairs_from_codes,
     )
-    from flinkrunner_spark.streaming import pipelines as P
-
     # the SAME fixed-point (bits, probes) resolution as the batch twin,
     # so the streaming index and the batch oracle always agree
     nbits, probes = resolve_rh_plan(

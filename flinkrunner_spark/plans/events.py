@@ -12,11 +12,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.operators import aggregates as A
-from flinkrunner_spark.operators import windows as W
 from flinkrunner_spark.operators.control import filter_by_control
 from flinkrunner_spark.operators.dedup import dedup_first, dedup_sbf
 from flinkrunner_spark.operators.enrichment import enrich_broadcast
 from flinkrunner_spark.operators.joins import asof_join_merge
+from flinkrunner_spark.streaming import pipelines as P
 from flinkrunner_spark.tables import load_table
 
 
@@ -24,10 +24,22 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
 
+def _basic_agg(ev: DataFrame) -> DataFrame:
+    return ev.groupBy("event_type").agg(*A.basic_agg_exprs("value"))
+
+
+def _stream_basic_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _basic_agg(
+        P.stream_events(spark, sf_dir, lateness="365 days", splits=4).drop(
+            "props"
+        )
+    )
+
+
 def agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All order-independent reference aggregates keyed by event_type
     (FlinkRunnerAggregateFunction applied per key)."""
-    return _events(spark, sf_dir).groupBy("event_type").agg(*A.basic_agg_exprs("value"))
+    return _basic_agg(_events(spark, sf_dir))
 
 
 def stream_agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,14 +49,9 @@ def stream_agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every aggregate is a decimal-exact (order-independent) expression,
     so the streamed result is bit-identical to the batch oracle no
     matter how the input splits into micro-batches."""
-    from flinkrunner_spark.streaming import pipelines as P
-
-    ev = P.stream_events(spark, sf_dir, lateness="365 days", splits=4).drop(
-        "props"
-    )
-    agg = ev.groupBy("event_type").agg(*A.basic_agg_exprs("value"))
     return P.run_to_memory(
-        spark, agg, "q_stream_agg_basic", mode="complete"
+        spark, _stream_basic_agg(spark, sf_dir), "q_stream_agg_basic",
+        mode="complete",
     )
 
 
@@ -56,15 +63,9 @@ def stream_agg_basic_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     The mirror keeps the last emission per key, which — cumulative state,
     order-independent decimal-exact aggregates — is bit-identical to the
     batch `agg_basic` oracle across any micro-batch split."""
-    from flinkrunner_spark.streaming import pipelines as P
-
-    def build(s: SparkSession) -> DataFrame:
-        ev = P.stream_events(s, sf_dir, lateness="365 days", splits=4).drop(
-            "props"
-        )
-        return ev.groupBy("event_type").agg(*A.basic_agg_exprs("value"))
-
-    return P.run_updates_final(spark, build, ["event_type"])
+    return P.run_updates_final(
+        spark, _stream_basic_agg(spark, sf_dir), ["event_type"]
+    )
 
 
 def agg_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -134,52 +135,22 @@ def win_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """windowedAggregation(EMA): the order-dependent EMA aggregate applied
     per tumbling 1-hour window — the exact composition the reference's
     FlinkRunnerAggregateFunction runs inside window state."""
-    ev = _events(spark, sf_dir)
-    vals = A._sorted_values(["ts", "event_id"], "value")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("_w"), "event_type")
-        .agg(vals.alias("_vals"))
-        .select(
-            F.col("_w.start").alias("window_start"),
-            F.col("_w.end").alias("window_end"),
-            "event_type",
-            F.round(A.ema_fold(F.col("_vals"), 0.7), 6).alias("agg_ema"),
-        )
-    )
+    return P.tumbling_ema_agg(_events(spark, sf_dir))
 
 
 def win_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows per event_type."""
-    return W.tumbling_agg(
-        _events(spark, sf_dir),
-        "ts",
-        "1 hour",
-        ["event_type"],
-        [F.count(F.lit(1)).alias("n"), A.dsum("value", "total")],
-    )
+    return P.streaming_tumbling_agg(_events(spark, sf_dir))
 
 
 def win_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1-hour windows every 30 minutes per event_type."""
-    return W.sliding_agg(
-        _events(spark, sf_dir),
-        "ts",
-        "1 hour",
-        "30 minutes",
-        ["event_type"],
-        [F.count(F.lit(1)).alias("n"), A.dsum("value", "total")],
-    )
+    return P.streaming_sliding_agg(_events(spark, sf_dir))
 
 
 def win_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (5-minute gap) per user: session bounds + stats."""
-    return W.session_agg(
-        _events(spark, sf_dir),
-        "ts",
-        "5 minutes",
-        ["user_id"],
-        [F.count(F.lit(1)).alias("n"), A.dsum("value", "total")],
-    )
+    return P.streaming_session_agg(_events(spark, sf_dir))
 
 
 def dedup_first_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,8 +341,6 @@ def stream_win_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches; complete-mode window aggregates are micro-batch-split
     independent (window state accumulates across triggers), so the result
     equals the batch ``win_tumbling`` plan and shares its exact oracle."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev = P.stream_events(spark, sf_dir, splits=4)
     return P.run_to_memory(
         spark, P.streaming_tumbling_agg(ev), "q_stream_win_tumbling",
@@ -383,8 +352,6 @@ def stream_win_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured-Streaming session windows run end-to-end over FOUR
     micro-batches; session-window merging across triggers converges to
     the batch result, so it shares ``win_session``'s exact oracle."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev = P.stream_events(spark, sf_dir, splits=4)
     return P.run_to_memory(
         spark, P.streaming_session_agg(ev), "q_stream_win_session",
@@ -396,8 +363,6 @@ def stream_win_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured-Streaming sliding windows (1h every 30min) end-to-end
     over FOUR micro-batches; complete-mode window state accumulates
     across triggers, so it shares ``win_sliding``'s exact oracle."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev = P.stream_events(spark, sf_dir, splits=4)
     return P.run_to_memory(
         spark, P.streaming_sliding_agg(ev), "q_stream_win_sliding",
@@ -419,8 +384,6 @@ def stream_win_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact oracle: the batch windows whose end ≤ final watermark — on the
     4-split event-time-ordered input every window except the open tail
     is closed by end of stream."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev = P.stream_events(spark, sf_dir, lateness=APPEND_LATENESS, splits=4)
     return P.run_to_memory(
         spark,
@@ -434,8 +397,6 @@ def stream_win_sliding_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (1 h every 30 min) in append mode with watermark
     finalization; same closed-window-subset oracle as the tumbling
     variant."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev = P.stream_events(spark, sf_dir, lateness=APPEND_LATENESS, splits=4)
     return P.run_to_memory(
         spark,
@@ -449,8 +410,6 @@ def stream_win_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (5-min gap) in append mode: a session emits once
     the watermark passes its end (no further event can extend it), state
     evicted. Oracle: batch sessions whose end ≤ final watermark."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev = P.stream_events(spark, sf_dir, lateness=APPEND_LATENESS, splits=4)
     return P.run_to_memory(
         spark,
@@ -464,8 +423,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join run end-to-end: purchases matched to
     same-user clicks within a 1-hour lookback, both sides unbounded
     streams with watermarks. Exact SQL oracle (bounded inner join)."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev1 = P.stream_events(spark, sf_dir, lateness="2 hours", splits=4)
     ev2 = P.stream_events(spark, sf_dir, lateness="2 hours", splits=4)
     purchases = ev1.filter(F.col("event_type") == "purchase")
@@ -479,15 +436,14 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_win_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming windowed EMA (order-dependent aggregate under incremental
-    window state) run end-to-end over FOUR micro-batches; the per-window
-    collect_list state accumulates in arrival order but the fold sorts at
-    emission, so the result is arrival-order-independent by construction
-    and shares ``win_ema``'s exact oracle."""
-    from flinkrunner_spark.streaming import pipelines as P
-
+    window state) run end-to-end over FOUR micro-batches with
+    ``win_ema``'s own builder; the per-window collect_list state
+    accumulates in arrival order but the fold sorts at emission, so the
+    result is arrival-order-independent by construction and shares
+    ``win_ema``'s exact oracle."""
     ev = P.stream_events(spark, sf_dir, splits=4)
     return P.run_to_memory(
-        spark, P.streaming_ema_agg(ev), "q_stream_win_ema", mode="complete"
+        spark, P.tumbling_ema_agg(ev), "q_stream_win_ema", mode="complete"
     )
 
 
@@ -495,8 +451,6 @@ def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static broadcast enrichment run end-to-end over FOUR
     micro-batches; stateless per micro-batch (the dimension is static),
     so it shares ``enrich_events``'s exact oracle."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev = P.stream_events(spark, sf_dir, splits=4)
     cust = load_table(spark, sf_dir, "customer")
     return P.run_to_memory(
@@ -511,8 +465,6 @@ def stream_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries(): the TWS python worker needs google.protobuf, absent in
     this environment (streaming/pipelines.streaming_running_agg raises a
     clear gate error) — tests cover both branches."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev = P.stream_events(spark, sf_dir)
     sink = P.run_to_memory(
         spark, P.streaming_running_agg(ev), "q_stream_running_agg"
@@ -538,8 +490,6 @@ def stream_dedup_sbf(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches a decayed key may legitimately be re-kept — the
     keep-first projection is exact only within one filter pass, which is
     also true of the reference's per-operator-instance filter."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev = P.stream_events(spark, sf_dir, lateness="365 days")
     return P.run_to_memory(
         spark,
@@ -561,11 +511,9 @@ def hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_filter_by_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming control-gating run end-to-end (keyed boolean state via
     applyInPandasWithState) over FOUR event-time-ordered micro-batches
-    (maxFilesPerTrigger=1): gate state genuinely persists across batch
+    (``P.file_stream``): gate state genuinely persists across batch
     boundaries, and because arrival order equals event-time order the
     batch as-of `filter_by_control` oracle holds exactly."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev = P.stream_events(spark, sf_dir, lateness="365 days", splits=4)
     return P.run_to_memory(
         spark,
@@ -581,8 +529,6 @@ def stream_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly earlier timestamps; equal timestamps never straddle a batch
     boundary), so the batch `dedup_first` oracle holds exactly while the
     keyed state demonstrably survives batch transitions."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev = P.stream_events(spark, sf_dir, lateness="365 days", splits=4).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -599,8 +545,6 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-time-ordered micro-batches — right-state carries across batch
     boundaries and arrival order equals event-time order, so the batch
     `asof_join` oracle holds exactly."""
-    from flinkrunner_spark.streaming import pipelines as P
-
     ev = P.stream_events(spark, sf_dir, lateness="365 days", splits=4)
     return P.run_to_memory(
         spark, P.streaming_asof_join(ev), "q_stream_asof_join"
@@ -613,8 +557,6 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     is batch-order-independent, so the final (max-seq) row per key equals
     the batch `hll_users` result exactly — same oracle."""
     from pyspark.sql.window import Window
-
-    from flinkrunner_spark.streaming import pipelines as P
 
     ev = P.stream_events(spark, sf_dir, lateness="365 days", splits=4)
     sink = P.run_to_memory(spark, P.streaming_hll(ev), "q_stream_hll_users")

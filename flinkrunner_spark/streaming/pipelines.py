@@ -1,20 +1,45 @@
 """Structured Streaming mirrors of the batch operators.
 
 The reference is a streaming framework; this module shows the same logical
-plans running unbounded: file-backed streams of the events table with
+plans running unbounded: file-backed streams of the input tables with
 watermarks (bounded lateness), windowed aggregation, and stateful
 keep-first dedup via ``applyInPandasWithState`` (the Spark analog of the
 reference's keyed ValueState in SBFDeduplicationFilter).
 
-Tests drive these with the memory sink + ``processAllAvailable()`` —
-a deterministic, synchronous way to run a bounded stream to completion.
+Each mirror decision lives in one function here:
+
+* ``file_stream`` — how a bounded table becomes an event-time-ordered
+  stream (one micro-batch per range split, arrival in key order);
+* ``drain_partitions`` / ``_drain`` — how a bounded stream is driven to
+  completion: the availableNow trigger + ``awaitTermination`` on an
+  ephemeral checkpoint, under one set-and-restore shuffle/state-partition
+  pin (``run_to_memory``, ``run_updates_final``);
+* the window builders (``streaming_tumbling_agg``,
+  ``streaming_sliding_agg``, ``streaming_session_agg``,
+  ``tumbling_ema_agg``) — the one expression per window shape, built on
+  ``operators.windows`` and called by the batch ``win_*`` plans and their
+  ``stream_win_*`` mirrors alike.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import glob
+import hashlib
+import os
+import shutil
+import tempfile
+import time
+from contextlib import contextmanager
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.readwriter import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.window import Window
+
+from flinkrunner_spark.operators import aggregates as A
+from flinkrunner_spark.operators import windows as W
+from flinkrunner_spark.tables import load_table
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -39,9 +64,6 @@ def ephemeral_checkpoint(prefix: str = "flinkrunner-ckpt-") -> str:
     config and are untouched. ``SPARK_GRAFT_STREAM_CKPT_BASE`` overrides
     the base dir (point it at durable storage to measure durable-commit
     cost)."""
-    import os
-    import tempfile
-
     base = os.environ.get("SPARK_GRAFT_STREAM_CKPT_BASE")
     if not base:
         base = "/dev/shm" if os.path.isdir("/dev/shm") else None
@@ -52,10 +74,13 @@ DRAIN_ROWS_PER_PARTITION = 100_000  # target keyed-state rows per store
 DRAIN_PARTITIONS_FLOOR = 4  # the local mirrors' measured optimum
 
 
-def drain_state_partitions(spark: SparkSession, n_rows: int | None = None) -> int:
-    """State/shuffle partition count for a BOUNDED drive-to-completion
-    drain — replaces the literal pins the r13 verdict flagged (guide §2:
-    scale-adaptive partitioning, not a constant tuned for one box).
+@contextmanager
+def drain_partitions(spark: SparkSession, n_rows: int | None = None):
+    """Pin ``spark.sql.shuffle.partitions`` for a BOUNDED
+    drive-to-completion drain and restore the caller's value on exit,
+    also when the drain raises. A streaming query fixes its shuffle and
+    state-store partition count when its first batch plans, so the pin
+    must span the whole run of the query.
 
     Every state-store partition pays a fixed maintenance cost per
     micro-batch (delta commit + snapshot bookkeeping — measured r1/r4:
@@ -71,12 +96,70 @@ def drain_state_partitions(spark: SparkSession, n_rows: int | None = None) -> in
       mirror keeps the measured-optimal handful;
     * otherwise ``DRAIN_PARTITIONS_FLOOR``.
     """
-    if n_rows is None:
-        return DRAIN_PARTITIONS_FLOOR
-    cap = 8 * spark.sparkContext.defaultParallelism
-    return max(
-        DRAIN_PARTITIONS_FLOOR,
-        min(cap, -(-int(n_rows) // DRAIN_ROWS_PER_PARTITION)),
+    n = DRAIN_PARTITIONS_FLOOR
+    if n_rows is not None:
+        cap = 8 * spark.sparkContext.defaultParallelism
+        n = max(n, min(cap, -(-int(n_rows) // DRAIN_ROWS_PER_PARTITION)))
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def file_stream(
+    df: DataFrame, path: str, key: str, splits: int, schema: str | None = None
+) -> DataFrame:
+    """The event-time-ordered file stream every bounded mirror reads.
+
+    ``df`` is written to ``path`` once (a later call finds ``_SUCCESS``
+    and reuses the copy). With ``splits > 1`` the copy is
+    range-partitioned on ``key`` into ``splits`` files whose modification
+    times increase in range order, and the source reads with
+    ``maxFilesPerTrigger=1``: under the availableNow trigger Spark then
+    processes one file per micro-batch, oldest first, so batches arrive
+    in ascending ``key`` order. Rows with EQUAL keys always share a file
+    (range partitioning on ``key`` alone), so no key value straddles a
+    batch boundary — on an event-time key the keyed-state mirrors'
+    in-batch (ts, control/right-first, id) replay order is never split,
+    and the batch oracles hold across real micro-batch transitions.
+    With ``splits == 1`` the stream drains in ONE micro-batch
+    (``stream_dedup_sbf`` relies on it). ``schema`` defaults to
+    ``df``'s."""
+    if not os.path.exists(path + "/_SUCCESS"):
+        out = df.repartitionByRange(splits, key) if splits > 1 else df
+        out.write.mode("overwrite").parquet(path)
+        if splits > 1:
+            # part-file names follow range-partition order; stamp strictly
+            # increasing mtimes so the file source's oldest-first pickup
+            # equals key order deterministically
+            parts = sorted(glob.glob(path + "/part-*"))
+            t0 = time.time() - len(parts) - 1
+            for i, p in enumerate(parts):
+                os.utime(p, (t0 + i, t0 + i))
+    reader = df.sparkSession.readStream.schema(schema or df.schema)
+    if splits > 1:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    return reader.parquet(path)
+
+
+def table_stream(
+    spark: SparkSession, sf_dir: str, table: str, key: str, splits: int,
+    schema: str | None = None,
+) -> DataFrame:
+    """``file_stream`` over a /tmp copy of input table ``table``. The
+    copy is keyed by md5 of (table, sf_dir, splits) — NOT the builtin
+    hash(), which is salted per process and would rewrite the copy on
+    every run and litter /tmp."""
+    tag = hashlib.md5(f"{table}:{sf_dir}:{splits}".encode()).hexdigest()[:16]
+    return file_stream(
+        load_table(spark, sf_dir, table),
+        "/tmp/flinkrunner_stream_src/" + tag,
+        key,
+        splits,
+        schema,
     )
 
 
@@ -86,134 +169,61 @@ def stream_events(
     lateness: str = "10 minutes",
     splits: int = 1,
 ) -> DataFrame:
-    """File-backed event stream with bounded-lateness watermark. (The ns
-    timestamps are truncated to micros by the batch loader; for streaming
-    we re-read via a parquet stream of the converted copy.)
-
-    ``splits > 1`` turns the single-batch mirror into a REAL multi-batch
-    run: the copy is range-partitioned on event time into ``splits``
-    files whose modification times increase in range order, and the
-    source reads with ``maxFilesPerTrigger=1`` — under the availableNow
-    trigger Spark then processes one file per micro-batch, oldest first,
-    i.e. event-time-ordered arrival. Rows with EQUAL timestamps always
-    share a file (range partitioning on ts alone), so the keyed-state
-    mirrors' in-batch (ts, control/right-first, id) replay order is never
-    split across a batch boundary — the batch oracles hold across real
-    micro-batch transitions, which is exactly what they claim to model."""
-    from flinkrunner_spark.tables import load_table
-
-    # materialize a micros-typed copy once, then stream it. Keyed by md5
-    # (NOT the builtin hash(), which is salted per process — that would
-    # rewrite the copy on every run and litter /tmp)
-    import glob
-    import hashlib
-    import os
-    import time
-
-    path = (
-        "/tmp/flinkrunner_stream_src/"
-        + hashlib.md5(f"{sf_dir}:{splits}".encode()).hexdigest()[:16]
-    )
-
-    if not os.path.exists(path + "/_SUCCESS"):
-        df = load_table(spark, sf_dir, "events")
-        if splits > 1:
-            df = df.repartitionByRange(splits, "ts")
-        df.write.mode("overwrite").parquet(path)
-        if splits > 1:
-            # part-file names follow range-partition order; stamp strictly
-            # increasing mtimes so the file source's oldest-first pickup
-            # equals event-time order deterministically
-            parts = sorted(glob.glob(path + "/part-*"))
-            t0 = time.time() - len(parts) - 1
-            for i, p in enumerate(parts):
-                os.utime(p, (t0 + i, t0 + i))
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if splits > 1:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    return reader.parquet(path).withWatermark("ts", lateness)
+    """The events table as a stream with a bounded-lateness watermark,
+    ``splits`` micro-batches in event-time order (``file_stream`` on
+    ``ts``). The copy holds the loader's micros-truncated ``ts``; the
+    stream reads it as ``timestamp`` (``EVENTS_SCHEMA``), the type every
+    events mirror and its oracle agree on."""
+    return table_stream(
+        spark, sf_dir, "events", "ts", splits, EVENTS_SCHEMA
+    ).withWatermark("ts", lateness)
 
 
-def streaming_tumbling_agg(events: DataFrame, size: str = "1 hour") -> DataFrame:
-    from flinkrunner_spark.operators.aggregates import dsum
+def _count_total() -> list[Column]:
+    return [F.count(F.lit(1)).alias("n"), A.dsum("value", "total")]
 
-    return (
-        events.groupBy(F.window("ts", size).alias("_w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value", "total"))
-        .select(
-            F.col("_w.start").alias("window_start"),
-            F.col("_w.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total",
-        )
+
+def streaming_tumbling_agg(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour event-time windows per event_type: (n, total).
+    The one builder behind ``win_tumbling`` and the ``stream_win_tumbling``
+    mirrors; the same expression runs on a batch or a streaming frame."""
+    return W.tumbling_agg(events, "ts", "1 hour", ["event_type"], _count_total())
+
+
+def streaming_sliding_agg(events: DataFrame) -> DataFrame:
+    """Sliding 1-hour windows every 30 minutes per event_type: the one
+    builder behind ``win_sliding`` and the ``stream_win_sliding``
+    mirrors."""
+    return W.sliding_agg(
+        events, "ts", "1 hour", "30 minutes", ["event_type"], _count_total()
     )
 
 
-def streaming_sliding_agg(
-    events: DataFrame, size: str = "1 hour", slide: str = "30 minutes"
-) -> DataFrame:
-    from flinkrunner_spark.operators.aggregates import dsum
-
-    return (
-        events.groupBy(F.window("ts", size, slide).alias("_w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value", "total"))
-        .select(
-            F.col("_w.start").alias("window_start"),
-            F.col("_w.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total",
-        )
-    )
+def streaming_session_agg(events: DataFrame) -> DataFrame:
+    """Session windows (5-minute gap) per user: the one builder behind
+    ``win_session`` and the ``stream_win_session`` mirrors."""
+    return W.session_agg(events, "ts", "5 minutes", ["user_id"], _count_total())
 
 
-def streaming_session_agg(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
-    from flinkrunner_spark.operators.aggregates import dsum
-
-    return (
-        events.groupBy(F.session_window("ts", gap).alias("_w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value", "total"))
-        .select(
-            F.col("_w.start").alias("window_start"),
-            F.col("_w.end").alias("window_end"),
-            "user_id",
-            "n",
-            "total",
-        )
-    )
-
-
-def streaming_ema_agg(
-    events: DataFrame, size: str = "1 hour", alpha: float = 0.7
-) -> DataFrame:
+def tumbling_ema_agg(events: DataFrame) -> DataFrame:
     """The reference's windowedAggregation with its order-dependent EMA
-    aggregate (FlinkRunnerAggregateFunction + EMA.scala), streaming: per
-    (tumbling window, event_type), fold values in event-time order.
+    aggregate (FlinkRunnerAggregateFunction + EMA.scala): per (tumbling
+    1-hour window, event_type), fold values in (ts, event_id) order with
+    α=0.7. The
+    one builder behind ``win_ema`` and ``stream_win_ema``.
 
-    collect_list accumulates per-window state incrementally across
-    micro-batches (arrival order, NOT event order); the sort lives inside
-    ``array_sort`` at emission, so the final fold is deterministic however
-    the stream interleaves. State is bounded by the window — the same
-    bound the reference gets from windowed AggregateFunction state."""
-    from flinkrunner_spark.operators.aggregates import ema_fold
-
-    fields = [F.col("ts"), F.col("event_id"), F.col("value").alias("_v")]
-    return (
-        events.groupBy(F.window("ts", size).alias("_w"), "event_type")
-        .agg(F.collect_list(F.struct(*fields)).alias("_raw"))
-        .select(
-            F.col("_w.start").alias("window_start"),
-            F.col("_w.end").alias("window_end"),
-            "event_type",
-            F.round(
-                ema_fold(
-                    F.transform(F.array_sort("_raw"), lambda s: s["_v"]),
-                    alpha,
-                ),
-                6,
-            ).alias("agg_ema"),
-        )
+    On a stream, collect_list accumulates per-window state incrementally
+    across micro-batches (arrival order, NOT event order); the sort is
+    part of the aggregate's result expression (``array_sort``), so the
+    fold is deterministic however the stream interleaves. State is
+    bounded by the window — the same bound the reference gets from
+    windowed AggregateFunction state."""
+    vals = A._sorted_values(["ts", "event_id"], "value").alias("_vals")
+    return W.tumbling_agg(events, "ts", "1 hour", ["event_type"], [vals]).select(
+        "window_start",
+        "window_end",
+        "event_type",
+        F.round(A.ema_fold(F.col("_vals"), 0.7), 6).alias("agg_ema"),
     )
 
 
@@ -226,6 +236,32 @@ def streaming_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
         events.join(
             F.broadcast(dim), events["user_id"] == dim["c_custkey"], "left"
         ).select("event_id", "user_id", "event_type", "c_name", "c_mktsegment")
+    )
+
+
+def _bucketed_state(
+    df: DataFrame,
+    keys: list,
+    num_buckets: int,
+    fn,
+    out_schema,
+    state_schema: str,
+) -> DataFrame:
+    """Keyed state held per hash BUCKET of ``keys``: rows get
+    ``_bucket = pmod(xxhash64(*keys), num_buckets)`` and ``fn`` runs once
+    per touched bucket per micro-batch under ``applyInPandasWithState``
+    (append output, no timeout), holding the bucket's state blob. ``fn``
+    sees the ``_bucket`` column and must not emit it. See
+    streaming_dedup_keep_first for why buckets beat per-key state."""
+    keyed = df.withColumn(
+        "_bucket", F.pmod(F.xxhash64(*keys), F.lit(num_buckets))
+    )
+    return keyed.groupBy("_bucket").applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -261,10 +297,6 @@ def streaming_dedup_keep_first(
     keeps exact unbounded semantics: it is the oracle mirror.
     """
     key_cols = key_cols or ["user_id", "event_type"]
-    # emit exactly the input columns — callers prune unused (fat) columns
-    # BEFORE the keyed shuffle so they never ride the Arrow channel
-    out_schema = events.schema
-    state_schema = "seen binary"
     ttl_us = None if ttl_sec is None else int(ttl_sec * 1_000_000)
 
     def fn(key, pdfs, state: GroupState):
@@ -316,15 +348,10 @@ def streaming_dedup_keep_first(
         state.update((pickle.dumps(seen),))
         yield pdf.loc[fresh].drop(columns=["_bucket"])
 
-    keyed = events.withColumn(
-        "_bucket", F.pmod(F.xxhash64(*key_cols), F.lit(num_buckets))
-    )
-    return keyed.groupBy("_bucket").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    # emit exactly the input columns — callers prune unused (fat) columns
+    # BEFORE the keyed shuffle so they never ride the Arrow channel
+    return _bucketed_state(
+        events, key_cols, num_buckets, fn, events.schema, "seen binary"
     )
 
 
@@ -402,8 +429,6 @@ def streaming_dedup_sbf(
     bits_per_cell = SBF_BITS_PER_CELL if bits_per_cell is None else bits_per_cell
     fpr = SBF_FPR if fpr is None else fpr
     key_cols = [dedupe_col] if isinstance(dedupe_col, str) else list(dedupe_col)
-    out_schema = EVENTS_SCHEMA
-    state_schema = "cells binary"
 
     def fn(key, pdfs, state: GroupState):
         import numpy as np
@@ -435,15 +460,8 @@ def streaming_dedup_sbf(
     key_expr = F.concat_ws(
         "\x1f", *[F.col(c).cast("string") for c in key_cols]
     )
-    keyed = events.withColumn(
-        "_bucket", F.pmod(F.xxhash64(key_expr), F.lit(num_buckets))
-    )
-    return keyed.groupBy("_bucket").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _bucketed_state(
+        events, [key_expr], num_buckets, fn, EVENTS_SCHEMA, "cells binary"
     )
 
 
@@ -473,14 +491,10 @@ def streaming_filter_by_control(
     it; across batches the persisted flag gates everything until the next
     control arrives. As with any streaming gate (Flink's included), a
     control row arriving in a LATER batch than data it precedes in event
-    time cannot retro-gate those already-emitted rows — under the
-    availableNow single-batch mirror this never happens, so the batch
-    as-of oracle holds exactly."""
-    out_schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double"
-    )
-    state_schema = "gates binary"
+    time cannot retro-gate those already-emitted rows. The mirror
+    (``stream_filter_by_control``) runs four micro-batches whose arrival
+    order equals event-time order (``file_stream``), so that never
+    happens there and the batch as-of oracle holds exactly."""
 
     def fn(key_tuple, pdfs, state: GroupState):
         import pickle
@@ -512,15 +526,14 @@ def streaming_filter_by_control(
             keep, ["event_id", "ts", "user_id", "event_type", "value"]
         ]
 
-    keyed = events.select(tiebreak, "ts", key, "event_type", "value").withColumn(
-        "_bucket", F.pmod(F.xxhash64(key), F.lit(num_buckets))
-    )
-    return keyed.groupBy("_bucket").applyInPandasWithState(
+    return _bucketed_state(
+        events.select(tiebreak, "ts", key, "event_type", "value"),
+        [key],
+        num_buckets,
         fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double",
+        "gates binary",
     )
 
 
@@ -546,15 +559,12 @@ def streaming_asof_join(
     event at the same timestamp applies (`<=` as-of), and among same-ts
     right events the largest id wins — identical to the batch
     sorted-merge pass (operators/joins.asof_join_merge). Left events with
-    no preceding right are dropped (inner as-of). Same one-trigger
-    caveat as every streaming gate: a right event arriving in a later
-    batch cannot retro-match already-emitted left rows; under the
-    availableNow single-batch mirror the batch oracle holds exactly."""
-    out_schema = (
-        "event_id long, ts timestamp, user_id long, "
-        "click_id long, click_ts timestamp"
-    )
-    state_schema = "latest binary"
+    no preceding right are dropped (inner as-of). Same caveat as every
+    streaming gate: a right event arriving in a later batch cannot
+    retro-match already-emitted left rows. The mirror
+    (``stream_asof_join``) runs four micro-batches whose arrival order
+    equals event-time order (``file_stream``), so the batch oracle holds
+    exactly."""
 
     def fn(key_tuple, pdfs, state: GroupState):
         import pickle
@@ -608,17 +618,16 @@ def streaming_asof_join(
         state.update((pickle.dumps(latest),))
         yield out
 
-    keyed = (
-        events.filter(F.col("event_type").isin(left_type, right_type))
-        .select("event_id", "ts", "user_id", "event_type")
-        .withColumn("_bucket", F.pmod(F.xxhash64("user_id"), F.lit(num_buckets)))
-    )
-    return keyed.groupBy("_bucket").applyInPandasWithState(
+    return _bucketed_state(
+        events.filter(F.col("event_type").isin(left_type, right_type)).select(
+            "event_id", "ts", "user_id", "event_type"
+        ),
+        ["user_id"],
+        num_buckets,
         fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "event_id long, ts timestamp, user_id long, "
+        "click_id long, click_ts timestamp",
+        "latest binary",
     )
 
 
@@ -772,9 +781,25 @@ def streaming_running_agg(events: DataFrame) -> DataFrame:
     )
 
 
+def _drain(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """Drive a bounded stream to completion: ``writer`` (sink and output
+    mode set) starts on a fresh ephemeral checkpoint with the availableNow
+    trigger under ``drain_partitions``, and the call returns when the
+    query has processed everything available — or raises its error. The
+    checkpoint is removed either way."""
+    ckpt = ephemeral_checkpoint()
+    try:
+        with drain_partitions(spark):
+            writer.option("checkpointLocation", ckpt).trigger(
+                availableNow=True
+            ).start().awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_updates_final(
     spark: SparkSession,
-    build,
+    df: DataFrame,
     keys: list[str],
 ) -> DataFrame:
     """Drive a (bounded) streaming aggregation in UPDATE output mode and
@@ -788,36 +813,27 @@ def run_updates_final(
     store — the reference's CreateTableJdbcSinkFunction shape) consumes.
     Sink traffic is O(keys touched per batch), state never re-scanned.
 
-    ``build`` is a ``Callable[[SparkSession], DataFrame]`` that declares
-    the streaming aggregate; it runs on a cloned session
-    (``spark.newSession()``) whose ``spark.sql.shuffle.partitions`` is
-    pinned to ``drain_state_partitions(spark)``, i.e. 4 partitions —
-    query-scoped, so concurrent queries on the caller's session never
-    observe a mutated global conf.
+    ``df`` is the streaming aggregate, built on ``spark``. It runs through
+    the same drain as ``run_to_memory`` (``_drain``): the caller's
+    ``spark.sql.shuffle.partitions`` is pinned for the run of the query
+    and restored afterwards, so a query started on the same session
+    concurrently with a drain plans with the pinned count.
 
     The sink is executor-side end to end: each micro-batch's update rows
     are stamped with the batch id and appended to a staging directory as
     parquet BY THE EXECUTORS (the driver never sees a row — the exact
     shape a JDBC MERGE / key-value upsert takes at scale, with parquet
-    standing in for the store). The final emission per key is then selected read-side
-    (max batch id wins); because streaming aggregate state is cumulative,
-    that row IS the full-input aggregate, so for order-independent
-    aggregates the result is bit-identical to the batch oracle. The
-    returned frame is localCheckpoint-materialized (it is O(keys) small)
-    so the staging directory can be deleted immediately."""
-    import glob
-    import shutil
-
+    standing in for the store). The final emission per key is then
+    selected read-side (max batch id wins); because streaming aggregate
+    state is cumulative, that row IS the full-input aggregate, so for
+    order-independent aggregates the result is bit-identical to the batch
+    oracle. The returned frame is localCheckpoint-materialized (it is
+    O(keys) small) so the staging directory can be deleted immediately."""
     # same RAM-backed ephemeral base as the checkpoints: the staging
     # dir is written and deleted within this call (the result is
     # localCheckpoint-materialized before the rmtree below), so its
     # durability is a non-goal
     staged = ephemeral_checkpoint(prefix="flinkrunner_updates_")
-    s2 = spark.newSession()
-    s2.conf.set(
-        "spark.sql.shuffle.partitions", str(drain_state_partitions(spark))
-    )
-    df = build(s2)
 
     def sink(bdf: DataFrame, bid: int) -> None:
         # executor-side append; at scale this body is MERGE INTO / upsert
@@ -825,34 +841,20 @@ def run_updates_final(
             staged
         )
 
-    ckpt = ephemeral_checkpoint()
     try:
-        q = (
-            df.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _drain(spark, df.writeStream.foreachBatch(sink).outputMode("update"))
+        if not glob.glob(staged + "/part-*"):
+            return spark.createDataFrame([], df.schema)
+        w = Window.partitionBy(*keys).orderBy(F.col("_batch_id").desc())
+        return (
+            spark.read.parquet(staged)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "_batch_id")
+            .localCheckpoint(eager=True)
         )
-        q.awaitTermination()
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    from pyspark.sql.window import Window
-
-    if not glob.glob(staged + "/part-*"):
         shutil.rmtree(staged, ignore_errors=True)
-        return spark.createDataFrame([], df.schema)
-    out = spark.read.parquet(staged)
-    w = Window.partitionBy(*keys).orderBy(F.col("_batch_id").desc())
-    result = (
-        out.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_batch_id")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(staged, ignore_errors=True)
-    return result
 
 
 def run_to_memory(
@@ -866,33 +868,11 @@ def run_to_memory(
     watermarked aggregations so the trailing windows (still within
     lateness when input ends) are included.
 
-    Shuffle/state-store partitioning is pinned to
-    ``drain_state_partitions(spark)`` for the stream (restored
-    afterwards): every stateful-op partition pays a
-    fixed state-store maintenance cost PER MICRO-BATCH — including the
-    empty watermark-flush batch — so local mirrors with small state want
-    few partitions (32→8 measured 9.5s→2.1s on the interval join in r1;
-    8→4 halved the 4-micro-batch interval join again in r4, flat below
-    4). Scan parallelism is unaffected (file splits, not shuffle
-    partitions, drive the source)."""
-    import shutil
-
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(drain_state_partitions(spark))
-    )
-    ckpt = ephemeral_checkpoint()
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    The drain (``_drain``) pins shuffle/state-store partitioning with
+    ``drain_partitions`` for the run of the query: every stateful-op
+    partition pays a fixed state-store maintenance cost PER MICRO-BATCH —
+    including the empty watermark-flush batch — so local mirrors with
+    small state want few partitions. Scan parallelism is unaffected
+    (file splits, not shuffle partitions, drive the source)."""
+    _drain(spark, df.writeStream.format("memory").queryName(name).outputMode(mode))
     return spark.sql(f"SELECT * FROM {name}")

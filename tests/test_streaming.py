@@ -5,6 +5,7 @@ applied to streams)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.streaming import pipelines as P
@@ -506,3 +507,88 @@ def test_run_to_memory_removes_its_checkpoint(spark, tmp_path, monkeypatch):
     assert out.count() == 2
     left = [d for d in os.listdir(tmp_path) if d.startswith("flinkrunner-ckpt-")]
     assert left == [], f"checkpoint dirs left behind: {left}"
+
+
+@pytest.mark.parametrize(
+    "table, key, splits",
+    [
+        ("events", "ts", 4),
+        ("documents", "doc_id", 4),
+        ("events", "ts", 1),
+        ("documents", "doc_id", 1),
+    ],
+)
+def test_file_stream_batch_contract(spark, table, key, splits):
+    """The contract every stream_* mirror's oracle relies on: under
+    availableNow the harness drains in exactly ``splits`` non-empty
+    micro-batches, the batches arrive in ascending key order, and no key
+    value appears in two batches."""
+    import shutil
+
+    from flinkrunner_spark.plans.docstreams import stream_documents
+
+    if table == "events":
+        sdf = P.stream_events(spark, SF, splits=splits)
+    else:
+        sdf = stream_documents(spark, SF, splits=splits)
+    ranges = []
+
+    def record(bdf, bid):
+        r = bdf.agg(F.min(key), F.max(key), F.count(F.lit(1))).first()
+        if r[2]:
+            ranges.append((bid, r[0], r[1]))
+
+    ckpt = P.ephemeral_checkpoint()
+    try:
+        q = (
+            sdf.select(key).writeStream.foreachBatch(record)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    filled = [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(filled) == splits
+    assert [b for b, _, _ in ranges] == filled
+    for (_, _, hi), (_, lo, _) in zip(ranges, ranges[1:]):
+        assert hi < lo, f"key ranges overlap or go backwards: {ranges}"
+
+
+def _key_counts(spark, src: str, fail: bool):
+    spark.range(10).write.mode("overwrite").parquet(src)
+    ids = spark.readStream.schema("id long").parquet(src)
+    k = F.col("id") % 2
+    if fail:
+        k = F.when(F.col("id") < 0, k).otherwise(F.raise_error("drain failed"))
+    return ids.groupBy(k.cast("long").alias("k")).count()
+
+
+@pytest.mark.parametrize("fail", [False, True], ids=["ok", "raises"])
+@pytest.mark.parametrize(
+    "drain",
+    [
+        lambda spark, df: P.run_to_memory(spark, df, "q_pin", mode="complete"),
+        lambda spark, df: P.run_updates_final(spark, df, ["k"]),
+    ],
+    ids=["run_to_memory", "run_updates_final"],
+)
+def test_drain_restores_callers_shuffle_partitions(spark, tmp_path, drain, fail):
+    """Both drains pin the shuffle/state partitions for the run of the
+    query only: the caller's value is back afterwards, also when the
+    streaming query raises."""
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        df = _key_counts(spark, str(tmp_path / "in"), fail)
+        if fail:
+            with pytest.raises(StreamingQueryException, match="drain failed"):
+                drain(spark, df)
+        else:
+            got = sorted(map(tuple, drain(spark, df).collect()))
+            assert got == [(0, 5), (1, 5)]
+        assert spark.conf.get(conf) == "7"
+    finally:
+        spark.conf.set(conf, before)

@@ -10,15 +10,11 @@ with none of the Spark code shared.
 
 from __future__ import annotations
 
-import glob
-import os
-import time
-
 import numpy as np
 import pandas as pd
 import pytest
 
-from pyspark.sql import functions as F
+from flinkrunner_spark.streaming.pipelines import file_stream, run_to_memory
 
 
 def _random_events(seed: int, n: int = 400) -> pd.DataFrame:
@@ -39,41 +35,15 @@ def _random_events(seed: int, n: int = 400) -> pd.DataFrame:
 
 
 def _stream_from_pdf(spark, pdf: pd.DataFrame, tmpdir: str, splits: int):
-    """Write pdf as `splits` event-time-ordered files (equal ts never
-    straddle a file) and open a maxFilesPerTrigger=1 parquet stream —
-    the same mechanism stream_events uses."""
-    df = spark.createDataFrame(pdf).repartitionByRange(splits, "ts")
-    df.write.mode("overwrite").parquet(tmpdir)
-    parts = sorted(glob.glob(tmpdir + "/part-*"))
-    t0 = time.time() - len(parts) - 1
-    for i, p in enumerate(parts):
-        os.utime(p, (t0 + i, t0 + i))
-    return (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(tmpdir)
-        .withWatermark("ts", "365 days")
+    """pdf as `splits` event-time-ordered micro-batches (equal ts never
+    straddle a batch) — the harness behind stream_events."""
+    return file_stream(spark.createDataFrame(pdf), tmpdir, "ts", splits).withWatermark(
+        "ts", "365 days"
     )
 
 
 def _run(spark, sdf, name: str) -> pd.DataFrame:
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.sql(f"SELECT * FROM {name}").toPandas()
+    return run_to_memory(spark, sdf, name).toPandas()
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
