@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flinkrunner_spark.llm.text import hex8_long, tokens_col
-from flinkrunner_spark.tables import load_table
+from flinkrunner_spark.tables import load_spread, load_table
 
 # ---------------------------------------------------------------------------
 # eval-set decontamination
@@ -173,7 +173,7 @@ def docs_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts per pattern and md5 of the redacted text (the hash pins the
     full redacted string cross-engine without shipping text through the
     comparator)."""
-    docs = load_table(spark, sf_dir, "documents").select(
+    docs = load_spread(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", _pii_fixture_text().alias("text")
     )
     return pii_redact(docs).select(

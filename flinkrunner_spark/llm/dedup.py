@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import tokens_col
-from flinkrunner_spark.tables import load_table
+from flinkrunner_spark.tables import load_spread, load_table
 
 MINHASH_K = 8  # minhash permutations
 LSH_BANDS = 4  # bands of 2 rows each
@@ -55,19 +55,20 @@ def minhash_sig(sh: Column, k: int = MINHASH_K) -> list[Column]:
 
 
 def _docs_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Small inputs arrive as one parquet split; spread the hash-heavy work
-    # across all cores (at 100 TB the scan itself provides the splits).
+    # Small inputs arrive as one parquet split; load_spread spreads the
+    # hash-heavy work across all cores (at 100 TB the scan itself provides
+    # the splits, and it adds no exchange).
     # Tokenize into a materialized column FIRST: higher-order-function
     # lambdas are interpreted, and a non-column child expression would be
     # re-evaluated on every element access (O(tokens × shingles) per doc).
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = load_spread(spark, sf_dir, "documents", "doc_id")
     toks = docs.select("doc_id", tokens_col().alias("toks"))
     sh = toks.select("doc_id", shingles_col(F.col("toks")).alias("sh"))
     # Exchange barrier: materialize the shingle arrays once. Without it,
     # downstream explode/array ops re-evaluate the interpreted shingle
-    # expression several times per row (~4× observed).
+    # expression several times per row (~4× observed). After a spread on
+    # doc_id the rows are already so partitioned and Spark plans no second
+    # exchange; the logical barrier still keeps the expression single.
     return sh.repartition(spark.sparkContext.defaultParallelism, "doc_id")
 
 
@@ -301,9 +302,7 @@ def docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     same bytes but loses whole-stage codegen (2.5× slower warm) — keep the
     explode form.
     """
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = load_spread(spark, sf_dir, "documents", "doc_id")
     # explode_outer avoids the pushed-down size() filter (see _signatures);
     # the null guard afterwards is an attribute test, not a recomputation.
     ex = (

@@ -2,9 +2,12 @@
 embedding: array<float>, label).
 
 * ``emb_knn`` — brute-force cosine top-k against a query vector. The query
-  vector is a one-row broadcast; the scan is embarrassingly parallel and
-  the only data movement is the global top-k (a tiny sort) — the correct
-  baseline at any scale.
+  vector is a one-row broadcast and the per-row cosine is embarrassingly
+  parallel over the corpus scan's splits. The corpus is read through
+  ``tables.load_spread``: a corpus with fewer row groups than cores (one
+  scan task per row group) is hash-spread on ``vec_id`` first, and one
+  with enough splits moves no data but the global top-k (a tiny sort) —
+  the correct baseline at any scale.
 * ``emb_dup_pairs`` — near-duplicate pairs via random-hyperplane LSH
   (the data-independent scale path: banded sign-bit buckets with a hard
   super-bucket cap, exact cosine verify on candidates only). The
@@ -34,7 +37,7 @@ from pyspark.sql import functions as F
 
 from flinkrunner_spark import memo
 from flinkrunner_spark.llm.text import hex8_long
-from flinkrunner_spark.tables import load_table
+from flinkrunner_spark.tables import load_spread, load_table
 
 COSINE_DUP_THRESHOLD = 0.35  # synthetic embeddings are near-orthogonal; max in-label cosine ~0.51
 KNN_K = 10
@@ -84,8 +87,8 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def emb_knn(spark: SparkSession, sf_dir: str, query_id: int = 0, k: int = KNN_K) -> DataFrame:
     """Brute-force cosine top-k neighbors of ``query_id``."""
-    emb = _emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") == query_id).select(
+    emb = load_spread(spark, sf_dir, "embeddings", "vec_id")
+    q = _emb(spark, sf_dir).filter(F.col("vec_id") == query_id).select(
         F.col("embedding").alias("qv")
     )
     cos = cosine(as_double("embedding"), as_double("qv"))

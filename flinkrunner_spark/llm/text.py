@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flinkrunner_spark.tables import load_table
+from flinkrunner_spark.tables import load_spread, load_table
 
 # Canonical tokenization: lowercase, split on non-alphanumeric runs.
 TOKEN_SPLIT = "[^a-z0-9]+"
@@ -660,7 +660,7 @@ def docs_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass ONCE per row into a stats struct; the outer select derives
     all five outputs from the struct's ints (CollapseProject never
     inlines a non-cheap producer referenced 5×)."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_spread(spark, sf_dir, "documents", "doc_id")
     inner = docs.select(
         "doc_id", F.expr(_quality_stats_sql()).alias("_qs")
     )

@@ -12,6 +12,9 @@ Two families live here:
 * ``tables.schema`` — each input table's inferred Parquet schema
   (``tables.load_table``), a plain value with nothing to free, so a
   repeat read of the table starts no schema-inference job.
+  ``tables.row_groups`` — each table's Parquet row-group count, capped
+  at ``defaultParallelism`` (``tables.load_spread``), likewise a plain
+  value.
 
 Each value is keyed by ``(name, applicationId, sf_dir, *key)``.
 
@@ -28,14 +31,14 @@ Lifecycle:
   entries and forgets them. A long-lived service sweeping many corpora
   calls ``release(sf_dir=...)`` after each one; the bench calls
   ``release("llm")`` between passes so warm numbers measure executed
-  plans, not cache hits, while the table schemas stay memoized as they
-  do in a long-lived session.
+  plans, not cache hits, while the ``tables.*`` values stay memoized as
+  they do in a long-lived session.
 
-Names are dotted (``llm.<module>.<frame>``, ``tables.schema``), so
+Names are dotted (``llm.<module>.<frame>``, ``tables.<value>``), so
 ``release("llm.dedup")`` frees one module's entries and leaves the
 others alone, and
 ``release("tables", sf_dir)`` makes the next read of each of that
-directory's tables infer its schema again.
+directory's tables infer its schema (and count its row groups) again.
 """
 
 from __future__ import annotations

@@ -35,6 +35,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     within one session needs ``memo.release("tables", sf_dir)`` before
     its next read.
 
+    The scan has one task per Parquet row group at most (Spark never
+    splits a row group), so a table written as one row group reads in
+    one task. That is right for the relational plans, whose time here is
+    per-query fixed cost; a per-row kernel over a corpus reads through
+    ``load_spread`` instead.
+
     ``events.ts`` is TIMESTAMP(NANOS) parquet, which Spark rejects by
     default — read nanos as long and truncate to micros (exactly what
     DuckDB's TIMESTAMP does), restoring TimestampType."""
@@ -54,6 +60,57 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events" and ts == LongType():
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
+
+
+def _row_groups(spark: SparkSession, sf_dir: str, name: str, df: DataFrame) -> int:
+    """Row groups in ``df``'s Parquet files, counted up to
+    ``defaultParallelism``: read from the footers on the driver through
+    parquet-hadoop (any Hadoop filesystem), so it starts no Spark job.
+    Memoized as ``tables.row_groups`` keyed by ``name``."""
+
+    def count() -> int:
+        jvm = spark.sparkContext._jvm
+        conf = spark.sparkContext._jsc.hadoopConfiguration()
+        cap = spark.sparkContext.defaultParallelism
+        n = 0
+        for f in df.inputFiles():
+            src = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(f), conf
+            )
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(src)
+            try:
+                n += reader.getRowGroups().size()
+            finally:
+                reader.close()
+            if n >= cap:
+                return cap
+        return n
+
+    return memo.memo(
+        spark, "tables.row_groups", sf_dir, count, key=(name,), free=None
+    )
+
+
+def load_spread(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
+    """``load_table``, spread over every core when the scan cannot be.
+
+    A table whose files hold fewer row groups than
+    ``defaultParallelism`` scans in fewer tasks than there are cores, so
+    its rows are hash-partitioned on ``key`` into ``defaultParallelism``
+    partitions; a table with at least that many row groups returns the
+    plain scan, with no exchange. The exchange is a fixed cost per
+    query, worth paying only where per-row work dominates: the LLM
+    per-row kernels read their corpus here, the relational plans read
+    ``load_table``. Hashing on a column skips the sort of each map
+    partition that round-robin pays (``sortBeforeRepartition``); the
+    exchange sits above the scan, so column pruning and filter pushdown
+    still reach it. The row-group count is learned once per table per
+    session (``_row_groups``)."""
+    df = load_table(spark, sf_dir, name)
+    n = spark.sparkContext.defaultParallelism
+    if _row_groups(spark, sf_dir, name, df) >= n:
+        return df
+    return df.repartition(n, key)
 
 
 class _Tables(dict):

@@ -26,6 +26,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import socketserver
 import struct
 import threading
@@ -788,6 +789,7 @@ class LoopbackKafkaBroker(LoopbackServer):
         self.tls = bool(tls)
         self.cafile: str | None = None
         self._ssl_ctx = None
+        self._tls_dir: str | None = None
         if self.tls:
             self._ssl_ctx = self._make_tls_context()
         # read_committed surface: the LAST STABLE OFFSET trails the high
@@ -842,13 +844,13 @@ class LoopbackKafkaBroker(LoopbackServer):
     def _make_tls_context(self):
         """Self-signed localhost certificate via the openssl CLI (the
         stdlib cannot mint certs); the key/cert pair lives in a private
-        tempdir for the server's lifetime and the cert doubles as the
-        client-side CA file (``self.cafile``)."""
+        tempdir for the server's lifetime (``__exit__`` removes it) and
+        the cert doubles as the client-side CA file (``self.cafile``)."""
         import ssl
         import subprocess
         import tempfile
 
-        d = tempfile.mkdtemp(prefix="flinkrunner_kafka_tls_")
+        d = self._tls_dir = tempfile.mkdtemp(prefix="flinkrunner_kafka_tls_")
         key, crt = os.path.join(d, "key.pem"), os.path.join(d, "cert.pem")
         subprocess.run(
             [
@@ -864,6 +866,12 @@ class LoopbackKafkaBroker(LoopbackServer):
         self.cafile = crt
         return ctx
 
+    def __exit__(self, *exc):
+        try:
+            super().__exit__(*exc)
+        finally:
+            if self._tls_dir:
+                shutil.rmtree(self._tls_dir, ignore_errors=True)
 
     # -- log state ----------------------------------------------------------
 

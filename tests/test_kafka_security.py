@@ -10,6 +10,7 @@ block verbatim to the Java client).
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -102,6 +103,14 @@ def test_tls_roundtrip_with_verified_cert():
             KafkaClient(
                 "localhost", b.port, security={"protocol": "SSL"}
             ).__enter__()
+
+
+@pytest.mark.skipif(not _HAS_OPENSSL, reason="openssl CLI not available")
+def test_tls_cert_dir_removed_on_exit():
+    with LoopbackKafkaBroker(num_partitions=1, tls=True) as b:
+        cert_dir = os.path.dirname(b.cafile)
+        assert os.path.isfile(b.cafile)
+    assert not os.path.exists(cert_dir)
 
 
 @pytest.mark.skipif(not _HAS_OPENSSL, reason="openssl CLI not available")

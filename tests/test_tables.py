@@ -1,13 +1,18 @@
 """``flinkrunner_spark.tables.load_table``, the one reader of the input
 tables: each table's Parquet schema is inferred once per session (a
-Spark job of its own), and every read still builds a fresh relation."""
+Spark job of its own), and every read still builds a fresh relation.
+``load_spread`` is the same read, hash-spread over every core when the
+table has fewer row groups than ``defaultParallelism``."""
 
 from __future__ import annotations
 
 import ast
+import contextlib
+import io
 import itertools
 import json
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -20,10 +25,11 @@ from conftest import SF_SMOKE as SF
 
 from flinkrunner_spark import memo
 from flinkrunner_spark.plans import analytics, docstreams
-from flinkrunner_spark.tables import load_table
+from flinkrunner_spark.tables import load_spread, load_table
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "flinkrunner_spark")
+LLM = os.path.join(PKG, "llm")
 
 
 _TAGS = itertools.count()
@@ -171,6 +177,88 @@ def test_file_stream_schema_matches_its_copy(spark, stream, table):
     assert df.schema == load_table(spark, SF, table).schema
 
 
+@pytest.fixture
+def docs_copies(spark, tmp_path):
+    """Two private copies of the smoke ``documents`` table: ``one`` as a
+    single row group, ``many`` with twice ``defaultParallelism`` row
+    groups. Private, so the memo starts empty whatever ran earlier."""
+    t = pq.read_table(f"{SF}/documents.parquet")
+    n = spark.sparkContext.defaultParallelism
+    dirs = {"one": str(tmp_path / "one"), "many": str(tmp_path / "many")}
+    for d in dirs.values():
+        os.makedirs(d)
+    pq.write_table(t, f"{dirs['one']}/documents.parquet")
+    pq.write_table(
+        t, f"{dirs['many']}/documents.parquet",
+        row_group_size=-(-t.num_rows // (2 * n)),
+    )
+    assert pq.read_metadata(f"{dirs['one']}/documents.parquet").num_row_groups == 1
+    assert pq.read_metadata(f"{dirs['many']}/documents.parquet").num_row_groups >= n
+    yield dirs
+    for d in dirs.values():
+        memo.release("tables", d)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _formatted(df) -> str:
+    """``explain("formatted")``, which holds the scan's ``ReadSchema`` and
+    ``PushedFilters`` (the executed plan's string does not)."""
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        df.explain("formatted")
+    return out.getvalue()
+
+
+def test_spread_single_row_group(spark, docs_copies):
+    """One row group scans in one task; the spread reads it as
+    ``defaultParallelism`` partitions behind one hash exchange on the
+    key, and the rows are the plain read's."""
+    n = spark.sparkContext.defaultParallelism
+    df = load_spread(spark, docs_copies["one"], "documents", "doc_id")
+    plan = _plan(df)
+    assert plan.count("Exchange") == 1, plan
+    assert re.search(rf"hashpartitioning\(doc_id#\d+L?, {n}\)", plan), plan
+    assert df.rdd.getNumPartitions() == n
+    plain = load_table(spark, docs_copies["one"], "documents")
+    assert plain.rdd.getNumPartitions() == 1
+    assert sorted(df.collect()) == sorted(plain.collect())
+
+
+def test_spread_leaves_split_scans_alone(spark, docs_copies):
+    df = load_spread(spark, docs_copies["many"], "documents", "doc_id")
+    assert "Exchange" not in _plan(df)
+    assert memo.entries("tables.row_groups", docs_copies["many"])
+
+
+def test_spread_repeat_read_starts_no_job(spark, docs_copies):
+    """The first read infers the schema (one job) and counts the row
+    groups from the footers on the driver (no job); a repeat read starts
+    none."""
+    d = docs_copies["one"]
+    _, n1 = _jobs(spark, lambda: load_spread(spark, d, "documents", "doc_id"))
+    _, n2 = _jobs(spark, lambda: load_spread(spark, d, "documents", "doc_id"))
+    assert (n1, n2) == (1, 0)
+
+
+def test_spread_keeps_pruning_and_pushdown(spark, docs_copies):
+    """The hash exchange sits above the scan: the scan reads only the
+    columns the query uses, and a filter on the key is pushed into it."""
+    df = (
+        load_spread(spark, docs_copies["one"], "documents", "doc_id")
+        .filter("doc_id = 7")
+        .select("doc_id", "text")
+    )
+    text = _formatted(df)
+    assert "hashpartitioning(doc_id" in text
+    (schema,) = re.findall(r"ReadSchema: struct<(.*)>", text)
+    assert [c.split(":")[0] for c in schema.split(",")] == ["doc_id", "text"]
+    (pushed,) = re.findall(r"PushedFilters: \[(.*)\]", text)
+    assert "EqualTo(doc_id,7)" in pushed
+
+
 def _direct_table_reads(path: str) -> list[int]:
     """Line numbers of ``<x>.read.parquet(f"{sf_dir}/...")`` calls."""
     with open(path) as f:
@@ -208,3 +296,34 @@ def test_no_direct_table_reads():
                 rel = os.path.relpath(path, REPO)
                 hits += [f"{rel}:{line}" for line in _direct_table_reads(path)]
     assert not hits, f"{len(hits)} direct table reads: {hits}"
+
+
+def _spread_by_hand(path: str) -> list[int]:
+    """Line numbers of ``load_table(...).repartition(...)`` chains."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    return [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "repartition"
+        and isinstance(n.func.value, ast.Call)
+        and isinstance(n.func.value.func, ast.Name)
+        and n.func.value.func.id == "load_table"
+    ]
+
+
+def test_no_ad_hoc_spreads():
+    """An LLM operator that needs its corpus on every core reads it with
+    ``tables.load_spread``, which adds no exchange when the scan already
+    has the splits; a repartition straight after ``load_table`` would
+    add one at any scale."""
+    hits = []
+    for root, _dirs, files in os.walk(LLM):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                rel = os.path.relpath(path, REPO)
+                hits += [f"{rel}:{line}" for line in _spread_by_hand(path)]
+    assert not hits, f"{len(hits)} ad hoc spreads: {hits}"
