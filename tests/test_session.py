@@ -1,0 +1,147 @@
+"""``get_spark``'s Python workers: they fork from ``flinkrunner_spark.pyworker``,
+which drops Spark's archives from the worker path when the installed
+pyspark matches them, so no task re-reads ``pyspark.zip``; the package
+init imports no pyspark, so the daemon can fix its path first; and the
+workers find the daemon from any working directory."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+import textwrap
+import zipfile
+
+from pyspark.sql import functions as F
+
+from flinkrunner_spark import pyworker
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_worker_loads_installed_pyspark(spark):
+    def worker_view(_):
+        import json
+        import re
+        import sys
+
+        import pyspark
+
+        archive = re.compile(r"\.(zip|jar)($|[/\\])")
+        keys = sorted(k for k in sys.path_importer_cache if archive.search(k))
+        return json.dumps({"pyspark": pyspark.__file__, "keys": keys})
+
+    view = F.udf(worker_view, "string")
+    rows = spark.range(2).repartition(2).select(view("id").alias("v")).collect()
+    for r in rows:
+        got = json.loads(r.v)
+        assert ".zip" not in got["pyspark"] and ".jar" not in got["pyspark"]
+        assert got["keys"] == []
+
+
+def _fake_spark(tmp_path, installed):
+    """(path, rest): a Spark-style worker path over a fake ``pyspark.zip``
+    of version 4.0.0; ``installed`` is the version of the pyspark in the
+    site directory, or None for a site directory with no pyspark; ``rest``
+    is ``path`` without the archives."""
+    lib = tmp_path / "lib"
+    lib.mkdir()
+    with zipfile.ZipFile(lib / "pyspark.zip", "w") as z:
+        z.writestr("pyspark/__init__.py", "")
+        z.writestr("pyspark/version.py", "__version__: str = '4.0.0'\n")
+    with zipfile.ZipFile(lib / "py4j-0.10.9.9-src.zip", "w") as z:
+        z.writestr("py4j/__init__.py", "")
+    (lib / "spark-core_2.13-4.0.0.jar").write_bytes(b"")
+    site = tmp_path / "site"
+    (site / "py4j").mkdir(parents=True)
+    (site / "py4j" / "__init__.py").write_text("")
+    if installed is not None:
+        (site / "pyspark").mkdir()
+        (site / "pyspark" / "__init__.py").write_text("")
+        (site / "pyspark" / "version.py").write_text(
+            f"__version__: str = '{installed}'\n"
+        )
+    work = str(tmp_path / "work")
+    path = [
+        work,
+        str(lib / "pyspark.zip"),
+        str(lib / "py4j-0.10.9.9-src.zip"),
+        str(lib / "spark-core_2.13-4.0.0.jar"),
+        str(site),
+    ]
+    return path, [work, str(site)]
+
+
+def test_path_rule_drops_archives_on_version_match(tmp_path):
+    path, rest = _fake_spark(tmp_path, "4.0.0")
+    assert pyworker.worker_path(path) == rest
+
+
+def test_path_rule_keeps_archives_on_version_mismatch(tmp_path):
+    path, _ = _fake_spark(tmp_path, "4.0.1")
+    assert pyworker.worker_path(path) == path
+
+
+def test_path_rule_keeps_archives_without_installed_pyspark(tmp_path):
+    path, _ = _fake_spark(tmp_path, None)
+    assert pyworker.worker_path(path) == path
+
+
+def test_fix_path_drops_archive_importers(tmp_path, monkeypatch):
+    path, rest = _fake_spark(tmp_path, "4.0.0")
+    zip_ = path[1]
+    cache = {
+        zip_: "zip",
+        os.path.join(zip_, "pyspark"): "zip/pyspark",
+        zip_ + ".bak": "other file",
+        rest[1]: "site",
+    }
+    monkeypatch.setattr(sys, "path", list(path))
+    monkeypatch.setattr(sys, "path_importer_cache", dict(cache))
+    pyworker.fix_path()
+    assert sys.path == rest
+    assert sorted(sys.path_importer_cache) == sorted([zip_ + ".bak", rest[1]])
+
+
+def test_package_init_imports_no_pyspark():
+    prog = textwrap.dedent(
+        """
+        import sys
+        import flinkrunner_spark, flinkrunner_spark.pyworker
+        loaded = [m for m in sys.modules if m.split(".")[0] in ("pyspark", "py4j")]
+        assert not loaded, loaded
+        from flinkrunner_spark import get_spark, TABLES, load_tables, register_views
+        assert callable(get_spark) and callable(load_tables)
+        assert callable(register_views) and "orders" in TABLES
+        """
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", prog], cwd=REPO, capture_output=True,
+        text=True, timeout=120,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+
+
+def test_workers_import_daemon_from_any_directory(tmp_path):
+    prog = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from flinkrunner_spark import get_spark
+        from pyspark.sql import functions as F
+
+        spark = get_spark("session-any-cwd", cpus=1)
+        plus = F.udf(lambda x: x + 1, "long")
+        print([r.y for r in spark.range(3).select(plus("id").alias("y")).collect()])
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    res = subprocess.run(
+        [sys.executable, "-c", prog], cwd=str(tmp_path), capture_output=True,
+        text=True, env=env, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert res.stdout.strip().splitlines()[-1] == "[1, 2, 3]"
