@@ -124,8 +124,8 @@ def parse_bootstrap(servers) -> tuple[str, int]:
 
 def strip_catalog_conf(conf: dict, exclude: tuple = ()) -> dict:
     """``catalog.*`` keys with the prefix stripped (minus ``exclude``) —
-    the catalog-client constructor shape shared by the iceberg sink,
-    source and glue paths."""
+    the catalog-client constructor shape shared by the REST and Glue
+    routes of `iceberg.catalog_from_conf`."""
     return {
         k.split("catalog.", 1)[1]: v
         for k, v in conf.items()

@@ -25,12 +25,7 @@ and scan the filesystem/parquet directly.
 from __future__ import annotations
 
 import json
-import os
-import time
 import urllib.error
-import urllib.request
-
-_JSON11 = "application/x-amz-json-1.1"
 
 
 class GlueCatalogError(RuntimeError):
@@ -124,8 +119,8 @@ class GlueCatalog:
 
     # -- transport ----------------------------------------------------------
 
-    def _credentials(self):
-        from flinkrunner_spark.util.aws_signer import AwsCredentials
+    def _aws(self):
+        from flinkrunner_spark.util.aws_signer import AwsJsonClient
 
         key = self.conf.get("aws.access.key.id")
         if not key:
@@ -135,38 +130,18 @@ class GlueCatalog:
                 "(aws.access.key.id / aws.secret.access.key) — none "
                 "configured"
             )
-        return AwsCredentials(
+        return AwsJsonClient(
+            self._SERVICE,
+            self.region,
             key,
             self.conf.get("aws.secret.access.key", ""),
             self.conf.get("aws.session.token"),
-        )
-
-    def signed_headers(
-        self, target: str, body: bytes, amz_date: str
-    ) -> dict:
-        from flinkrunner_spark.util.aws_signer import sign_request
-
-        return sign_request(
-            method="POST",
-            url=self.endpoint,
-            headers={"Content-Type": _JSON11, "X-Amz-Target": target},
-            payload=body,
-            credentials=self._credentials(),
-            region=self.region,
-            amz_date=amz_date,
-            service=self._SERVICE,
+            self.endpoint,
         )
 
     def _call(self, target: str, body: bytes) -> dict:
-        amz = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
-        req = urllib.request.Request(
-            self.endpoint,
-            data=body,
-            headers=self.signed_headers(target, body, amz),
-            method="POST",
-        )
         try:
-            raw = urllib.request.urlopen(req).read()
+            return self._aws().post(target, body)
         except urllib.error.HTTPError as e:
             try:
                 err = json.loads(e.read().decode())
@@ -176,7 +151,6 @@ class GlueCatalog:
                 f"{target} failed ({e.code}): "
                 f"{err.get('__type', '')} {err.get('Message', '')}"
             ) from None
-        return json.loads(raw) if raw else {}
 
     # -- high-level operations ----------------------------------------------
 
@@ -203,49 +177,36 @@ class GlueCatalog:
             )
         return loc
 
-    def table_location(self, db: str, name: str) -> str:
-        """Table root = dirname of metadata/ = two levels above the
-        metadata file (HadoopTables layout)."""
-        return os.path.dirname(
-            os.path.dirname(self.metadata_location(db, name))
-        )
+    def resolve(self, db: str, name: str):
+        from flinkrunner_spark.iceberg import IcebergFsTable
 
-    def register_fs_table(self, db: str, name: str, fs_table) -> None:
-        """First publish: CreateTable pointing at the table's current
-        metadata file."""
-        self.ensure_database(db)
-        md_path = os.path.join(
-            fs_table.meta_dir, f"v{fs_table._version()}.metadata.json"
-        )
-        self._call(*self.create_table_request(db, name, md_path))
+        return IcebergFsTable.at_metadata(self.metadata_location(db, name))
 
-    def commit_swap(self, db: str, name: str, fs_table) -> None:
-        """Later publishes: compare-then-swap the metadata pointer. The
-        pointer may legitimately lag by SEVERAL versions (filesystem
-        commits made without the catalog in between), so any OLDER
-        version of this table's own metadata lineage advances; a pointer
-        that is newer than ours, or from a different lineage entirely,
-        is a concurrent writer — raise, re-read and retry."""
-        import re
-
-        current = self.metadata_location(db, name)
-        ours = int(fs_table._version())
-        new = os.path.join(fs_table.meta_dir, f"v{ours}.metadata.json")
-        if current == new:
-            return  # already at this tip
-        m = re.fullmatch(
-            re.escape(fs_table.meta_dir) + r"/v(\d+)\.metadata\.json",
-            current,
-        )
-        if m is None or int(m.group(1)) > ours:
+    def publish(self, db: str, name: str, fs_table, md_before=None) -> None:
+        """Publish the table's current metadata file. No Glue table yet:
+        CreateTable (and the database). Otherwise compare-then-swap the
+        pointer with UpdateTable when it is an older version of this
+        table's own lineage (`IcebergFsTable.pointer_lag`); a newer or
+        foreign pointer is a concurrent writer — raise, re-read and
+        retry."""
+        new = fs_table.metadata_file()
+        try:
+            current = self.metadata_location(db, name)
+        except GlueCatalogError as e:
+            if "EntityNotFound" not in str(e):
+                raise
+            self.ensure_database(db)
+            self._call(*self.create_table_request(db, name, new))
+            return
+        lag = fs_table.pointer_lag(current)
+        if lag is None:
             raise GlueCommitConflict(
                 f"glue pointer for {db}.{name} is {current!r} — not an "
                 f"older version of {new!r}; concurrent commit, re-read "
                 "and retry"
             )
-        self._call(
-            *self.update_table_request(db, name, new, current)
-        )
+        if lag:
+            self._call(*self.update_table_request(db, name, new, current))
 
 
 def glue_from_conf(conf: dict) -> GlueCatalog:

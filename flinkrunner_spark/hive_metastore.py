@@ -38,7 +38,7 @@ Partition-level statistics remain out of scope and absent BY NAME
 
 from __future__ import annotations
 
-import os
+import contextlib
 import socket
 import struct
 
@@ -449,6 +449,15 @@ class HiveMetastoreClient:
                 self._sock.close()
             finally:
                 self._sock = None
+
+    @contextlib.contextmanager
+    def _connected(self):
+        """The open connection, or one for the duration of the block."""
+        if self._sock is not None:
+            yield self
+        else:
+            with self:
+                yield self
 
     # -- transport ----------------------------------------------------------
 
@@ -900,28 +909,11 @@ class HiveMetastoreClient:
             )
         return loc
 
-    def table_location(self, db: str, name: str) -> str:
-        """Table root = two levels above the metadata file (HadoopTables
-        layout), same resolution as the Glue / Nessie clients here."""
-        return os.path.dirname(
-            os.path.dirname(self.metadata_location(db, name))
-        )
+    def resolve(self, db: str, name: str):
+        from flinkrunner_spark.iceberg import IcebergFsTable
 
-    def register_fs_table(self, db: str, name: str, fs_table) -> None:
-        """First publish of a filesystem table's metadata pointer."""
-        md_path = os.path.join(
-            fs_table.meta_dir, f"v{fs_table._version()}.metadata.json"
-        )
-        self.create_table(
-            db,
-            name,
-            fs_table.location,
-            {
-                "table_type": ICEBERG_TABLE_TYPE_VALUE,
-                METADATA_LOCATION_PROP: md_path,
-                "EXTERNAL": "TRUE",
-            },
-        )
+        with self._connected():
+            return IcebergFsTable.at_metadata(self.metadata_location(db, name))
 
     def commit_swap(
         self, db: str, name: str, expected: str, new_location: str
@@ -959,38 +951,41 @@ class HiveMetastoreClient:
         finally:
             self.unlock(lockid)
 
-
-    def commit_fs_table(self, db: str, name: str, fs_table) -> None:
-        """Publish a filesystem table's CURRENT tip (register on first
-        publish). Same lineage discipline as the Glue/Nessie clients:
-        the catalog pointer may lag several filesystem commits, so any
-        OLDER version of this table's own metadata lineage advances via
-        the locked CAS; a pointer newer than ours or from a different
-        lineage is a concurrent writer — conflict, re-read and retry."""
-        import re
-
-        try:
-            t = self.get_table(db, name)
-        except NoSuchTable:
-            self.register_fs_table(db, name, fs_table)
-            return
-        ours = int(fs_table._version())
-        new = os.path.join(fs_table.meta_dir, f"v{ours}.metadata.json")
-        cur = str((t.get(TBL_PARAMETERS) or {}).get(
-            METADATA_LOCATION_PROP, ""
-        ))
-        if cur == new:
-            return  # already at this tip
-        m = re.fullmatch(
-            re.escape(fs_table.meta_dir) + r"/v(\d+)\.metadata\.json", cur
-        )
-        if not m or int(m.group(1)) > ours:
-            raise HiveCommitConflict(
-                f"metastore points {db}.{name} at {cur!r} — not an "
-                "older version of this table's lineage; concurrent "
-                "writer, re-read and retry"
-            )
-        self.commit_swap(db, name, cur, new)
+    def publish(self, db: str, name: str, fs_table, md_before=None) -> None:
+        """Publish the table's current metadata file: create the
+        metastore table on first publish; later, the locked CAS advances
+        the pointer when it is an older version of this table's own
+        lineage (`IcebergFsTable.pointer_lag`). A pointer newer than
+        ours or from another lineage is a concurrent writer — conflict,
+        re-read and retry."""
+        new = fs_table.metadata_file()
+        with self._connected():
+            try:
+                t = self.get_table(db, name)
+            except NoSuchTable:
+                self.create_table(
+                    db,
+                    name,
+                    fs_table.location,
+                    {
+                        "table_type": ICEBERG_TABLE_TYPE_VALUE,
+                        METADATA_LOCATION_PROP: new,
+                        "EXTERNAL": "TRUE",
+                    },
+                )
+                return
+            cur = str((t.get(TBL_PARAMETERS) or {}).get(
+                METADATA_LOCATION_PROP, ""
+            ))
+            lag = fs_table.pointer_lag(cur)
+            if lag is None:
+                raise HiveCommitConflict(
+                    f"metastore points {db}.{name} at {cur!r} — not an "
+                    "older version of this table's lineage; concurrent "
+                    "writer, re-read and retry"
+                )
+            if lag:
+                self.commit_swap(db, name, cur, new)
 
 
 def hive_from_conf(conf: dict) -> HiveMetastoreClient:

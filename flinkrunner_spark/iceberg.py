@@ -52,6 +52,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -456,9 +457,34 @@ class IcebergFsTable:
         with open(os.path.join(self.meta_dir, "version-hint.text")) as fh:
             return int(fh.read().strip())
 
+    def metadata_file(self, version: int | None = None) -> str:
+        """Path of ``v{version}.metadata.json`` (default: the current
+        version — the pointer a catalog publishes)."""
+        v = self._version() if version is None else version
+        return os.path.join(self.meta_dir, f"v{v}.metadata.json")
+
+    @classmethod
+    def at_metadata(cls, metadata_location: str) -> "IcebergFsTable":
+        """The table a catalog's metadata pointer names: its root is two
+        levels above the metadata file (HadoopTables layout)."""
+        return cls(os.path.dirname(os.path.dirname(metadata_location)))
+
+    def pointer_lag(self, pointer: str) -> int | None:
+        """How many versions a catalog's metadata pointer trails this
+        table's tip: 0 at the tip, N > 0 for an OLDER version of this
+        table's own metadata lineage (filesystem commits made without
+        the catalog in between — swapping the pointer advances it), and
+        None for a newer pointer or another lineage: a concurrent
+        writer, which every catalog client refuses with its own
+        conflict error."""
+        m = re.fullmatch(
+            re.escape(self.meta_dir) + r"/v(\d+)\.metadata\.json", pointer
+        )
+        lag = self._version() - int(m.group(1)) if m else -1
+        return lag if lag >= 0 else None
+
     def metadata(self) -> dict:
-        v = self._version()
-        with open(os.path.join(self.meta_dir, f"v{v}.metadata.json")) as fh:
+        with open(self.metadata_file()) as fh:
             return json.load(fh)
 
     def _commit(self, md: dict, version: int) -> None:
@@ -469,7 +495,7 @@ class IcebergFsTable:
                 "the remote original; write through the owning catalog"
             )
         os.makedirs(self.meta_dir, exist_ok=True)
-        path = os.path.join(self.meta_dir, f"v{version}.metadata.json")
+        path = self.metadata_file(version)
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
             json.dump(md, fh, indent=1)
@@ -1344,9 +1370,7 @@ class IcebergFsTable:
         md["metadata-log"] = md.get("metadata-log", []) + [
             {
                 "timestamp-ms": snap["timestamp-ms"],
-                "metadata-file": os.path.join(
-                    self.meta_dir, f"v{v}.metadata.json"
-                ),
+                "metadata-file": self.metadata_file(v),
             }
         ]
         self._commit(md, v + 1)
@@ -3974,3 +3998,55 @@ class IcebergFsTable:
             except FileNotFoundError:
                 pass
         return doomed
+
+
+def catalog_from_conf(conf: dict):
+    """The one ``catalog.type`` route (reference
+    `IcebergCommonConfig.scala:14-78`): the catalog client an Iceberg
+    sink publishes through and a source resolves through, or None for a
+    filesystem-only table.
+
+    * ``hive``, ``nessie``, ``glue``: their clients;
+    * ``rest``, ``iceberg``, or no type with a ``catalog.uri``: REST;
+    * ``hadoop``, or no type and no ``catalog.uri``: None;
+    * any other type is refused by name.
+
+    Every client answers ``resolve(namespace, table) -> IcebergFsTable``
+    and ``publish(namespace, table, fs_table, md_before)`` (register the
+    table when the catalog has no entry, else advance its pointer; only
+    REST reads ``md_before``, to find the snapshots a write added).
+    Building a client validates its conf, so a sink calls this before
+    its filesystem commit."""
+    kind = str(
+        conf.get("catalog.type")
+        or ("rest" if conf.get("catalog.uri") else "hadoop")
+    ).lower()
+    if kind == "hadoop":
+        return None
+    if kind == "hive":
+        from flinkrunner_spark.hive_metastore import hive_from_conf
+
+        return hive_from_conf(conf)
+    if kind == "nessie":
+        from flinkrunner_spark.nessie_catalog import nessie_from_conf
+
+        return nessie_from_conf(conf)
+    if kind == "glue":
+        from flinkrunner_spark.glue_catalog import glue_from_conf
+
+        return glue_from_conf(conf)
+    if kind in ("rest", "iceberg"):
+        from flinkrunner_spark.config import strip_catalog_conf
+        from flinkrunner_spark.iceberg_rest import RestCatalog
+
+        return RestCatalog(
+            conf.get("catalog.uri", ""),
+            strip_catalog_conf(
+                conf,
+                exclude=("catalog.uri", "catalog.name", "catalog.type"),
+            ),
+        ).authenticate()
+    raise ValueError(
+        f"unknown catalog.type {conf['catalog.type']!r}: expected hive, "
+        "nessie, glue, rest, iceberg or hadoop"
+    )

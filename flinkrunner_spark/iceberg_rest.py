@@ -8,14 +8,14 @@ same pattern as `util/aws_signer.py` applies: construct every request
 pure-Python (offline-testable), execute over urllib gated on a
 configured ``uri``.
 
-The client fronts the pure-Python filesystem tables in `iceberg.py`:
-``load`` resolves a table's ``metadata-location`` through the catalog
-and opens it as an :class:`~flinkrunner_spark.iceberg.IcebergFsTable`
-when the warehouse is locally reachable (file paths — the filesystem
-warehouse this sandbox supports); ``register_fs_table`` publishes an
-existing filesystem table into the catalog; ``commit_append`` pushes an
-add-snapshot/set-snapshot-ref update with optimistic requirements, the
-spec's commit shape. S3/remote warehouses stay honestly gated.
+The client fronts the pure-Python filesystem tables in `iceberg.py`
+and is built by `iceberg.catalog_from_conf`: ``resolve`` opens the
+table at the catalog's ``metadata-location`` as an
+:class:`~flinkrunner_spark.iceberg.IcebergFsTable` (local paths,
+``warehouse.mapping`` mounts, or an ``s3://`` mirror through the
+jar-free S3 FileIO); ``publish`` registers a filesystem table on first
+publish and later pushes an add-snapshot/set-snapshot-ref update with
+optimistic requirements, the spec's commit shape.
 
 `integration/docker-compose.yml` carries a lakekeeper recipe for the
 real-server path; tests/test_iceberg_rest.py drives the full flow
@@ -303,7 +303,7 @@ class RestCatalog:
             session_token=self.conf.get("s3.session.token"),
         )
 
-    def fs_table(self, namespace, table: str):
+    def resolve(self, namespace, table: str):
         """Resolve through the catalog, open as a filesystem table.
 
         ``s3://`` locations resolve through the jar-free S3 FileIO when
@@ -337,20 +337,26 @@ class RestCatalog:
                 return s3_fileio.open_s3_table(loc, client, cache, **kw)
         return IcebergFsTable(self._local_location(loc))
 
-    def read(self, spark, namespace, table: str):
-        return self.fs_table(namespace, table).read(spark)
-
-    def register_fs_table(self, namespace, table: str, fs_table) -> dict:
-        v = fs_table._version()
-        meta_loc = f"{fs_table.meta_dir}/v{v}.metadata.json"
-        return self._call(
-            *self.register_table_request(namespace, table, meta_loc)
-        )
-
-    def commit_append(
-        self, namespace, table: str, md_before: dict, md_after: dict
-    ) -> dict:
-        reqs, ups = self.append_commit_payload(md_before, md_after)
-        return self._call(
-            *self.commit_table_request(namespace, table, reqs, ups)
-        )
+    def publish(self, namespace, table: str, fs_table, md_before=None):
+        """Publish a filesystem table's write. When the catalog answers
+        404 for the table, create the namespace and register the current
+        metadata file; otherwise push the snapshots the write added
+        since ``md_before`` as one add-snapshot/set-snapshot-ref commit
+        asserted on ``md_before``'s main tip (`append_commit_payload`)."""
+        try:
+            self.load_table(namespace, table)
+        except RestCatalogError as e:
+            if "HTTP 404" not in str(e):
+                raise
+            self.create_namespace(namespace)
+            self._call(*self.register_table_request(
+                namespace, table, fs_table.metadata_file()
+            ))
+            return
+        try:
+            reqs, ups = self.append_commit_payload(
+                md_before or {}, fs_table.metadata()
+            )
+        except RestCatalogError:  # no new snapshots: nothing to publish
+            return
+        self._call(*self.commit_table_request(namespace, table, reqs, ups))

@@ -29,8 +29,6 @@ tiny JSON calls — table data never touches this path; readers resolve
 from __future__ import annotations
 
 import json
-import os
-import re
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -129,11 +127,11 @@ class NessieCatalog:
             )
         return c["metadataLocation"]
 
-    def table_location(self, namespace: str, table: str) -> str:
-        """Table root = two levels above the metadata file (HadoopTables
-        layout), same resolution as the Glue client."""
-        return os.path.dirname(
-            os.path.dirname(self.metadata_location(namespace, table))
+    def resolve(self, namespace: str, table: str):
+        from flinkrunner_spark.iceberg import IcebergFsTable
+
+        return IcebergFsTable.at_metadata(
+            self.metadata_location(namespace, table)
         )
 
     # -- commits ---------------------------------------------------------------
@@ -173,60 +171,50 @@ class NessieCatalog:
         )
         return out["targetBranch"]["hash"]
 
-    def register_fs_table(self, namespace: str, table: str, fs_table) -> str:
-        """First publish: PUT the table's current metadata pointer at
-        the branch head."""
-        md_path = os.path.join(
-            fs_table.meta_dir, f"v{fs_table._version()}.metadata.json"
-        )
-        return self.commit_put(
-            namespace,
-            table,
-            md_path,
-            self.branch_head(),
-            message=f"register {namespace}.{table}",
-        )
-
-    def commit_swap(self, namespace: str, table: str, fs_table) -> str:
-        """Later publishes: advance the metadata pointer. Same lineage
-        discipline as the Glue client: the catalog pointer may lag by
-        several filesystem commits, so any OLDER version of this
-        table's own metadata lineage advances; a pointer that is newer
-        than ours, or from a different lineage, is a concurrent writer
-        — raise so the caller re-reads and retries."""
+    def publish(
+        self, namespace: str, table: str, fs_table, md_before=None
+    ) -> None:
+        """PUT the table's current metadata file at the branch head. No
+        content yet: a new ICEBERG_TABLE content. Otherwise the pointer
+        advances (carrying the content id) when it is an older version
+        of this table's own lineage (`IcebergFsTable.pointer_lag`); a
+        newer or foreign pointer is a concurrent writer — raise so the
+        caller re-reads and retries."""
+        new = fs_table.metadata_file()
         current = self.get_content([namespace, table])
-        if current is None:
-            return self.register_fs_table(namespace, table, fs_table)
-        ours = int(fs_table._version())
-        new = os.path.join(fs_table.meta_dir, f"v{ours}.metadata.json")
-        cur_loc = current.get("metadataLocation", "")
-        if cur_loc == new:
-            return self.branch_head()  # already at this tip
-        m = re.fullmatch(
-            re.escape(fs_table.meta_dir) + r"/v(\d+)\.metadata\.json",
-            cur_loc,
-        )
-        if not m or int(m.group(1)) > ours:
-            raise NessieCommitConflict(
-                409,
-                f"branch {self.ref} points {namespace}.{table} at "
-                f"{cur_loc!r} — not an older version of this table's "
-                "lineage; concurrent writer, re-read and retry",
-            )
-        return self.commit_put(
+        content_id = None
+        if current is not None:
+            cur_loc = current.get("metadataLocation", "")
+            lag = fs_table.pointer_lag(cur_loc)
+            if lag is None:
+                raise NessieCommitConflict(
+                    409,
+                    f"branch {self.ref} points {namespace}.{table} at "
+                    f"{cur_loc!r} — not an older version of this table's "
+                    "lineage; concurrent writer, re-read and retry",
+                )
+            if lag == 0:
+                return  # already at this tip
+            content_id = current.get("id")
+        self.commit_put(
             namespace,
             table,
             new,
             self.branch_head(),
-            content_id=current.get("id"),
-            message=f"advance {namespace}.{table} to v{ours}",
+            content_id=content_id,
+            message=f"publish {namespace}.{table} at {new}",
         )
 
 
 def nessie_from_conf(conf: dict) -> NessieCatalog:
     """Build from the sink/source's ``catalog.*`` config keys."""
+    if not conf.get("catalog.uri"):
+        raise ValueError(
+            "catalog.type nessie needs catalog.uri (the Nessie API v2 "
+            "base, e.g. http://host:19120/api/v2)"
+        )
     return NessieCatalog(
-        conf.get("catalog.uri", ""),
+        conf["catalog.uri"],
         {
             "ref": conf.get("catalog.ref", "main"),
             "token": conf.get("catalog.token"),

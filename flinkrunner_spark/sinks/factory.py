@@ -72,9 +72,19 @@ class SinkConfig:
         raise NotImplementedError
 
     def write_stream(self, df: DataFrame):
-        raise NotImplementedError(
-            f"sink '{self.connector}' does not support streaming writes"
+        """Streaming writes via foreachBatch: each micro-batch is one
+        batch ``write`` (for Iceberg, one append snapshot — the Flink
+        sink's checkpoint-commit cadence). A configured ``checkpoint``
+        lets a restarted stream resume where it stopped instead of
+        reprocessing from scratch."""
+        writer = df.writeStream.foreachBatch(
+            lambda bdf, _epoch: self.write(bdf)
         )
+        if self.conf.get("checkpoint"):
+            writer = writer.option(
+                "checkpointLocation", self.conf["checkpoint"]
+            )
+        return writer.start()
 
 
 class FileSinkConfig(SinkConfig):
@@ -748,12 +758,6 @@ class JdbcSinkConfig(SinkConfig):
             .save()
         )
 
-    def write_stream(self, df: DataFrame):
-        def _batch(bdf: DataFrame, epoch_id: int):
-            self.write(bdf)
-
-        return df.writeStream.foreachBatch(_batch).start()
-
 
 class SocketSinkConfig(SinkConfig):
     """Newline-delimited JSON over TCP (reference SocketSinkConfig.scala).
@@ -787,12 +791,6 @@ class SocketSinkConfig(SinkConfig):
 
         out.foreachPartition(send_partition)
 
-    def write_stream(self, df: DataFrame):
-        def _batch(bdf: DataFrame, epoch_id: int):
-            self.write(bdf)
-
-        return df.writeStream.foreachBatch(_batch).start()
-
 
 class IcebergSinkConfig(SinkConfig):
     """Iceberg sink (reference `model/sink/IcebergSinkConfig.scala:29-114`).
@@ -804,23 +802,21 @@ class IcebergSinkConfig(SinkConfig):
     pure-Python HadoopTables-layout fallback (`flinkrunner_spark.iceberg`
     — parquet, append/overwrite/upsert, identity + year/month/day/hour/
     bucket[N]/truncate[W] partition transforms), so local
-    and test pipelines run the real table format end-to-end jar-free."""
+    and test pipelines run the real table format end-to-end jar-free.
+    Each filesystem commit then publishes to the catalog that
+    `iceberg.catalog_from_conf` builds from the ``catalog.*`` conf."""
 
     def write(self, df: DataFrame):
-        if str(self.conf.get("catalog.type", "")).lower() == "hive":
-            # validate the metastore conf BEFORE the filesystem commit —
-            # a write that lands but can never publish to the configured
-            # catalog is worse than a loud no-op (r7 discipline, kept
-            # now that hive resolves through the thrift client)
-            from flinkrunner_spark.hive_metastore import hive_from_conf
+        from flinkrunner_spark.iceberg import IcebergFsTable, catalog_from_conf
 
-            hive_from_conf(self.conf)
+        # build (and so validate) the catalog client BEFORE the
+        # filesystem commit: a write that lands but can never publish
+        # to the configured catalog is worse than a loud no-op
+        cat = catalog_from_conf(self.conf)
         path = self.conf.get("path")
         if path is None and "/" in str(self.conf.get("table", "")):
             path = self.conf["table"]
         if path is not None:
-            from flinkrunner_spark.iceberg import IcebergFsTable
-
             t = IcebergFsTable(path)
             md_before = t.metadata() if t.exists() else {}
             # entries: bare column (identity), "day(ts)"-style calls, or
@@ -835,7 +831,15 @@ class IcebergSinkConfig(SinkConfig):
                 t.overwrite(df, partition_by=part)
             else:
                 t.append(df, partition_by=part)
-            self._publish_to_catalog(t, md_before)
+            # keep catalog readers (trino, other spark clusters) at the
+            # same tip as the version-hint
+            if cat is not None:
+                cat.publish(
+                    self.conf.get("namespace", "default"),
+                    self.conf.get("table", self.name),
+                    t,
+                    md_before,
+                )
             return
         try:
             df.writeTo(self.conf["table"]).append()
@@ -845,97 +849,6 @@ class IcebergSinkConfig(SinkConfig):
                 "catalog tables; pass a filesystem 'path' for the jar-free "
                 "HadoopTables-layout subset"
             ) from e
-
-    def _publish_to_catalog(self, t, md_before: dict):
-        """After a filesystem commit, publish to a configured REST
-        catalog (`catalog.uri`): first write registers the table, later
-        appends push add-snapshot/set-snapshot-ref commits — keeping
-        catalog readers (trino, other spark clusters) at the same tip
-        as the version-hint. ``catalog.type: glue`` publishes the
-        iceberg-on-glue metadata_location pointer instead (CreateTable
-        first, compare-then-swap UpdateTable after — `glue_catalog`).
-        ``catalog.type: nessie`` commits the pointer to a Nessie branch
-        (CAS on the branch head — `nessie_catalog`). ``catalog.type:
-        hive`` (r10) publishes through the thrift metastore client —
-        EXCLUSIVE table lock, re-read under lock, CAS on
-        metadata_location, alter, unlock (`hive_metastore`, the
-        HiveTableOperations discipline). No catalog configured →
-        filesystem-only, unchanged behavior."""
-        cat_type = str(self.conf.get("catalog.type", "")).lower()
-        if cat_type == "hive":
-            from flinkrunner_spark.hive_metastore import hive_from_conf
-
-            db = self.conf.get("namespace", "default")
-            table = self.conf.get("table", self.name)
-            with hive_from_conf(self.conf) as cat:
-                cat.commit_fs_table(db, table, t)
-            return
-        if cat_type == "nessie":
-            from flinkrunner_spark.nessie_catalog import nessie_from_conf
-
-            cat = nessie_from_conf(self.conf)
-            ns = self.conf.get("namespace", "default")
-            table = self.conf.get("table", self.name)
-            if not md_before:
-                cat.register_fs_table(ns, table, t)
-            else:
-                cat.commit_swap(ns, table, t)
-            return
-        if cat_type == "glue":
-            from flinkrunner_spark.glue_catalog import glue_from_conf
-
-            cat = glue_from_conf(self.conf)
-            db = self.conf.get("namespace", "default")
-            table = self.conf.get("table", self.name)
-            if not md_before:
-                cat.register_fs_table(db, table, t)
-            else:
-                cat.commit_swap(db, table, t)
-            return
-        uri = self.conf.get("catalog.uri")
-        if not uri:
-            return
-        from flinkrunner_spark.iceberg_rest import (
-            RestCatalog,
-            RestCatalogError,
-        )
-
-        from flinkrunner_spark.config import strip_catalog_conf
-
-        cat = RestCatalog(
-            uri,
-            strip_catalog_conf(
-                self.conf,
-                exclude=("catalog.uri", "catalog.name", "catalog.type"),
-            ),
-        ).authenticate()
-        ns = self.conf.get("namespace", "default")
-        table = self.conf.get("table", self.name)
-        md_after = t.metadata()
-        if not md_before:
-            cat.create_namespace(ns)
-            cat.register_fs_table(ns, table, t)
-        else:
-            try:
-                cat.commit_append(ns, table, md_before, md_after)
-            except RestCatalogError as e:
-                if "no new snapshots" not in str(e):
-                    raise
-
-    def write_stream(self, df: DataFrame):
-        """Streaming appends via foreachBatch — each micro-batch commits
-        one append snapshot (exactly the Flink sink's checkpoint-commit
-        cadence in the reference)."""
-
-        def _batch(bdf: DataFrame, epoch_id: int):
-            self.write(bdf)
-
-        writer = df.writeStream.foreachBatch(_batch)
-        if self.conf.get("checkpoint"):
-            writer = writer.option(
-                "checkpointLocation", self.conf["checkpoint"]
-            )
-        return writer.start()
 
 
 def post_with_partial_retry(
@@ -1067,34 +980,16 @@ class KinesisSinkConfig(SinkConfig):
             to_batches, schema="n_records int, n_bytes long, body string"
         )
 
-    def signed_headers(self, body: bytes, amz_date: str) -> dict:
-        """SigV4-signed headers for one API call (exposed for tests)."""
-        from flinkrunner_spark.util.aws_signer import (
-            AwsCredentials,
-            sign_request,
-        )
+    def _aws(self):
+        from flinkrunner_spark.util.aws_signer import AwsJsonClient
 
-        region = self.conf.get("region", "us-east-1")
-        creds = AwsCredentials(
+        return AwsJsonClient(
+            self._SERVICE,
+            self.conf.get("region", "us-east-1"),
             self.conf.get("aws.access.key.id", ""),
             self.conf.get("aws.secret.access.key", ""),
             self.conf.get("aws.session.token"),
-        )
-        endpoint = self.conf.get(
-            "endpoint", f"https://{self._SERVICE}.{region}.amazonaws.com/"
-        )
-        return sign_request(
-            method="POST",
-            url=endpoint,
-            headers={
-                "Content-Type": "application/x-amz-json-1.1",
-                "X-Amz-Target": self._API_TARGET,
-            },
-            payload=body,
-            credentials=creds,
-            region=region,
-            amz_date=amz_date,
-            service=self._SERVICE,
+            self.conf.get("endpoint"),
         )
 
     def write(self, df: DataFrame):
@@ -1105,31 +1000,17 @@ class KinesisSinkConfig(SinkConfig):
                 "(aws.access.key.id / aws.secret.access.key) and a "
                 "reachable endpoint — none configured"
             )
-        conf = self.conf
-        service = self._SERVICE
-        region = conf.get("region", "us-east-1")
-        endpoint = conf.get(
-            "endpoint", f"https://{service}.{region}.amazonaws.com/"
-        )
-        signed = self.signed_headers
+        aws, target = self._aws(), self._API_TARGET
         failed_fn = self.failed_records
         field, stream = self._stream_field()
-        max_retries = int(conf.get("max.retries", 3))
-        backoff_s = float(conf.get("retry.backoff.sec", 0.2))
+        max_retries = int(self.conf.get("max.retries", 3))
+        backoff_s = float(self.conf.get("retry.backoff.sec", 0.2))
 
         def post_partition(rows):
             import json as _json
-            import time
-            import urllib.request
 
             def post(body: bytes) -> dict:
-                amz = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
-                hdrs = signed(body, amz)
-                req = urllib.request.Request(
-                    endpoint, data=body, headers=hdrs, method="POST"
-                )
-                raw = urllib.request.urlopen(req).read()
-                return _json.loads(raw) if raw else {}
+                return aws.post(target, body)
 
             for row in rows:
                 payload = _json.loads(row["body"])
@@ -1145,17 +1026,6 @@ class KinesisSinkConfig(SinkConfig):
                 )
 
         self.prepare_batches(df).foreachPartition(post_partition)
-
-    def write_stream(self, df: DataFrame):
-        def _batch(bdf: DataFrame, epoch_id: int):
-            self.write(bdf)
-
-        writer = df.writeStream.foreachBatch(_batch)
-        if self.conf.get("checkpoint"):
-            writer = writer.option(
-                "checkpointLocation", self.conf["checkpoint"]
-            )
-        return writer.start()
 
 
 class FirehoseSinkConfig(KinesisSinkConfig):
@@ -1301,17 +1171,6 @@ class ElasticsearchSinkConfig(SinkConfig):
                 out.append(pair)
         return out
 
-    def write_stream(self, df: DataFrame):
-        def _batch(bdf: DataFrame, epoch_id: int):
-            self.write(bdf)
-
-        writer = df.writeStream.foreachBatch(_batch)
-        if self.conf.get("checkpoint"):
-            writer = writer.option(
-                "checkpointLocation", self.conf["checkpoint"]
-            )
-        return writer.start()
-
 
 class CassandraSinkConfig(SinkConfig):
     """Cassandra sink (reference `model/sink/CassandraSinkConfig.scala:
@@ -1453,17 +1312,6 @@ class CassandraSinkConfig(SinkConfig):
 
         self.prepare_statements(df).foreachPartition(exec_partition)
 
-    def write_stream(self, df: DataFrame):
-        def _batch(bdf: DataFrame, epoch_id: int):
-            self.write(bdf)
-
-        writer = df.writeStream.foreachBatch(_batch)
-        if self.conf.get("checkpoint"):
-            writer = writer.option(
-                "checkpointLocation", self.conf["checkpoint"]
-            )
-        return writer.start()
-
 
 class RabbitMQSinkConfig(SinkConfig):
     """RabbitMQ sink (reference `model/sink/RabbitMQSinkConfig.scala:
@@ -1553,17 +1401,6 @@ class RabbitMQSinkConfig(SinkConfig):
 
         msgs.foreachPartition(publish_partition)
 
-    def write_stream(self, df: DataFrame):
-        def _batch(bdf: DataFrame, epoch_id: int):
-            self.write(bdf)
-
-        writer = df.writeStream.foreachBatch(_batch)
-        if self.conf.get("checkpoint"):
-            writer = writer.option(
-                "checkpointLocation", self.conf["checkpoint"]
-            )
-        return writer.start()
-
 
 class UnsupportedSinkConfig(SinkConfig):
     def write(self, df: DataFrame):
@@ -1572,6 +1409,8 @@ class UnsupportedSinkConfig(SinkConfig):
             "environment; use foreachBatch with the service's client "
             "library"
         )
+
+    write_stream = write  # refuse at start, not on the first micro-batch
 
 
 _SINKS = {

@@ -512,92 +512,44 @@ class MemorySourceConfig(SourceConfig):
 
 class IcebergSourceConfig(SourceConfig):
     """Iceberg source (reference `model/source/IcebergSourceConfig.scala:
-    28-85`). Catalog tables need the runtime jar; a filesystem `path`
+    28-85`). A catalog table resolves through the client that
+    `iceberg.catalog_from_conf` builds from the ``catalog.*`` conf;
+    without a catalog it needs the runtime jar. A filesystem `path`
     (or path-shaped `table`) reads through the jar-free
     HadoopTables-layout subset in `flinkrunner_spark.iceberg` —
     version-hint → metadata → current snapshot → manifests → parquet
     scan, refusing (not mis-reading) delete files / partitioned specs."""
 
     def load(self, spark: SparkSession) -> DataFrame:
+        from flinkrunner_spark.iceberg import IcebergFsTable, catalog_from_conf
+
         table = self.conf.get("table", "")
         path = self.conf.get("path")
         if path is None and "/" in str(table):
             path = table
-        cat_type = str(self.conf.get("catalog.type", "")).lower()
-        if path is None and cat_type == "hive":
-            # reference IcebergCommonConfig.scala:56-71 routes 'hive' to
-            # CatalogLoader.hive; the pure-Python thrift-binary client
-            # (`hive_metastore.py`, r10 — replacing the r9 named
-            # refusal) resolves the Iceberg table's metadata_location
-            # from the metastore Table parameters and the filesystem
-            # reader takes over, like the glue/nessie/rest routes.
-            from flinkrunner_spark.hive_metastore import hive_from_conf
-
-            with hive_from_conf(self.conf) as cat:
-                path = cat.table_location(
-                    self.conf.get("namespace", "default"), table
-                )
-        if path is None and cat_type == "nessie":
-            # reference IcebergCommonConfig.scala:56-71 routes 'nessie'
-            # to the iceberg-nessie NessieCatalog; the pure-Python
-            # client resolves the ICEBERG_TABLE content's
-            # metadataLocation at the branch head and the filesystem
-            # reader takes over.
-            from flinkrunner_spark.nessie_catalog import nessie_from_conf
-
-            cat = nessie_from_conf(self.conf)
-            path = cat.table_location(
-                self.conf.get("namespace", "default"), table
-            )
-        if path is None and cat_type == "glue":
-            # reference IcebergCommonConfig.scala:14-78 routes
-            # catalog.type 'glue' to the iceberg-aws GlueCatalog; the
-            # pure-Python client resolves Parameters.metadata_location
-            # and the filesystem reader takes over.
-            from flinkrunner_spark.glue_catalog import glue_from_conf
-
-            cat = glue_from_conf(self.conf)
-            path = cat.table_location(
-                self.conf.get("namespace", "default"), table
-            )
-        if path is None and cat_type in ("rest", "iceberg"):
-            # reference IcebergCommonConfig.scala:56-76 routes
-            # catalog.type 'iceberg' to the RESTCatalog impl; here the
-            # pure-Python REST client resolves the table's location and
-            # the filesystem reader takes over (locally reachable
-            # warehouses; remote FileIO schemes stay jar-gated).
-            from flinkrunner_spark.iceberg_rest import RestCatalog
-
-            from flinkrunner_spark.config import strip_catalog_conf
-
-            cat = RestCatalog(
-                self.conf.get("catalog.uri", ""),
-                strip_catalog_conf(
-                    self.conf,
-                    exclude=("catalog.uri", "catalog.name",
-                             "catalog.type"),
-                ),
-            ).authenticate()
-            ns = self.conf.get("namespace", "default")
-            path = cat.fs_table(ns, table).location
-        if path is not None and not self.streaming:
-            from flinkrunner_spark.iceberg import IcebergFsTable
-
+        cat = catalog_from_conf(self.conf)
+        t = None
+        if path is not None:
+            t = IcebergFsTable(path)
+        elif cat is not None:
+            # the catalog resolves the table's metadata pointer and the
+            # filesystem reader takes over — reading the resolved table
+            # itself keeps an s3:// mirror's path mapping
+            t = cat.resolve(self.conf.get("namespace", "default"), table)
+        if t is not None and not self.streaming:
             snap = self.conf.get("snapshot-id")
             as_of = self.conf.get("as-of-timestamp-ms")
-            return IcebergFsTable(path).read(
+            return t.read(
                 spark,
                 snapshot_id=int(snap) if snap is not None else None,
                 as_of_ms=int(as_of) if as_of is not None else None,
                 partition_filter=self.conf.get("partition-filter"),
             )
-        if path is not None and self.streaming:
+        if t is not None:
             # reference streaming strategies (IcebergSourceConfig.scala:
             # 39-57): earliest / table-scan-then-incremental map to the
             # jar-free append-only file stream; the offset-tracking
             # strategies stay gated.
-            from flinkrunner_spark.iceberg import IcebergFsTable
-
             strategy = str(
                 self.conf.get("start.strategy", "earliest")
             ).lower().replace("-", "_")
@@ -607,7 +559,7 @@ class IcebergSourceConfig(SourceConfig):
                 "table_scan_then_incremental",
                 "incremental_from_earliest_snapshot",
             ):
-                return IcebergFsTable(path).read_stream(spark)
+                return t.read_stream(spark)
             raise RuntimeError(
                 f"start.strategy {strategy!r} needs source-side snapshot "
                 "offsets — use the iceberg-spark runtime jar, or poll "
@@ -741,44 +693,20 @@ class KinesisSourceConfig(SourceConfig):
         "partition_key string, arrival_ts double, value string"
     )
 
-    def _post(self, target: str, body: bytes) -> dict:
-        import json as _json
-        import urllib.request
-        from datetime import datetime, timezone
+    def _aws(self, endpoint: str | None = None):
+        from flinkrunner_spark.util.aws_signer import AwsJsonClient
 
-        from flinkrunner_spark.util.aws_signer import (
-            AwsCredentials,
-            sign_request,
-        )
-
-        region = self.conf.get("aws.region", "us-east-1")
-        endpoint = self.conf.get(
-            "aws.endpoint", f"https://kinesis.{region}.amazonaws.com/"
-        )
-        creds = AwsCredentials(
+        return AwsJsonClient(
+            self._SERVICE,
+            self.conf.get("aws.region", "us-east-1"),
             self.conf.get("aws.access.key.id", ""),
             self.conf.get("aws.secret.access.key", ""),
             self.conf.get("aws.session.token"),
+            endpoint or self.conf.get("aws.endpoint"),
         )
-        amz = datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%SZ")
-        headers = sign_request(
-            method="POST",
-            url=endpoint,
-            headers={
-                "Content-Type": "application/x-amz-json-1.1",
-                "X-Amz-Target": target,
-            },
-            payload=body,
-            credentials=creds,
-            region=region,
-            amz_date=amz,
-            service=self._SERVICE,
-        )
-        req = urllib.request.Request(
-            endpoint, data=body, headers=headers, method="POST"
-        )
-        with urllib.request.urlopen(req, timeout=30) as r:
-            return _json.loads(r.read().decode())
+
+    def _post(self, target: str, body: bytes) -> dict:
+        return self._aws().post(target, body)
 
     def load(self, spark: SparkSession) -> DataFrame:
         if self.streaming:
@@ -917,26 +845,15 @@ class KinesisSourceConfig(SourceConfig):
         import json as _json
         import socket as _socket
         import ssl as _ssl
-        from datetime import datetime, timezone
         from urllib.parse import urlparse
 
         from flinkrunner_spark.util import eventstream, h2
-        from flinkrunner_spark.util.aws_signer import (
-            AwsCredentials,
-            sign_request,
-        )
 
-        region = self.conf.get("aws.region", "us-east-1")
         # SubscribeToShard speaks HTTP/2; ``efo.endpoint`` lets a test
         # split it from the x-amz-json endpoint (real AWS serves both on
         # one host via TLS ALPN)
-        endpoint = self.conf.get(
-            "efo.endpoint",
-            self.conf.get(
-                "aws.endpoint", f"https://kinesis.{region}.amazonaws.com/"
-            ),
-        )
-        u = urlparse(endpoint)
+        aws = self._aws(self.conf.get("efo.endpoint"))
+        u = urlparse(aws.endpoint)
         port = u.port or (443 if u.scheme == "https" else 80)
         body = _json.dumps(
             {
@@ -945,24 +862,7 @@ class KinesisSourceConfig(SourceConfig):
                 "StartingPosition": starting,
             }
         ).encode()
-        amz = datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%SZ")
-        signed = sign_request(
-            method="POST",
-            url=endpoint,
-            headers={
-                "Content-Type": "application/x-amz-json-1.1",
-                "X-Amz-Target": "Kinesis_20131202.SubscribeToShard",
-            },
-            payload=body,
-            credentials=AwsCredentials(
-                self.conf.get("aws.access.key.id", ""),
-                self.conf.get("aws.secret.access.key", ""),
-                self.conf.get("aws.session.token"),
-            ),
-            region=region,
-            amz_date=amz,
-            service=self._SERVICE,
-        )
+        signed = aws.signed_headers("Kinesis_20131202.SubscribeToShard", body)
         headers = [
             (":method", "POST"),
             (":scheme", u.scheme),

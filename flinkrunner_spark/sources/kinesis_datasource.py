@@ -52,42 +52,16 @@ class KinesisSimpleStreamReader(SimpleDataSourceStreamReader):
     # -- signed transport (same request builders as the batch source) -------
 
     def _post(self, target: str, body: bytes) -> dict:
-        import urllib.request
-        from datetime import datetime, timezone
+        from flinkrunner_spark.util.aws_signer import AwsJsonClient
 
-        from flinkrunner_spark.util.aws_signer import (
-            AwsCredentials,
-            sign_request,
-        )
-
-        region = self.opts.get("region", "us-east-1")
-        endpoint = self.opts.get(
-            "endpoint", f"https://kinesis.{region}.amazonaws.com/"
-        )
-        creds = AwsCredentials(
+        return AwsJsonClient(
+            "kinesis",
+            self.opts.get("region", "us-east-1"),
             self.opts.get("accesskey", ""),
             self.opts.get("secretkey", ""),
-            self.opts.get("sessiontoken") or None,
-        )
-        amz = datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%SZ")
-        headers = sign_request(
-            method="POST",
-            url=endpoint,
-            headers={
-                "Content-Type": "application/x-amz-json-1.1",
-                "X-Amz-Target": target,
-            },
-            payload=body,
-            credentials=creds,
-            region=region,
-            amz_date=amz,
-            service="kinesis",
-        )
-        req = urllib.request.Request(
-            endpoint, data=body, headers=headers, method="POST"
-        )
-        with urllib.request.urlopen(req, timeout=30) as r:
-            return json.loads(r.read().decode())
+            self.opts.get("sessiontoken"),
+            self.opts.get("endpoint"),
+        ).post(target, body)
 
     def _shard_ids(self) -> list[str]:
         resp = self._post(

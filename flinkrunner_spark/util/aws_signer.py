@@ -10,6 +10,10 @@ is available). Mirrored behaviors: service inference from
 ``<service>[.<region>].amazonaws.com`` hosts, single URL-encoding for s3
 vs double for other services, and the s3 x-amz-content-sha256 header.
 
+``AwsJsonClient`` is the one signed ``x-amz-json-1.1`` POST: the
+Kinesis source and stream reader, the Kinesis/Firehose sink and the
+Glue catalog each build one from their own conf keys.
+
 Validated in tests/test_aws_signer.py against the worked example vector
 published in the AWS General Reference "Signature Version 4 signing
 process" documentation (AKIDEXAMPLE / ListUsers on iam).
@@ -169,3 +173,66 @@ def sign_request(
         f"SignedHeaders={signed_headers}, Signature={signature}"
     )
     return out
+
+
+class AwsJsonClient:
+    """One AWS JSON-1.1 service endpoint (Kinesis, Firehose, Glue):
+    every call is a SigV4-signed POST of a JSON body with an
+    ``X-Amz-Target`` operation header, answered with a JSON body.
+    Callers map their own conf keys onto the constructor; ``endpoint``
+    defaults to the public ``https://<service>.<region>.amazonaws.com/``
+    and overrides for localstack-style endpoints. HTTP errors propagate
+    as ``urllib.error.HTTPError`` for the caller to map."""
+
+    def __init__(
+        self,
+        service: str,
+        region: str,
+        access_key: str,
+        secret_key: str,
+        session_token: str | None = None,
+        endpoint: str | None = None,
+    ):
+        self.service, self.region = service, region
+        self.endpoint = (
+            endpoint or f"https://{service}.{region}.amazonaws.com/"
+        )
+        self.credentials = AwsCredentials(
+            access_key, secret_key, session_token or None
+        )
+
+    def signed_headers(
+        self, target: str, body: bytes, amz_date: str | None = None
+    ) -> dict[str, str]:
+        """Headers for one call; ``amz_date`` pins the clock for
+        offline tests (default: now, UTC)."""
+        import time
+
+        return sign_request(
+            method="POST",
+            url=self.endpoint,
+            headers={
+                "Content-Type": "application/x-amz-json-1.1",
+                "X-Amz-Target": target,
+            },
+            payload=body,
+            credentials=self.credentials,
+            region=self.region,
+            amz_date=amz_date
+            or time.strftime("%Y%m%dT%H%M%SZ", time.gmtime()),
+            service=self.service,
+        )
+
+    def post(self, target: str, body: bytes, timeout: float = 30.0) -> dict:
+        import json
+        import urllib.request
+
+        req = urllib.request.Request(
+            self.endpoint,
+            data=body,
+            headers=self.signed_headers(target, body),
+            method="POST",
+        )
+        with urllib.request.urlopen(req, timeout=timeout) as r:
+            raw = r.read()
+        return json.loads(raw) if raw else {}

@@ -146,8 +146,8 @@ def test_kinesis_batching_and_request_shape(spark):
     nb = tiny.prepare_batches(df.coalesce(1)).collect()
     assert all(b["n_records"] == 1 for b in nb) and len(nb) == 25
 
-    hdrs = sink.signed_headers(
-        batches[0]["body"].encode(), "20240101T000000Z"
+    hdrs = sink._aws().signed_headers(
+        sink._API_TARGET, batches[0]["body"].encode(), "20240101T000000Z"
     )
     assert hdrs["x-amz-target"] == "Kinesis_20131202.PutRecords"
     assert "Credential=/20240101/us-east-1/kinesis/aws4_request" in hdrs[

@@ -58,7 +58,7 @@ def test_request_shapes():
 def test_signed_headers_offline():
     c = GlueCatalog(CREDS)
     t, b = c.get_table_request("d", "t")
-    hdrs = c.signed_headers(t, b, "20260101T000000Z")
+    hdrs = c._aws().signed_headers(t, b, "20260101T000000Z")
     auth = hdrs["authorization"]
     assert auth.startswith("AWS4-HMAC-SHA256 Credential=k/20260101/us-east-1/glue/aws4_request")
     assert "SignedHeaders=" in auth and "Signature=" in auth
@@ -83,7 +83,7 @@ def test_database_and_table_lifecycle():
         c.ensure_database("db")  # idempotent
         c._call(*c.create_table_request("db", "t", "/wh/t/metadata/v1.metadata.json"))
         assert c.metadata_location("db", "t").endswith("v1.metadata.json")
-        assert c.table_location("db", "t") == "/wh/t"
+        assert c.resolve("db", "t").location == "/wh/t"
         c._call(
             *c.update_table_request(
                 "db", "t", "/wh/t/metadata/v2.metadata.json",
@@ -127,22 +127,22 @@ def test_commit_swap_conflict_detection(spark, tmp_path):
     t.append(spark.range(5).selectExpr("id"))
     with LoopbackGlueCatalog() as g:
         c = _cat(g.endpoint)
-        c.register_fs_table("db", "t", t)
+        c.publish("db", "t", t)
         v_reg = t._version()
         first = c.metadata_location("db", "t")
         assert first.endswith(f"v{v_reg}.metadata.json")
         t.append(spark.range(5, 10).selectExpr("id"))
-        c.commit_swap("db", "t", t)  # pointer follows the new version
+        c.publish("db", "t", t)  # pointer follows the new version
         assert c.metadata_location("db", "t").endswith(
             f"v{t._version()}.metadata.json"
         )
-        c.commit_swap("db", "t", t)  # already at tip: no-op
+        c.publish("db", "t", t)  # already at tip: no-op
         # the pointer may lag by SEVERAL versions (filesystem commits
         # without the catalog in between): rewound to an OLDER version
         # of our own lineage, the swap still advances
         t.append(spark.range(10, 15).selectExpr("id"))
         g.databases["db"]["t"]["Parameters"]["metadata_location"] = first
-        c.commit_swap("db", "t", t)
+        c.publish("db", "t", t)
         assert c.metadata_location("db", "t").endswith(
             f"v{t._version()}.metadata.json"
         )
@@ -152,12 +152,12 @@ def test_commit_swap_conflict_detection(spark, tmp_path):
             f"{t.meta_dir}/v999.metadata.json"
         )
         with pytest.raises(GlueCommitConflict, match="concurrent commit"):
-            c.commit_swap("db", "t", t)
+            c.publish("db", "t", t)
         g.databases["db"]["t"]["Parameters"]["metadata_location"] = (
             "/elsewhere/other/metadata/v1.metadata.json"
         )
         with pytest.raises(GlueCommitConflict, match="concurrent commit"):
-            c.commit_swap("db", "t", t)
+            c.publish("db", "t", t)
 
 
 def test_glue_from_conf_strips_prefix():

@@ -67,7 +67,7 @@ def test_get_table_missing_and_create_roundtrip():
                  "metadata_location": "/w/db/t/metadata/v1.metadata.json"},
             )
             assert c.metadata_location("db", "t").endswith("v1.metadata.json")
-            assert c.table_location("db", "t") == "/w/db/t"
+            assert c.resolve("db", "t").location == "/w/db/t"
             with pytest.raises(HiveMetastoreError, match="AlreadyExists"):
                 c.create_table("db", "t", "/w/db/t", {})
 
@@ -147,7 +147,7 @@ def test_source_factory_resolves_catalog_type_hive(spark, tmp_path):
     t = _fs_table(spark, tmp_path, n=25)
     with LoopbackHiveMetastore() as srv:
         with _client(srv) as c:
-            c.register_fs_table("default", "t1", t)
+            c.publish("default", "t1", t)
         df = IcebergSourceConfig(
             "t1",
             {"connector": "iceberg", "table": "t1",

@@ -265,16 +265,16 @@ def test_catalog_resolves_remote_location_through_mapping(spark, tmp_path):
 
     with FakeRestCatalog() as srv:
         RestCatalog(srv.uri).create_namespace("db")
-        RestCatalog(srv.uri).register_fs_table("db", "t1", t)
+        RestCatalog(srv.uri).publish("db", "t1", t)
         # without the mapping: honest refusal naming the conf key
         with pytest.raises(RestCatalogError, match="warehouse.mapping"):
-            RestCatalog(srv.uri).read(spark, "db", "t1")
+            RestCatalog(srv.uri).resolve("db", "t1").read(spark)
         # with it: full read through the mounted root
         mapped = RestCatalog(
             srv.uri,
             {"warehouse.mapping": {"s3://corp-warehouse/t1": root}},
         )
-        back = mapped.read(spark, "db", "t1")
+        back = mapped.resolve("db", "t1").read(spark)
         assert sorted(r["id"] for r in back.collect()) == list(range(25))
 
 
@@ -321,6 +321,41 @@ def test_catalog_resolves_s3_location_through_fileio(spark, tmp_path):
             )
 
 
+def test_source_reads_rest_s3_table_through_its_mirror(spark, tmp_path):
+    """``catalog.type: rest`` + ``catalog.s3.*`` through the SOURCE
+    config: the source reads the table object the catalog resolved (the
+    read-only S3 mirror with its path mapping), not a table re-opened
+    at the mirror's location, whose metadata still names s3:// files."""
+    from flinkrunner_spark import s3_fileio
+    from flinkrunner_spark.iceberg import IcebergFsTable
+    from flinkrunner_spark.sources.factory import source_from_config
+    from flinkrunner_spark.testing import LoopbackS3
+    from flinkrunner_spark.util.s3 import S3Client
+
+    local = IcebergFsTable(str(tmp_path / "src"))
+    local.append(spark.range(30).selectExpr("id", "concat('n', id) AS name"))
+    with LoopbackS3() as s3:
+        client = S3Client(s3.endpoint, access_key="k", secret_key="s")
+        s3_fileio.upload_table(local, client, "s3://wh/db/t1")
+        with FakeRestCatalog(s3_client=client) as srv:
+            cat = RestCatalog(srv.uri)
+            cat.create_namespace("db")
+            cat._call(*cat.register_table_request(
+                "db", "t1",
+                f"s3://wh/db/t1/metadata/v{local._version()}.metadata.json",
+            ))
+            back = source_from_config(
+                "t1",
+                {"connector": "iceberg", "namespace": "db", "table": "t1",
+                 "catalog.type": "rest", "catalog.uri": srv.uri,
+                 "catalog.s3.endpoint": s3.endpoint,
+                 "catalog.s3.access.key.id": "k",
+                 "catalog.s3.secret.access.key": "s",
+                 "catalog.s3.cache.dir": str(tmp_path / "cache")},
+            ).load(spark)
+            assert sorted(r["id"] for r in back.collect()) == list(range(30))
+
+
 def _run_s3_catalog_assertions(spark, tmp_path, local, df, s3, srv, client):
     cat = RestCatalog(srv.uri)
     cat.create_namespace("db")
@@ -332,7 +367,7 @@ def _run_s3_catalog_assertions(spark, tmp_path, local, df, s3, srv, client):
     )
     # unconfigured client: honest refusal mentioning the S3 FileIO
     with pytest.raises(RestCatalogError, match="s3.endpoint"):
-        RestCatalog(srv.uri).read(spark, "db", "t1")
+        RestCatalog(srv.uri).resolve("db", "t1").read(spark)
     # configured client: catalog-resolved mirror read
     s3cat = RestCatalog(
         srv.uri,
@@ -343,9 +378,9 @@ def _run_s3_catalog_assertions(spark, tmp_path, local, df, s3, srv, client):
             "s3.cache.dir": str(tmp_path / "cache"),
         },
     )
-    back = s3cat.read(spark, "db", "t1")
+    back = s3cat.resolve("db", "t1").read(spark)
     assert sorted(r["id"] for r in back.collect()) == list(range(30))
     # the resolved table is the read-only mirror
-    m = s3cat.fs_table("db", "t1")
+    m = s3cat.resolve("db", "t1")
     with pytest.raises(ValueError, match="read-only"):
         m.append(df)

@@ -119,7 +119,7 @@ def test_kinesis_putrecords_e2e(tmp_path):
     spark = _session(tmp_path)
     try:
         import json
-        import urllib.request
+        import time
 
         from flinkrunner_spark.sinks.factory import KinesisSinkConfig
 
@@ -135,35 +135,12 @@ def test_kinesis_putrecords_e2e(tmp_path):
                 "key.column": "event_id",
             },
         )
-        # create the stream via a directly signed CreateStream call (the
-        # sink's signed_headers pins X-Amz-Target to PutRecords)
-        import time
-
-        from flinkrunner_spark.util.aws_signer import (
-            AwsCredentials,
-            sign_request,
-        )
-
-        body = json.dumps({"StreamName": "s-e2e", "ShardCount": 1}).encode()
-        hdrs = sign_request(
-            method="POST",
-            url=KINESIS_EP,
-            headers={
-                "Content-Type": "application/x-amz-json-1.1",
-                "X-Amz-Target": "Kinesis_20131202.CreateStream",
-            },
-            payload=body,
-            credentials=AwsCredentials("test", "test"),
-            region="us-east-1",
-            amz_date=time.strftime("%Y%m%dT%H%M%SZ", time.gmtime()),
-            service="kinesis",
-        )
+        # create the stream with the sink's own signed client
         try:
-            urllib.request.urlopen(
-                urllib.request.Request(
-                    KINESIS_EP, data=body, headers=hdrs, method="POST"
-                )
-            ).read()
+            sink._aws().post(
+                "Kinesis_20131202.CreateStream",
+                json.dumps({"StreamName": "s-e2e", "ShardCount": 1}).encode(),
+            )
         except Exception:
             pass  # already exists
         time.sleep(1)

@@ -4,6 +4,8 @@ embedded driver that ships on Spark's classpath."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from flinkrunner_spark.sinks import sink_from_config
@@ -229,3 +231,42 @@ def test_quoted_identifier_roundtrips_on_real_engine(spark, derby_url):
         assert rs.next() and rs.getLong(1) == 7
     finally:
         conn.close()
+
+
+def test_jdbc_streaming_write_honours_checkpoint(spark, derby_url, tmp_path):
+    """A configured ``checkpoint`` reaches the streaming query, so a
+    restarted stream resumes from its committed offsets instead of
+    reprocessing its input from scratch."""
+    src, chk = str(tmp_path / "in"), tmp_path / "chk"
+    spark.range(5).selectExpr("id", "concat('n', id) AS name").write.parquet(
+        src
+    )
+    sink = sink_from_config(
+        "stream_chk",
+        {
+            "connector": "jdbc",
+            "url": derby_url,
+            "table": "stream_chk",
+            "dialect": "derby",
+            "create.table": True,
+            "primary.key": "id",
+            "options": {"driver": DERBY_DRIVER},
+            "checkpoint": str(chk),
+        },
+    )
+    q = sink.write_stream(
+        spark.readStream.schema("id long, name string").parquet(src)
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert os.listdir(chk / "offsets") and os.listdir(chk / "commits")
+    back = (
+        spark.read.format("jdbc")
+        .option("url", derby_url)
+        .option("dbtable", '"stream_chk"')
+        .option("driver", DERBY_DRIVER)
+        .load()
+    )
+    assert back.count() == 5

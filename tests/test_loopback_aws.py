@@ -20,23 +20,11 @@ from flinkrunner_spark.testing import LoopbackElasticsearch, LoopbackKinesis
 
 
 def _signed_post(endpoint, target, body: bytes) -> dict:
-    from flinkrunner_spark.util.aws_signer import AwsCredentials, sign_request
+    from flinkrunner_spark.util.aws_signer import AwsJsonClient
 
-    hdrs = sign_request(
-        method="POST",
-        url=endpoint,
-        headers={
-            "Content-Type": "application/x-amz-json-1.1",
-            "X-Amz-Target": target,
-        },
-        payload=body,
-        credentials=AwsCredentials("k", "s", None),
-        region="us-east-1",
-        amz_date="20260101T000000Z",
-        service="kinesis",
-    )
-    req = urllib.request.Request(endpoint, data=body, headers=hdrs, method="POST")
-    return json.loads(urllib.request.urlopen(req).read().decode())
+    return AwsJsonClient(
+        "kinesis", "us-east-1", "k", "s", endpoint=endpoint
+    ).post(target, body)
 
 
 def test_kinesis_put_list_iterate_get():

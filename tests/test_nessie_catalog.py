@@ -49,24 +49,28 @@ def test_register_resolve_and_swap(spark, tmp_path):
     t = _table(spark, tmp_path)
     with LoopbackNessie() as srv:
         cat = NessieCatalog(srv.endpoint)
-        h1 = cat.register_fs_table("ns", "t1", t)
-        assert h1 != cat.__class__ and len(h1) == 64
+        h0 = cat.branch_head()
+        cat.publish("ns", "t1", t)
+        h1 = cat.branch_head()
+        assert h1 != h0 and len(h1) == 64
         v0 = t._version()  # create + append
         assert cat.metadata_location("ns", "t1").endswith(
             f"v{v0}.metadata.json"
         )
-        assert cat.table_location("ns", "t1") == t.location
+        assert cat.resolve("ns", "t1").location == t.location
         # two more filesystem commits, then one swap — the pointer may
         # legitimately lag several versions and still advance
         t.append(spark.createDataFrame([(100, "y")], "id long, name string"))
         t.append(spark.createDataFrame([(101, "z")], "id long, name string"))
-        h2 = cat.commit_swap("ns", "t1", t)
+        cat.publish("ns", "t1", t)
+        h2 = cat.branch_head()
         assert h2 != h1
         assert cat.metadata_location("ns", "t1").endswith(
             f"v{v0 + 2}.metadata.json"
         )
         # idempotent at the tip: no new commit
-        assert cat.commit_swap("ns", "t1", t) == h2
+        cat.publish("ns", "t1", t)
+        assert cat.branch_head() == h2
 
 
 def test_cas_conflict_on_stale_hash(spark, tmp_path):
@@ -74,7 +78,7 @@ def test_cas_conflict_on_stale_hash(spark, tmp_path):
     with LoopbackNessie() as srv:
         cat = NessieCatalog(srv.endpoint)
         stale = cat.branch_head()
-        cat.register_fs_table("ns", "t1", t)  # moves the head past stale
+        cat.publish("ns", "t1", t)  # moves the head past stale
         with pytest.raises(NessieCommitConflict):
             cat.commit_put("ns", "other", "/x/metadata/v1.metadata.json",
                            expected_hash=stale)
@@ -86,7 +90,7 @@ def test_content_id_discipline(spark, tmp_path):
     t = _table(spark, tmp_path)
     with LoopbackNessie() as srv:
         cat = NessieCatalog(srv.endpoint)
-        cat.register_fs_table("ns", "t1", t)
+        cat.publish("ns", "t1", t)
         with pytest.raises(NessieCommitConflict, match="content id"):
             cat.commit_put("ns", "t1", "/x/metadata/v9.metadata.json",
                            expected_hash=cat.branch_head(),
@@ -101,14 +105,14 @@ def test_swap_refuses_foreign_or_newer_lineage(spark, tmp_path):
     t = _table(spark, tmp_path)
     with LoopbackNessie() as srv:
         cat = NessieCatalog(srv.endpoint)
-        cat.register_fs_table("ns", "t1", t)
+        cat.publish("ns", "t1", t)
         # simulate a concurrent writer pointing the key elsewhere
         cur = cat.get_content(["ns", "t1"])
         cat.commit_put("ns", "t1", "/elsewhere/metadata/v7.metadata.json",
                        expected_hash=cat.branch_head(),
                        content_id=cur["id"])
         with pytest.raises(NessieCommitConflict, match="lineage"):
-            cat.commit_swap("ns", "t1", t)
+            cat.publish("ns", "t1", t)
 
 
 def test_bearer_token_enforced():
