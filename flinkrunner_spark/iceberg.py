@@ -407,6 +407,7 @@ class IcebergFsTable:
         location: str,
         path_mapping: dict | None = None,
         read_only: bool = False,
+        version: int | None = None,
     ):
         self.location = os.path.abspath(location)
         self.meta_dir = os.path.join(self.location, "metadata")
@@ -423,7 +424,10 @@ class IcebergFsTable:
         # pass read_only=True (the s3 mirror does) to refuse commits
         # that would silently diverge from the remote original.
         self.path_mapping = dict(path_mapping or {})
-        self.read_only = bool(read_only)
+        # version pins a read-only view to one ``vN.metadata.json`` (the
+        # one a catalog's pointer names); None follows version-hint.text
+        self.version = version
+        self.read_only = bool(read_only) or version is not None
 
     def _map(self, p: str) -> str:
         for prefix in sorted(self.path_mapping, key=len, reverse=True):
@@ -454,6 +458,8 @@ class IcebergFsTable:
         return os.path.exists(os.path.join(self.meta_dir, "version-hint.text"))
 
     def _version(self) -> int:
+        if self.version is not None:
+            return self.version
         with open(os.path.join(self.meta_dir, "version-hint.text")) as fh:
             return int(fh.read().strip())
 
@@ -465,9 +471,23 @@ class IcebergFsTable:
 
     @classmethod
     def at_metadata(cls, metadata_location: str) -> "IcebergFsTable":
-        """The table a catalog's metadata pointer names: its root is two
-        levels above the metadata file (HadoopTables layout)."""
-        return cls(os.path.dirname(os.path.dirname(metadata_location)))
+        """The table as a catalog's metadata pointer publishes it: a
+        read-only view pinned to the pointer's ``vN.metadata.json``, so
+        filesystem commits the catalog has not published stay unread.
+        Its root is two levels above the metadata file (HadoopTables
+        layout)."""
+        m = re.fullmatch(
+            r"v(\d+)\.metadata\.json", os.path.basename(metadata_location)
+        )
+        if m is None:
+            raise ValueError(
+                f"catalog metadata pointer {metadata_location!r} names no "
+                "vN.metadata.json (HadoopTables layout)"
+            )
+        return cls(
+            os.path.dirname(os.path.dirname(metadata_location)),
+            version=int(m.group(1)),
+        )
 
     def pointer_lag(self, pointer: str) -> int | None:
         """How many versions a catalog's metadata pointer trails this
@@ -490,9 +510,10 @@ class IcebergFsTable:
     def _commit(self, md: dict, version: int) -> None:
         if self.read_only:
             raise ValueError(
-                f"iceberg table at {self.location} is a read-only mirror "
-                "(s3_fileio) — commits here would silently diverge from "
-                "the remote original; write through the owning catalog"
+                f"iceberg table at {self.location} is read-only (an "
+                "s3_fileio mirror or a catalog's pinned view) — commits "
+                "here would silently diverge from the published table; "
+                "write through the owning catalog"
             )
         os.makedirs(self.meta_dir, exist_ok=True)
         path = self.metadata_file(version)

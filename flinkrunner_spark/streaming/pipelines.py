@@ -49,11 +49,17 @@ EVENTS_SCHEMA = (
 
 def ephemeral_checkpoint(prefix: str = "flinkrunner-ckpt-") -> str:
     """Unique checkpoint dir for a BOUNDED drive-to-completion streaming
-    run, RAM-backed when the host offers it (r13 optimization, guide §5:
-    the HDFS-backed state store fsyncs one delta file per state-store
-    instance per micro-batch; on a disk-backed temp dir those fsyncs
-    dominated every bounded mirror — measured 7.7s→3.2s on
-    stream_win_tumbling, 12.0s→6.5s on stream_interval_join at sf0.1).
+    run, RAM-backed when the host offers it. Moving it to /dev/shm was
+    measured 7.7s→3.2s on stream_win_tumbling and 12.0s→6.5s on
+    stream_interval_join at sf0.1, credited then to the fsync of one
+    state-store delta file per instance per micro-batch. It was not the
+    disk: on a 4-core VM a 22-batch stateful file stream gave the same
+    per-batch medians on tmpfs and ext4, ``walCommit`` 30–31 ms and a
+    state commit of 143–157 ms through Spark's FileContext checkpoint
+    manager, 7–8 ms and 1–4 ms through the FileSystem one ``get_spark``
+    sets. The cost was Hadoop forking ``readlink``/``chmod`` for every
+    checkpoint file. The /dev/shm default stays until an A/B against a
+    disk-backed dir says otherwise.
 
     Correctness-neutral: callers create a FRESH directory per invocation
     and remove it when the query finishes, exactly the lifecycle Spark's
@@ -82,11 +88,15 @@ def drain_partitions(spark: SparkSession, n_rows: int | None = None):
     state-store partition count when its first batch plans, so the pin
     must span the whole run of the query.
 
-    Every state-store partition pays a fixed maintenance cost per
-    micro-batch (delta commit + snapshot bookkeeping — measured r1/r4:
-    32→8 partitions took the local interval join 9.5s→2.1s, 8→4 halved
-    it again, flat below 4), so a drain wants the FEWEST partitions that
-    still hold state comfortably:
+    Every state-store partition pays a fixed cost per micro-batch
+    (measured r1/r4: 32→8 partitions took the local interval join
+    9.5s→2.1s, 8→4 halved it again, flat below 4). Most of that cost was
+    the checkpoint files each partition writes per batch (its delta, the
+    delta's ``.crc`` and checksum file), each costing Hadoop forks
+    through the FileContext checkpoint manager; the floor of 4 was sized
+    then and has not been re-measured with the FileSystem manager
+    ``get_spark`` sets. A drain wants the FEWEST partitions that still
+    hold state comfortably:
 
     * with a known drain volume (``n_rows`` — e.g. the curation catch-up
       counts its backlog), partitions =

@@ -166,6 +166,41 @@ def test_sink_source_roundtrip_through_nessie(spark, tmp_path):
         assert sorted(r["id"] for r in back.collect()) == list(range(10))
 
 
+def test_source_reads_the_published_version_not_the_tip(spark, tmp_path):
+    """A catalog source reads the version the pointer names: a
+    filesystem append the catalog never published stays unread, and the
+    resolved view refuses commits."""
+    from flinkrunner_spark.sources.factory import IcebergSourceConfig
+
+    t = _table(spark, tmp_path, n=5)
+    with LoopbackNessie() as srv:
+        cat = NessieCatalog(srv.endpoint)
+        cat.publish("ns", "t1", t)
+        assert cat.metadata_location("ns", "t1") == t.metadata_file(2)
+        t.append(
+            spark.createDataFrame(
+                [(i, f"x{i}") for i in range(5, 8)], "id long, name string"
+            )
+        )
+        assert t._version() == 3 and t.read(spark).count() == 8
+        back = IcebergSourceConfig(
+            "t",
+            {"connector": "iceberg", "namespace": "ns", "table": "t1",
+             "catalog.type": "nessie", "catalog.uri": srv.endpoint},
+        ).load(spark)
+        assert back.count() == 5
+        view = cat.resolve("ns", "t1")
+        assert view.metadata_file() == t.metadata_file(2)
+        with pytest.raises(ValueError, match="read-only"):
+            view.append(spark.createDataFrame([(9, "y")], "id long, name string"))
+        assert t._version() == 3
+
+
+def test_pointer_outside_the_hadoop_layout_refuses():
+    with pytest.raises(ValueError, match="vN.metadata.json"):
+        IcebergFsTable.at_metadata("/w/t/metadata/00001-abc.metadata.json")
+
+
 def test_hive_catalog_without_uri_refuses_by_name(spark, tmp_path):
     """catalog.type hive is RESOLVED as of r10 (the thrift-binary
     `hive_metastore` client — see test_hive_metastore.py); a hive

@@ -1,8 +1,10 @@
 """``get_spark``'s Python workers: they fork from ``flinkrunner_spark.pyworker``,
 which drops Spark's archives from the worker path when the installed
 pyspark matches them, so no task re-reads ``pyspark.zip``; the package
-init imports no pyspark, so the daemon can fix its path first; and the
-workers find the daemon from any working directory."""
+init imports no pyspark, so the daemon can fix its path first; the
+workers find the daemon from any working directory; and streaming
+checkpoints go through Spark's FileSystem checkpoint manager, which keeps
+the overwrite rules the offset logs and state stores rely on."""
 
 from __future__ import annotations
 
@@ -13,6 +15,8 @@ import sys
 import textwrap
 import zipfile
 
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from flinkrunner_spark import pyworker
@@ -145,3 +149,46 @@ def test_workers_import_daemon_from_any_directory(tmp_path):
     )
     assert res.returncode == 0, res.stderr[-2000:]
     assert res.stdout.strip().splitlines()[-1] == "[1, 2, 3]"
+
+
+def _checkpoint_manager(spark, tmp_path):
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    return manager.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)), hconf
+    )
+
+
+def _write(manager, path, data: bytes, overwrite: bool) -> None:
+    out = manager.createAtomic(path, overwrite)
+    out.write(bytearray(data))
+    out.close()
+
+
+def test_checkpoints_use_the_filesystem_manager(spark, tmp_path):
+    manager = _checkpoint_manager(spark, tmp_path)
+    assert manager.getClass().getSimpleName() == (
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_checkpoint_create_atomic_overwrite_rules(spark, tmp_path):
+    """Without overwrite an existing file is refused (the offset and
+    commit logs' rule); with it the file is replaced (a re-written
+    state-store delta) and its temp file is renamed away."""
+    manager = _checkpoint_manager(spark, tmp_path)
+    p = spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    _write(manager, p, b"first", overwrite=False)
+    with pytest.raises(Py4JJavaError) as err:
+        _write(manager, p, b"second", overwrite=False)
+    exists = spark._jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.FileAlreadyExistsException"
+    )
+    assert exists.isInstance(err.value.java_exception)
+    assert (tmp_path / "0").read_bytes() == b"first"
+    # the refused write leaves its temp file with either manager
+    before = sorted(os.listdir(tmp_path))
+    _write(manager, p, b"third", overwrite=True)
+    assert (tmp_path / "0").read_bytes() == b"third"
+    assert sorted(os.listdir(tmp_path)) == before
