@@ -28,8 +28,9 @@ FileContext one. This Hadoop build ships no ``libhadoop``, so on
 forking ``readlink``, four per file, on top of the ``chmod`` fork of
 each create. A JFR count over the ``stream_win_tumbling`` and
 ``stream_dedup_first`` mirrors at sf0.001 went from 752 ``readlink`` and
-212 ``chmod`` forks to 0 and 212; a traced perfbench stream_events run
-(seed 411, local[4]) from 35/36.5 ms to 11/15 ms of
+212 ``chmod`` forks to 0 and 212 (the ``chmod`` forks go too, below); a
+traced perfbench stream_events run (seed 411, local[4]) from 35/36.5 ms
+to 11/15 ms of
 ``walCommit``/``commitOffsets`` per catch-up batch, and from 6.4 s to
 0.8 s of summed state-store commit time.
 
@@ -37,24 +38,85 @@ The FileSystem manager gives the same guarantee on a local filesystem.
 ``FileContext.rename`` without overwrite checks the destination with
 ``getFileLinkStatus`` and then calls ``rename(2)``; this manager checks
 it with ``fs.exists`` and then renames the same way (``get_spark`` only
-builds ``local[N]`` sessions). That holds over Hadoop's own
-``LocalFileSystem``, set here for ``file:``. The classpath otherwise
+builds ``local[N]`` sessions). That holds over Hadoop's checksummed
+``LocalFileSystem``, which ``file:`` gets here. The classpath otherwise
 picks the Hive jar's ``ProxyLocalFileSystem``, whose ``rename`` refuses
 an existing destination, so ``createAtomic`` with overwrite (a
 state-store delta re-written by a retried or re-run batch) would
 silently keep the old file and leak its temp file. Spark's checksum
 wrapper (``spark.sql.streaming.checkpoint.fileChecksum.enabled``) stays
 at its default, on: checksum files are still written and verified.
+
+Without ``libhadoop``, Hadoop's ``RawLocalFileSystem.setPermission`` also
+forks ``chmod`` for every file it creates and every directory it makes:
+1,630 ``chmod 0644`` and 91 ``chmod 0755`` in one perfbench
+stream_events run (JFR ``jdk.ProcessStart``), mostly the temp files of
+checkpoint writes and their ``.crc`` files. So ``file:`` gets
+``flinkrunner_spark.jvm.NioLocalFileSystem``: Hadoop's
+``LocalFileSystem`` (same checksums, renames and semantics) over a
+``RawLocalFileSystem`` whose ``setPermission`` sets the rwx bits with
+``java.nio.file.Files.setPosixFilePermissions``, no process, and the
+same modes (0644 files, 0755 directories under the default umask). It
+is compiled Java, so its source ships with the jar built from it
+(``jvm/nio-local-fs.jar``, rebuilt by ``jvm/build.sh``, which stamps
+the source's sha256 into the manifest); ``get_spark`` puts the jar on
+the driver's classpath, which in ``local[N]`` is also the executors'.
+A JVM already started without the jar (a session built elsewhere
+before the first ``get_spark`` call) cannot load the class, so that
+session keeps Hadoop's ``LocalFileSystem``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # the directory holding the flinkrunner_spark package
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+NIO_FS = "flinkrunner_spark.jvm.NioLocalFileSystem"
+NIO_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar"
+)
+
+
+def _file_fs() -> str:
+    """The ``fs.file.impl`` class: ``NIO_FS``, unless a JVM already runs
+    that cannot load it (started without ``NIO_JAR``), where Hadoop's
+    ``LocalFileSystem``. A class the JVM cannot load would fail every
+    ``file:`` access of the session."""
+    jvm = SparkContext._jvm
+    if jvm is not None:
+        try:
+            jvm.java.lang.Class.forName(NIO_FS)
+        except Py4JJavaError:
+            return "org.apache.hadoop.fs.LocalFileSystem"
+    return NIO_FS
+
+
+def driver_classpath(conf_dir: str | None = None) -> str:
+    """``spark.driver.extraClassPath`` with ``NIO_JAR`` appended to the
+    value in ``spark-defaults.conf`` (``$SPARK_CONF_DIR``, else
+    ``$SPARK_HOME/conf``), which the ``--conf`` pyspark passes to
+    spark-submit would otherwise replace. A class path given in
+    ``PYSPARK_SUBMIT_ARGS`` (``--driver-class-path``) replaces this one
+    in turn, and must then list ``NIO_JAR`` itself."""
+    conf_dir = conf_dir or os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        os.environ.get("SPARK_HOME", ""), "conf"
+    )
+    prior: list[str] = []
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            for line in f:
+                kv = re.split(r"\s*[=:\s]\s*", line.strip(), maxsplit=1)
+                if len(kv) == 2 and kv[0] == "spark.driver.extraClassPath":
+                    prior = [p for p in kv[1].split(os.pathsep) if p]
+    except OSError:
+        pass
+    return os.pathsep.join([p for p in prior if p != NIO_JAR] + [NIO_JAR])
 
 
 def get_spark(
@@ -80,7 +142,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "flinkrunner_spark.pyworker")
-        .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+        .config("spark.driver.extraClassPath", driver_classpath())
+        .config("spark.hadoop.fs.file.impl", _file_fs())
         .config(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing."

@@ -57,9 +57,11 @@ def ephemeral_checkpoint(prefix: str = "flinkrunner-ckpt-") -> str:
     per-batch medians on tmpfs and ext4, ``walCommit`` 30–31 ms and a
     state commit of 143–157 ms through Spark's FileContext checkpoint
     manager, 7–8 ms and 1–4 ms through the FileSystem one ``get_spark``
-    sets. The cost was Hadoop forking ``readlink``/``chmod`` for every
-    checkpoint file. The /dev/shm default stays until an A/B against a
-    disk-backed dir says otherwise.
+    sets. The cost was Hadoop forking processes for every checkpoint
+    file (``readlink`` in the FileContext manager's rename, ``chmod`` on
+    each create until ``get_spark``'s ``NioLocalFileSystem``), so neither
+    disk wins a phase now; the /dev/shm default stays until an A/B
+    against a disk-backed dir says otherwise.
 
     Correctness-neutral: callers create a FRESH directory per invocation
     and remove it when the query finishes, exactly the lifecycle Spark's
@@ -93,10 +95,11 @@ def drain_partitions(spark: SparkSession, n_rows: int | None = None):
     9.5s→2.1s, 8→4 halved it again, flat below 4). Most of that cost was
     the checkpoint files each partition writes per batch (its delta, the
     delta's ``.crc`` and checksum file), each costing Hadoop forks
-    through the FileContext checkpoint manager; the floor of 4 was sized
-    then and has not been re-measured with the FileSystem manager
-    ``get_spark`` sets. A drain wants the FEWEST partitions that still
-    hold state comfortably:
+    (``readlink`` through the FileContext checkpoint manager, ``chmod``
+    on every create); ``get_spark`` now writes them with neither. The
+    floor of 4 was sized with the forks; ROADMAP direction 4 records a
+    re-measure at 2/4/8 partitions without them. A drain wants the
+    FEWEST partitions that still hold state comfortably:
 
     * with a known drain volume (``n_rows`` — e.g. the curation catch-up
       counts its backlog), partitions =
@@ -275,6 +278,101 @@ def _bucketed_state(
     )
 
 
+def keep_first_state_fn(key_cols: list[str], ttl_us: int | None):
+    """The per-bucket function of ``streaming_dedup_keep_first``: emits
+    the (ts, event_id)-min row of each key in the batch that the bucket's
+    state has not seen, and records it.
+
+    State blob: a pickled ``set`` of key tuples, or with ``ttl_us`` a
+    ``{key_tuple: last_seen_event_ts_us}`` dict. TTL rules: the bucket's
+    clock is the max ts (of the batch and of the blob), entries older
+    than ``clock - ttl_us`` are evicted BEFORE the batch is tested, and
+    every sighting refreshes its key's stamp (to the key's LAST in-batch
+    occurrence, so in-batch duplicates do not age the entry).
+
+    One ``np.lexsort`` orders the batch and one pass over Python key
+    tuples keeps each key's first unseen row, then one ``iloc`` takes
+    them: 0.1–1.0 ms per bucket call, where pandas
+    concat/sort/drop_duplicates/loc cost 3.3–4.1 ms (2 and 300 rows
+    against a 300-key blob, seen or new keys). A bucket whose
+    state did not change (no new key, and with a TTL no eviction and no
+    newer stamp) skips ``state.update``, so its blob is not re-pickled
+    or re-written. A null in a numeric key column arrives as NaN, whose
+    hash follows object identity; it is keyed as ``None``, so null keys
+    match within and across batches, as in the batch ``PARTITION BY``.
+    """
+
+    def fn(key, pdfs, state: GroupState):
+        import pickle
+
+        import numpy as np
+        import pandas as pd
+
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if not chunks:
+            return
+        # a micro-batch arrives as MULTIPLE Arrow chunks — the earliest
+        # (ts, event_id) row for a key may sit in any of them
+        full = chunks[0] if len(chunks) == 1 else pd.concat(
+            chunks, ignore_index=True
+        )
+        ts = full["ts"].values.astype("datetime64[ns]", copy=False).view("i8")
+        # NaT (the int64 minimum) sorts last, as in pandas' sort_values
+        last_nat = np.where(ts == np.iinfo(np.int64).min, np.iinfo(np.int64).max, ts)
+        order = np.lexsort((full["event_id"].values, last_nat)).tolist()
+        cols = []
+        for c in key_cols:
+            col = full[c]
+            vals = col.tolist()
+            if col.dtype.kind == "f":
+                vals = [None if v != v else v for v in vals]
+            cols.append(vals)
+        keys = list(zip(*cols))
+        seen = pickle.loads(state.get[0]) if state.exists else (
+            {} if ttl_us is not None else set()
+        )
+        if ttl_us is None:
+            kept = []
+            for i in order:
+                k = keys[i]
+                if k not in seen:
+                    seen.add(k)
+                    kept.append(i)
+            changed = bool(kept)
+        else:
+            stamps = (ts // 1000).tolist()
+            last: dict = {}  # key -> its max in-batch stamp
+            first = []  # each key's first row in (ts, event_id) order
+            for i in order:
+                k, t = keys[i], stamps[i]
+                prev = last.get(k)
+                if prev is None:
+                    first.append(i)
+                    last[k] = t
+                elif t > prev:
+                    last[k] = t
+            # advance the bucket's event-time clock, EVICT, then test —
+            # a key whose last sighting fell off the horizon re-emits
+            clock = max(last.values())
+            if seen:
+                clock = max(clock, max(seen.values()))
+            live = {k: t for k, t in seen.items() if t >= clock - ttl_us}
+            changed = len(live) != len(seen)
+            kept = [i for i in first if keys[i] not in live]
+            for k, t in last.items():  # refresh on EVERY sighting
+                prev = live.get(k)
+                if prev is None or t > prev:
+                    live[k] = t
+                    changed = True
+            seen = live
+        if changed:
+            state.update((pickle.dumps(seen),))
+        if kept:
+            yield full.iloc[kept].drop(columns=["_bucket"])
+
+    return fn
+
+
 def streaming_dedup_keep_first(
     events: DataFrame,
     key_cols: list[str] | None = None,
@@ -285,7 +383,7 @@ def streaming_dedup_keep_first(
     filter), BUCKETED: state is keyed by a hash bucket of the dedup key,
     not by the key itself, and each bucket keeps the set of seen keys as
     one serialized state blob. Per micro-batch the Python function runs
-    ``num_buckets`` times (vectorized pandas dedup inside), not
+    at most ``num_buckets`` times (``keep_first_state_fn``), not
     once-per-key — the per-key form pays the ~0.2 ms Python dispatch for
     every key in every batch, which at millions of keys per trigger IS
     the bottleneck. Within a batch the (ts, event_id)-min row per unseen
@@ -308,60 +406,11 @@ def streaming_dedup_keep_first(
     """
     key_cols = key_cols or ["user_id", "event_type"]
     ttl_us = None if ttl_sec is None else int(ttl_sec * 1_000_000)
-
-    def fn(key, pdfs, state: GroupState):
-        import pickle
-
-        import pandas as pd
-
-        # state blob: {key_tuple: last_seen_event_ts_us} (a plain set
-        # when ttl is off — half the bytes, same membership test)
-        seen = pickle.loads(state.get[0]) if state.exists else (
-            {} if ttl_us is not None else set()
-        )
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return iter(())
-        # a micro-batch arrives as MULTIPLE Arrow chunks — the earliest
-        # (ts, event_id) row for a key may sit in any of them, so sort
-        # and dedup over the whole batch
-        full = pd.concat(chunks, ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
-        pdf = full.drop_duplicates(subset=key_cols, keep="first")
-        keys = [tuple(t) for t in pdf[key_cols].itertuples(index=False)]
-        if ttl_us is None:
-            fresh = pd.Series([k not in seen for k in keys], index=pdf.index)
-            seen.update(k for k, f in zip(keys, fresh) if f)
-        else:
-            # refresh-on-EVERY-sighting means the stamp is each key's
-            # LAST in-batch occurrence (the pre-dedup max), not the
-            # first kept row's ts — otherwise in-batch duplicates age
-            # the entry and it evicts a TTL too early
-            last_seen = (
-                full.assign(_us=full["ts"].astype("int64") // 1000)
-                .groupby(key_cols, sort=False)["_us"]
-                .max()
-            )
-            stamps = [
-                int(last_seen[k if len(key_cols) > 1 else k[0]])
-                for k in keys
-            ]
-            # advance the bucket's event-time clock, EVICT, then test —
-            # a key whose last sighting fell off the horizon re-emits
-            clock = max(stamps + list(seen.values()))
-            seen = {k: t for k, t in seen.items() if t >= clock - ttl_us}
-            fresh = pd.Series([k not in seen for k in keys], index=pdf.index)
-            for k, t in zip(keys, stamps):  # refresh on EVERY sighting
-                prev = seen.get(k)
-                seen[k] = t if prev is None else max(prev, t)
-        state.update((pickle.dumps(seen),))
-        yield pdf.loc[fresh].drop(columns=["_bucket"])
-
     # emit exactly the input columns — callers prune unused (fat) columns
     # BEFORE the keyed shuffle so they never ride the Arrow channel
     return _bucketed_state(
-        events, key_cols, num_buckets, fn, events.schema, "seen binary"
+        events, key_cols, num_buckets, keep_first_state_fn(key_cols, ttl_us),
+        events.schema, "seen binary",
     )
 
 

@@ -2,12 +2,15 @@
 which drops Spark's archives from the worker path when the installed
 pyspark matches them, so no task re-reads ``pyspark.zip``; the package
 init imports no pyspark, so the daemon can fix its path first; the
-workers find the daemon from any working directory; and streaming
+workers find the daemon from any working directory; streaming
 checkpoints go through Spark's FileSystem checkpoint manager, which keeps
-the overwrite rules the offset logs and state stores rely on."""
+the overwrite rules the offset logs and state stores rely on; and
+``file:`` is Hadoop's checksummed ``LocalFileSystem`` setting file modes
+without forking ``chmod``, from a jar built from its committed source."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import subprocess
@@ -19,7 +22,7 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
-from flinkrunner_spark import pyworker
+from flinkrunner_spark import pyworker, session
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -192,3 +195,112 @@ def test_checkpoint_create_atomic_overwrite_rules(spark, tmp_path):
     _write(manager, p, b"third", overwrite=True)
     assert (tmp_path / "0").read_bytes() == b"third"
     assert sorted(os.listdir(tmp_path)) == before
+
+
+def _local_fs(spark):
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"), hconf
+    )
+
+
+def test_file_scheme_is_the_nio_local_filesystem(spark):
+    fs = _local_fs(spark)
+    assert fs.getClass().getName() == session.NIO_FS
+    local = spark._jvm.java.lang.Class.forName("org.apache.hadoop.fs.LocalFileSystem")
+    assert local.isInstance(fs)
+
+
+def test_nio_modes_equal_the_chmod_modes(spark, tmp_path):
+    """Files get 0644 and directories 0755 (Hadoop's default umask), as
+    Hadoop's own ``LocalFileSystem`` gives them by forking ``chmod``; a
+    sticky bit, which nio cannot set, still lands; ``.crc`` files are
+    still written."""
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    hadoop = jvm.org.apache.hadoop.fs.LocalFileSystem()
+    hadoop.initialize(
+        jvm.java.net.URI("file:///"),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    modes = {}
+    for name, fs in (("nio", _local_fs(spark)), ("chmod", hadoop)):
+        fs.mkdirs(Path(str(tmp_path / name / "d")))
+        out = fs.create(Path(str(tmp_path / name / "d" / "f")))
+        out.write(bytearray(b"x"))
+        out.close()
+        assert (tmp_path / name / "d" / ".f.crc").exists()
+        modes[name] = {
+            p: os.stat(tmp_path / name / p).st_mode & 0o7777 for p in ("d", "d/f")
+        }
+    assert modes["nio"] == modes["chmod"] == {"d": 0o755, "d/f": 0o644}
+    sticky = Path(str(tmp_path / "nio" / "d"))
+    _local_fs(spark).setPermission(
+        sticky, jvm.org.apache.hadoop.fs.permission.FsPermission(
+            jvm.java.lang.Short.valueOf("1777", 8)
+        )
+    )
+    assert os.stat(tmp_path / "nio" / "d").st_mode & 0o7777 == 0o1777
+
+
+def _manifest(jar: str) -> dict:
+    """Main attributes of ``jar``'s manifest (72-byte lines unfolded)."""
+    with zipfile.ZipFile(jar) as z:
+        text = z.read("META-INF/MANIFEST.MF").decode()
+    text = text.replace("\r\n", "\n").replace("\n ", "")
+    return dict(
+        line.split(": ", 1) for line in text.split("\n\n")[0].splitlines() if line
+    )
+
+
+def test_committed_jar_is_built_from_the_source():
+    """``jvm/build.sh`` stamps the source's sha256 into the jar; a source
+    edit without a rebuild fails here."""
+    src = os.path.join(os.path.dirname(session.NIO_JAR), "NioLocalFileSystem.java")
+    with open(src, "rb") as f:
+        want = hashlib.sha256(f.read()).hexdigest()
+    assert _manifest(session.NIO_JAR)["Source-SHA256"] == want
+    with zipfile.ZipFile(session.NIO_JAR) as z:
+        assert "flinkrunner_spark/jvm/NioLocalFileSystem.class" in z.namelist()
+
+
+def test_driver_classpath_keeps_the_defaults_file_entry(tmp_path):
+    assert session.driver_classpath(str(tmp_path)) == session.NIO_JAR
+    (tmp_path / "spark-defaults.conf").write_text(
+        "# comment\nspark.driver.memory 2g\n"
+        f"spark.driver.extraClassPath  /a.jar{os.pathsep}/b.jar\n"
+    )
+    assert session.driver_classpath(str(tmp_path)) == os.pathsep.join(
+        ["/a.jar", "/b.jar", session.NIO_JAR]
+    )
+
+
+def test_session_started_elsewhere_keeps_a_loadable_file_fs(tmp_path):
+    """A JVM started by a plain builder has no jar on its classpath:
+    ``get_spark`` then keeps Hadoop's ``LocalFileSystem``, and parquet
+    still writes and reads."""
+    prog = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from pyspark.sql import SparkSession
+        SparkSession.builder.master("local[1]").getOrCreate()
+        from flinkrunner_spark import get_spark
+        spark = get_spark("session-started-elsewhere", cpus=1)
+        out = {str(tmp_path / "t")!r}
+        spark.range(5).write.parquet(out)
+        print(spark.read.parquet(out).count())
+        print(spark.conf.get("spark.hadoop.fs.file.impl"))
+        spark.stop()
+        """
+    )
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    res = subprocess.run(
+        [sys.executable, "-c", prog], cwd=str(tmp_path), capture_output=True,
+        text=True, env=env, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert res.stdout.strip().splitlines()[-2:] == [
+        "5", "org.apache.hadoop.fs.LocalFileSystem",
+    ]

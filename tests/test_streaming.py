@@ -122,6 +122,54 @@ def test_streaming_dedup_ttl_evicts_and_reemits(spark, tmp_path):
         assert sorted(r["event_id"] for r in got.collect()) == expect
 
 
+def test_streaming_dedup_null_numeric_key_across_batches(spark, tmp_path):
+    """A null ``long`` key reaches the Python state function as NaN; the
+    streamed dedup still keeps one row per null key across micro-batches,
+    as the batch ``dedup_first`` (``PARTITION BY``) does."""
+    import time as _time
+
+    from flinkrunner_spark.operators.dedup import dedup_first
+
+    schema = "event_id long, ts timestamp, user_id long, event_type string"
+    src = str(tmp_path / "src")
+    batches = [
+        [(1, None, "a"), (2, None, "a"), (3, 7, "a")],
+        [(4, None, "a"), (5, 7, "a"), (6, None, "b")],
+    ]
+    for rows in batches:
+        (
+            spark.createDataFrame(
+                rows, "event_id long, user_id long, event_type string"
+            )
+            .select(
+                "event_id",
+                F.lit("2024-01-01 10:00:00").cast("timestamp").alias("ts"),
+                "user_id",
+                "event_type",
+            )
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(src)
+        )
+        _time.sleep(1.1)
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    got = P.run_to_memory(
+        spark,
+        P.streaming_dedup_keep_first(stream, num_buckets=2),
+        "t_dedup_null_key",
+    )
+    want = dedup_first(
+        spark.read.schema(schema).parquet(src),
+        ["user_id", "event_type"],
+        ["ts", "event_id"],
+    )
+    assert sorted(r["event_id"] for r in got.collect()) == [1, 3, 6]
+    assert sorted(r["event_id"] for r in want.collect()) == [1, 3, 6]
+
+
 def test_streaming_dedup_sbf_invariants(spark, events_stream):
     """SBF streaming dedup on a key with real duplicates: no false
     negatives (no key passes twice at this tiny fill level, where the
