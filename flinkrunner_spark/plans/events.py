@@ -523,8 +523,11 @@ def stream_filter_by_control(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stream_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact keep-first dedup run end-to-end (per-key boolean
-    state) over FOUR event-time-ordered micro-batches: the first arrival
+    """Streaming exact keep-first dedup run end-to-end on JVM keyed state
+    (``streaming_dedup_keep_first``: the seen keys of each hash bucket of
+    (user_id, event_type) in one state row, updated in
+    ``flatMapGroupsWithState`` with no Python worker) over FOUR
+    event-time-ordered micro-batches: the first arrival
     across batches IS the (ts, event_id)-minimum (earlier batches hold
     strictly earlier timestamps; equal timestamps never straddle a batch
     boundary), so the batch `dedup_first` oracle holds exactly while the

@@ -56,14 +56,18 @@ checkpoint writes and their ``.crc`` files. So ``file:`` gets
 ``LocalFileSystem`` (same checksums, renames and semantics) over a
 ``RawLocalFileSystem`` whose ``setPermission`` sets the rwx bits with
 ``java.nio.file.Files.setPosixFilePermissions``, no process, and the
-same modes (0644 files, 0755 directories under the default umask). It
-is compiled Java, so its source ships with the jar built from it
-(``jvm/nio-local-fs.jar``, rebuilt by ``jvm/build.sh``, which stamps
-the source's sha256 into the manifest); ``get_spark`` puts the jar on
+same modes (0644 files, 0755 directories under the default umask).
+
+The repo's Java classes (this filesystem and ``KeepFirstDedup``, the
+keep-first dedup operator of ``streaming_dedup_keep_first``) ship as
+source with one jar built from every ``jvm/*.java``
+(``jvm/flinkrunner-jvm.jar``, rebuilt by ``jvm/build.sh``, which stamps
+each source's sha256 into the manifest); ``get_spark`` puts the jar on
 the driver's classpath, which in ``local[N]`` is also the executors'.
 A JVM already started without the jar (a session built elsewhere
-before the first ``get_spark`` call) cannot load the class, so that
-session keeps Hadoop's ``LocalFileSystem``.
+before the first ``get_spark`` call) cannot load the classes: that
+session keeps Hadoop's ``LocalFileSystem``, and
+``streaming_dedup_keep_first`` raises instead of building its query.
 """
 
 from __future__ import annotations
@@ -78,14 +82,15 @@ from pyspark.sql import SparkSession
 # the directory holding the flinkrunner_spark package
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 NIO_FS = "flinkrunner_spark.jvm.NioLocalFileSystem"
-NIO_JAR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar"
+# one jar holds every class compiled from jvm/*.java
+JVM_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "flinkrunner-jvm.jar"
 )
 
 
 def _file_fs() -> str:
     """The ``fs.file.impl`` class: ``NIO_FS``, unless a JVM already runs
-    that cannot load it (started without ``NIO_JAR``), where Hadoop's
+    that cannot load it (started without ``JVM_JAR``), where Hadoop's
     ``LocalFileSystem``. A class the JVM cannot load would fail every
     ``file:`` access of the session."""
     jvm = SparkContext._jvm
@@ -98,12 +103,12 @@ def _file_fs() -> str:
 
 
 def driver_classpath(conf_dir: str | None = None) -> str:
-    """``spark.driver.extraClassPath`` with ``NIO_JAR`` appended to the
+    """``spark.driver.extraClassPath`` with ``JVM_JAR`` appended to the
     value in ``spark-defaults.conf`` (``$SPARK_CONF_DIR``, else
     ``$SPARK_HOME/conf``), which the ``--conf`` pyspark passes to
     spark-submit would otherwise replace. A class path given in
     ``PYSPARK_SUBMIT_ARGS`` (``--driver-class-path``) replaces this one
-    in turn, and must then list ``NIO_JAR`` itself."""
+    in turn, and must then list ``JVM_JAR`` itself."""
     conf_dir = conf_dir or os.environ.get("SPARK_CONF_DIR") or os.path.join(
         os.environ.get("SPARK_HOME", ""), "conf"
     )
@@ -116,7 +121,7 @@ def driver_classpath(conf_dir: str | None = None) -> str:
                     prior = [p for p in kv[1].split(os.pathsep) if p]
     except OSError:
         pass
-    return os.pathsep.join([p for p in prior if p != NIO_JAR] + [NIO_JAR])
+    return os.pathsep.join([p for p in prior if p != JVM_JAR] + [JVM_JAR])
 
 
 def get_spark(

@@ -3,8 +3,9 @@
 The reference is a streaming framework; this module shows the same logical
 plans running unbounded: file-backed streams of the input tables with
 watermarks (bounded lateness), windowed aggregation, and stateful
-keep-first dedup via ``applyInPandasWithState`` (the Spark analog of the
-reference's keyed ValueState in SBFDeduplicationFilter).
+keep-first dedup on JVM keyed state (``flatMapGroupsWithState``, the
+Spark analog of the reference's keyed ValueState in
+SBFDeduplicationFilter).
 
 Each mirror decision lives in one function here:
 
@@ -79,7 +80,7 @@ def ephemeral_checkpoint(prefix: str = "flinkrunner-ckpt-") -> str:
 
 
 DRAIN_ROWS_PER_PARTITION = 100_000  # target keyed-state rows per store
-DRAIN_PARTITIONS_FLOOR = 4  # the local mirrors' measured optimum
+DRAIN_PARTITIONS_FLOOR = 4  # see drain_partitions for the 2-vs-4 measure
 
 
 @contextmanager
@@ -96,10 +97,26 @@ def drain_partitions(spark: SparkSession, n_rows: int | None = None):
     the checkpoint files each partition writes per batch (its delta, the
     delta's ``.crc`` and checksum file), each costing Hadoop forks
     (``readlink`` through the FileContext checkpoint manager, ``chmod``
-    on every create); ``get_spark`` now writes them with neither. The
-    floor of 4 was sized with the forks; ROADMAP direction 4 records a
-    re-measure at 2/4/8 partitions without them. A drain wants the
-    FEWEST partitions that still hold state comfortably:
+    on every create); ``get_spark`` now writes them with neither.
+    Re-measured without the forks and with keep-first dedup in the JVM,
+    traced perfbench stream_events runs (local[4], 4-core VM, catch-up of
+    80k events in 4 files, 16 batches; seeds 1541 / 1542):
+
+    ======================  =============  =============
+    measure                 floor 2        floor 4
+    ======================  =============  =============
+    state partitions (sum)  8              16
+    drain_s win_tumbling    1.37 / 1.43 s  1.72 / 1.52 s
+    drain_s dedup_first     1.37 / 1.18 s  1.58 / 1.31 s
+    state update_ms (sum)   1,277 / 1,292  3,041 / 2,585
+    state commit_ms (sum)   150 / 176      447 / 525
+    state memory_bytes      3.02 / 3.02 M  2.82 / 2.82 M
+    ======================  =============  =============
+
+    The floor stays 4: state memory grew at 2, and the ``stream_*``
+    mirrors' batch counts and the ``stream_curation_to_iceberg`` cold
+    time were not re-measured at 2. A drain wants the FEWEST partitions
+    that still hold state comfortably:
 
     * with a known drain volume (``n_rows`` — e.g. the curation catch-up
       counts its backlog), partitions =
@@ -252,6 +269,14 @@ def streaming_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
+def _with_bucket(df: DataFrame, keys: list, num_buckets: int) -> DataFrame:
+    """``df`` with ``_bucket = pmod(xxhash64(*keys), num_buckets)``, the
+    one bucket rule of every bucketed state operator."""
+    return df.withColumn(
+        "_bucket", F.pmod(F.xxhash64(*keys), F.lit(num_buckets))
+    )
+
+
 def _bucketed_state(
     df: DataFrame,
     keys: list,
@@ -260,117 +285,28 @@ def _bucketed_state(
     out_schema,
     state_schema: str,
 ) -> DataFrame:
-    """Keyed state held per hash BUCKET of ``keys``: rows get
-    ``_bucket = pmod(xxhash64(*keys), num_buckets)`` and ``fn`` runs once
+    """Keyed state held per hash BUCKET of ``keys`` for a Python state
+    function: rows get ``_bucket`` (``_with_bucket``) and ``fn`` runs once
     per touched bucket per micro-batch under ``applyInPandasWithState``
     (append output, no timeout), holding the bucket's state blob. ``fn``
-    sees the ``_bucket`` column and must not emit it. See
-    streaming_dedup_keep_first for why buckets beat per-key state."""
-    keyed = df.withColumn(
-        "_bucket", F.pmod(F.xxhash64(*keys), F.lit(num_buckets))
-    )
-    return keyed.groupBy("_bucket").applyInPandasWithState(
+    sees the ``_bucket`` column and must not emit it.
+
+    Buckets, not keys, because each group costs one Python dispatch
+    (~0.2 ms) per micro-batch: the per-key form pays it for every key in
+    every batch, which at millions of keys per trigger IS the bottleneck,
+    while a bucket pays it once for all of its keys. The trade: a touched
+    bucket's whole blob is deserialized and re-written, so size
+    ``num_buckets`` by key cardinality (≈ keys / ~100k) to keep blobs
+    small and spread over state partitions."""
+    return _with_bucket(df, keys, num_buckets).groupBy(
+        "_bucket"
+    ).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def keep_first_state_fn(key_cols: list[str], ttl_us: int | None):
-    """The per-bucket function of ``streaming_dedup_keep_first``: emits
-    the (ts, event_id)-min row of each key in the batch that the bucket's
-    state has not seen, and records it.
-
-    State blob: a pickled ``set`` of key tuples, or with ``ttl_us`` a
-    ``{key_tuple: last_seen_event_ts_us}`` dict. TTL rules: the bucket's
-    clock is the max ts (of the batch and of the blob), entries older
-    than ``clock - ttl_us`` are evicted BEFORE the batch is tested, and
-    every sighting refreshes its key's stamp (to the key's LAST in-batch
-    occurrence, so in-batch duplicates do not age the entry).
-
-    One ``np.lexsort`` orders the batch and one pass over Python key
-    tuples keeps each key's first unseen row, then one ``iloc`` takes
-    them: 0.1–1.0 ms per bucket call, where pandas
-    concat/sort/drop_duplicates/loc cost 3.3–4.1 ms (2 and 300 rows
-    against a 300-key blob, seen or new keys). A bucket whose
-    state did not change (no new key, and with a TTL no eviction and no
-    newer stamp) skips ``state.update``, so its blob is not re-pickled
-    or re-written. A null in a numeric key column arrives as NaN, whose
-    hash follows object identity; it is keyed as ``None``, so null keys
-    match within and across batches, as in the batch ``PARTITION BY``.
-    """
-
-    def fn(key, pdfs, state: GroupState):
-        import pickle
-
-        import numpy as np
-        import pandas as pd
-
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        # a micro-batch arrives as MULTIPLE Arrow chunks — the earliest
-        # (ts, event_id) row for a key may sit in any of them
-        full = chunks[0] if len(chunks) == 1 else pd.concat(
-            chunks, ignore_index=True
-        )
-        ts = full["ts"].values.astype("datetime64[ns]", copy=False).view("i8")
-        # NaT (the int64 minimum) sorts last, as in pandas' sort_values
-        last_nat = np.where(ts == np.iinfo(np.int64).min, np.iinfo(np.int64).max, ts)
-        order = np.lexsort((full["event_id"].values, last_nat)).tolist()
-        cols = []
-        for c in key_cols:
-            col = full[c]
-            vals = col.tolist()
-            if col.dtype.kind == "f":
-                vals = [None if v != v else v for v in vals]
-            cols.append(vals)
-        keys = list(zip(*cols))
-        seen = pickle.loads(state.get[0]) if state.exists else (
-            {} if ttl_us is not None else set()
-        )
-        if ttl_us is None:
-            kept = []
-            for i in order:
-                k = keys[i]
-                if k not in seen:
-                    seen.add(k)
-                    kept.append(i)
-            changed = bool(kept)
-        else:
-            stamps = (ts // 1000).tolist()
-            last: dict = {}  # key -> its max in-batch stamp
-            first = []  # each key's first row in (ts, event_id) order
-            for i in order:
-                k, t = keys[i], stamps[i]
-                prev = last.get(k)
-                if prev is None:
-                    first.append(i)
-                    last[k] = t
-                elif t > prev:
-                    last[k] = t
-            # advance the bucket's event-time clock, EVICT, then test —
-            # a key whose last sighting fell off the horizon re-emits
-            clock = max(last.values())
-            if seen:
-                clock = max(clock, max(seen.values()))
-            live = {k: t for k, t in seen.items() if t >= clock - ttl_us}
-            changed = len(live) != len(seen)
-            kept = [i for i in first if keys[i] not in live]
-            for k, t in last.items():  # refresh on EVERY sighting
-                prev = live.get(k)
-                if prev is None or t > prev:
-                    live[k] = t
-                    changed = True
-            seen = live
-        if changed:
-            state.update((pickle.dumps(seen),))
-        if kept:
-            yield full.iloc[kept].drop(columns=["_bucket"])
-
-    return fn
 
 
 def streaming_dedup_keep_first(
@@ -380,38 +316,63 @@ def streaming_dedup_keep_first(
     ttl_sec: float | None = None,
 ) -> DataFrame:
     """Stateful keep-first dedup (exact semantics of the reference's dedup
-    filter), BUCKETED: state is keyed by a hash bucket of the dedup key,
-    not by the key itself, and each bucket keeps the set of seen keys as
-    one serialized state blob. Per micro-batch the Python function runs
-    at most ``num_buckets`` times (``keep_first_state_fn``), not
-    once-per-key — the per-key form pays the ~0.2 ms Python dispatch for
-    every key in every batch, which at millions of keys per trigger IS
-    the bottleneck. Within a batch the (ts, event_id)-min row per unseen
-    key is emitted, identical to the per-key form.
+    filter) on JVM keyed state: ``flinkrunner_spark.jvm.KeepFirstDedup``
+    (``jvm/KeepFirstDedup.java``), a typed
+    ``groupByKey(_bucket).flatMapGroupsWithState``, as the reference keeps
+    its seen keys in Flink's JVM keyed-state operator. Per micro-batch
+    each touched bucket emits the (ts, event_id)-min row of every key of
+    the batch it has not seen (a null ``ts`` sorts last) and records the
+    key; the output has exactly the input's columns. No Python worker
+    runs, so a micro-batch pays no Python round trip per state task.
 
-    Scale note: exact dedup state is inherently O(distinct keys); the
-    bucket count should scale with key cardinality (buckets ≈ keys /
-    ~100k keeps each blob small and the state store parallel — buckets
-    are spread across state partitions). For bounded state at unbounded
-    key cardinality there are two levers: ``ttl_sec`` bounds the blob by
-    the key cardinality of one TTL horizon — entries refresh their
-    event-time stamp on every sighting and evict once the bucket's
-    event-time clock (max ts seen) passes ``last_seen + ttl`` (the
-    Flink-StateTtlConfig-on-keyed-dedup-state pattern: a duplicate
-    arriving more than a TTL after its key was last seen re-emits, the
-    documented trade of the exact form) — or streaming_dedup_sbf (same
-    bucketed shape, fixed-size SBF cells as the blob) for constant
-    memory with probabilistic drops. The default (``ttl_sec=None``)
-    keeps exact unbounded semantics: it is the oracle mirror.
-    """
+    State is keyed by ``_bucket = pmod(xxhash64(keys), num_buckets)``
+    (``_with_bucket``), one state row per bucket holding its seen keys as
+    ``array<struct<key columns>>``. The buckets no longer save a Python
+    dispatch per key (``_bucketed_state``); they stay to keep the TTL's
+    per-bucket event-time clock, and the bucket count should scale with
+    key cardinality (buckets ≈ keys / ~100k keeps each row small and the
+    state store parallel). Checkpoints written by the earlier Python
+    operator (a pickled blob per bucket) do not resume.
+
+    For bounded state at unbounded key cardinality there are two levers:
+    ``ttl_sec`` bounds a bucket's state by the key cardinality of one TTL
+    horizon. Each bucket has its own event-time clock (the max ts of its
+    batches); keys last seen before ``clock - ttl`` are evicted BEFORE
+    the batch is tested (a duplicate arriving more than a TTL after its
+    key was last seen re-emits, the documented trade of the exact form,
+    as with Flink's StateTtlConfig on keyed dedup state), and every
+    sighting refreshes its key's stamp to the key's LAST in-batch ts. The
+    other lever is streaming_dedup_sbf (bucketed fixed-size SBF cells)
+    for constant memory with probabilistic drops. The default
+    (``ttl_sec=None``) keeps exact unbounded semantics: it is the oracle
+    mirror. A bucket whose state did not change (no new key; with a TTL
+    also no eviction and no newer stamp) is not written.
+
+    The operator's class comes from the jar ``get_spark`` puts on the
+    driver's class path; a session whose JVM started without it raises
+    here."""
+    from py4j.java_gateway import JavaClass
+
     key_cols = key_cols or ["user_id", "event_type"]
-    ttl_us = None if ttl_sec is None else int(ttl_sec * 1_000_000)
-    # emit exactly the input columns — callers prune unused (fat) columns
-    # BEFORE the keyed shuffle so they never ride the Arrow channel
-    return _bucketed_state(
-        events, key_cols, num_buckets, keep_first_state_fn(key_cols, ttl_us),
-        events.schema, "seen binary",
+    if ttl_sec is not None and ttl_sec < 0:
+        raise ValueError(f"ttl_sec must be >= 0, got {ttl_sec}")
+    spark = events.sparkSession
+    op = spark._jvm.flinkrunner_spark.jvm.KeepFirstDedup
+    if not isinstance(op, JavaClass):
+        raise RuntimeError(
+            "this session's JVM cannot load flinkrunner_spark.jvm."
+            "KeepFirstDedup: build the session with "
+            "flinkrunner_spark.get_spark, which puts "
+            "flinkrunner_spark/jvm/flinkrunner-jvm.jar on the driver's "
+            "class path, before any other SparkSession starts the JVM"
+        )
+    # the order column is a long: with java8API a timestamp arrives in the
+    # JVM as an Instant, else as a java.sql.Timestamp
+    keyed = _with_bucket(events, key_cols, num_buckets).withColumn(
+        "_ts_us", F.unix_micros("ts")
     )
+    ttl_us = -1 if ttl_sec is None else int(ttl_sec * 1_000_000)
+    return DataFrame(op.apply(keyed._jdf, key_cols, "event_id", ttl_us), spark)
 
 
 def streaming_interval_join(
@@ -505,7 +466,7 @@ def streaming_dedup_sbf(
         # a micro-batch arrives as MULTIPLE Arrow chunks in arbitrary row
         # order — keep-first semantics need the SBF to meet each key's
         # (ts, event_id)-earliest row first, so sort the WHOLE batch
-        # before the sequential scan (same reason as keep_first above)
+        # before the sequential scan
         pdf = pd.concat(chunks, ignore_index=True).sort_values(
             ["ts", "event_id"]
         )
@@ -538,7 +499,7 @@ def streaming_filter_by_control(
     stream; logical state per key is a single boolean — the last
     control's active flag, the reference's connected-stream keyed state —
     physically held as a bucketed {key: flag} blob (see
-    streaming_dedup_keep_first for why bucketing beats per-key Python
+    ``_bucketed_state`` for why bucketing beats per-key Python
     dispatch). The trade-off of bucketing: each touched bucket's WHOLE
     state dict is pickle round-tripped every micro-batch — O(keys in
     bucket) serialization even when one key changes — so size
@@ -820,7 +781,7 @@ def streaming_running_agg(events: DataFrame) -> DataFrame:
     DEPENDENCY-GATED: the TWS python worker requires ``google.protobuf``
     (its state channel is protobuf-framed); environments without it get
     an ImportError here instead of an opaque worker crash mid-query.
-    ``applyInPandasWithState`` (streaming_dedup_* above) is the
+    ``applyInPandasWithState`` (``_bucketed_state`` above) is the
     dependency-free alternative with the same state semantics."""
     try:
         import google.protobuf  # noqa: F401

@@ -6,7 +6,9 @@ workers find the daemon from any working directory; streaming
 checkpoints go through Spark's FileSystem checkpoint manager, which keeps
 the overwrite rules the offset logs and state stores rely on; and
 ``file:`` is Hadoop's checksummed ``LocalFileSystem`` setting file modes
-without forking ``chmod``, from a jar built from its committed source."""
+without forking ``chmod``, from one jar built from every committed Java
+source; a session started without that jar keeps a loadable ``file:``
+class and refuses the keep-first dedup operator by naming ``get_spark``."""
 
 from __future__ import annotations
 
@@ -244,35 +246,47 @@ def test_nio_modes_equal_the_chmod_modes(spark, tmp_path):
     assert os.stat(tmp_path / "nio" / "d").st_mode & 0o7777 == 0o1777
 
 
-def _manifest(jar: str) -> dict:
-    """Main attributes of ``jar``'s manifest (72-byte lines unfolded)."""
+def _manifest_sections(jar: str) -> list[dict]:
+    """``jar``'s manifest sections (72-byte lines unfolded), main first."""
     with zipfile.ZipFile(jar) as z:
         text = z.read("META-INF/MANIFEST.MF").decode()
     text = text.replace("\r\n", "\n").replace("\n ", "")
-    return dict(
-        line.split(": ", 1) for line in text.split("\n\n")[0].splitlines() if line
-    )
+    return [
+        dict(line.split(": ", 1) for line in part.splitlines() if line)
+        for part in text.split("\n\n")
+        if part.strip()
+    ]
 
 
 def test_committed_jar_is_built_from_the_source():
-    """``jvm/build.sh`` stamps the source's sha256 into the jar; a source
-    edit without a rebuild fails here."""
-    src = os.path.join(os.path.dirname(session.NIO_JAR), "NioLocalFileSystem.java")
-    with open(src, "rb") as f:
-        want = hashlib.sha256(f.read()).hexdigest()
-    assert _manifest(session.NIO_JAR)["Source-SHA256"] == want
-    with zipfile.ZipFile(session.NIO_JAR) as z:
-        assert "flinkrunner_spark/jvm/NioLocalFileSystem.class" in z.namelist()
+    """``jvm/build.sh`` compiles every ``jvm/*.java`` into one jar and
+    stamps each source's sha256 into its manifest section; a source edit,
+    a new source or a removed one without a rebuild fails here."""
+    here = os.path.dirname(session.JVM_JAR)
+    want = {}
+    for name in sorted(os.listdir(here)):
+        if name.endswith(".java"):
+            with open(os.path.join(here, name), "rb") as f:
+                want[name] = hashlib.sha256(f.read()).hexdigest()
+    got = {
+        sec["Name"]: sec.get("Source-SHA256")
+        for sec in _manifest_sections(session.JVM_JAR)[1:]
+    }
+    assert got == want
+    with zipfile.ZipFile(session.JVM_JAR) as z:
+        names = z.namelist()
+    for src in want:
+        assert f"flinkrunner_spark/jvm/{src[:-len('.java')]}.class" in names
 
 
 def test_driver_classpath_keeps_the_defaults_file_entry(tmp_path):
-    assert session.driver_classpath(str(tmp_path)) == session.NIO_JAR
+    assert session.driver_classpath(str(tmp_path)) == session.JVM_JAR
     (tmp_path / "spark-defaults.conf").write_text(
         "# comment\nspark.driver.memory 2g\n"
         f"spark.driver.extraClassPath  /a.jar{os.pathsep}/b.jar\n"
     )
     assert session.driver_classpath(str(tmp_path)) == os.pathsep.join(
-        ["/a.jar", "/b.jar", session.NIO_JAR]
+        ["/a.jar", "/b.jar", session.JVM_JAR]
     )
 
 
@@ -304,3 +318,41 @@ def test_session_started_elsewhere_keeps_a_loadable_file_fs(tmp_path):
     assert res.stdout.strip().splitlines()[-2:] == [
         "5", "org.apache.hadoop.fs.LocalFileSystem",
     ]
+
+
+def test_keep_first_dedup_without_the_jar_names_get_spark(tmp_path):
+    """A JVM started by a plain builder cannot load the keep-first dedup
+    operator: building the query raises an error that names
+    ``get_spark``, and no Python fallback runs."""
+    prog = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from pyspark.sql import SparkSession
+        spark = SparkSession.builder.master("local[1]").getOrCreate()
+        from flinkrunner_spark.streaming import pipelines as P
+        src = {str(tmp_path / "src")!r}
+        spark.range(3).selectExpr(
+            "id AS event_id", "timestamp'2024-01-01' AS ts", "id AS user_id",
+            "'a' AS event_type",
+        ).write.parquet(src)
+        stream = spark.readStream.schema(
+            "event_id long, ts timestamp, user_id long, event_type string"
+        ).parquet(src)
+        try:
+            P.streaming_dedup_keep_first(stream)
+        except RuntimeError as e:
+            print("raised:", e)
+        else:
+            print("built")
+        spark.stop()
+        """
+    )
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    res = subprocess.run(
+        [sys.executable, "-c", prog], cwd=str(tmp_path), capture_output=True,
+        text=True, env=env, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    last = res.stdout.strip().splitlines()[-1]
+    assert last.startswith("raised:") and "get_spark" in last
